@@ -216,12 +216,6 @@ def utr30_normalizer() -> Normalizer2:
     return _instance(tuple(_SRC_ORDER))
 
 
-# internal: utr30-flavored staging instance used by tests to pin the
-# engine against the per-file data (NOT stock ICU nfc — see docstring)
-def _utr30_nfc_stage() -> Normalizer2:
-    return _instance(("nfc.txt",))
-
-
 def icu_fold(s: str) -> str:
     """ICUFoldingFilter semantics: utr30 compose-mode normalize
     (case folding + accent/default-ignorable removal + compatibility

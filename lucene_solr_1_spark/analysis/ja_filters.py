@@ -150,18 +150,3 @@ def iteration_mark_normalize(text: str, normalize_kanji: bool = True,
             continue
         out.append(c)
     return "".join(out)
-
-
-def ja_filters_df(df, text_col: str = "text", out_col: str = "normalized"):
-    """Spark surface: iteration-mark normalization of a string column
-    (char-filter stage, runs BEFORE tokenization like the reference)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-
-    # no type hints: PEP-563 string annotations break pyspark sniffing
-    @F.pandas_udf(StringType())
-    def _norm(s):
-        return s.map(lambda x: iteration_mark_normalize(x)
-                     if x is not None else None)
-
-    return df.withColumn(out_col, _norm(F.col(text_col)))

@@ -52,8 +52,6 @@ import os
 from bisect import bisect_right
 from functools import lru_cache
 
-import pandas as pd
-
 from .standard import MAX_TOKEN_LENGTH, TOKEN_RE
 
 __all__ = [
@@ -296,11 +294,3 @@ def thai_analyze(text: str, stopwords: frozenset | None = THAI_STOP_WORDS
     if stopwords:
         toks = [tk for tk in toks if tk not in stopwords]
     return toks
-
-
-def thai_analyze_series(texts: pd.Series,
-                        stopwords: frozenset | None = THAI_STOP_WORDS
-                        ) -> pd.Series:
-    """Arrow-batch entry point: Series[str] -> Series[list[str]].
-    Rows without Thai codepoints take the plain standard-chain path."""
-    return texts.fillna("").map(lambda s: thai_analyze(s, stopwords))

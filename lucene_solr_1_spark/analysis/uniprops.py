@@ -184,10 +184,6 @@ def script_of(cp: int) -> int:
     return scripts().script_of(cp)
 
 
-def script_name(script_id: int) -> str:
-    return scripts().names[script_id][0]
-
-
 def script_short_name(script_id: int) -> str:
     return scripts().names[script_id][1]
 

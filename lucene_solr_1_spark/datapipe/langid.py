@@ -366,23 +366,3 @@ def detect_languages(df: DataFrame, text_col: str = "text",
     return (df.select(F.col(id_col).cast("long").alias(id_col),
                       F.col(text_col).alias(text_col))
             .mapInPandas(run, schema=LANGID_SCHEMA))
-
-
-def detect_languages_loop(df: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id") -> DataFrame:
-    """Row-at-a-time mapInPandas twin of `detect_languages` — kept ONLY
-    as the parity/microbench reference (BENCH/langid_vectorize.json);
-    the Catalyst path above is the production one."""
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                lang, conf = detect_language(str(getattr(r, text_col)))
-                out.append((getattr(r, id_col), lang, conf))
-            yield pd.DataFrame(out, columns=["doc_id", "lang",
-                                             "confidence"])
-
-    return (df.select(F.col(id_col).alias(id_col),
-                      F.col(text_col).alias(text_col))
-            .mapInPandas(run, schema=LANGID_SCHEMA))

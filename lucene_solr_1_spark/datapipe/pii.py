@@ -49,16 +49,6 @@ def redact_expr(col: Column) -> Column:
     return out
 
 
-def count_expr(col: Column, name: str) -> Column:
-    """Occurrence count of one PII class in the ORIGINAL text.
-
-    Counted pre-redaction so per-class counts are independent of chain
-    order (overlaps between classes are possible and deliberate — this
-    is a detection tally, not a partition of the string)."""
-    pat = {n: p for n, p, _ in PII_PATTERNS}[name]
-    return F.size(F.regexp_extract_all(col, F.lit(pat), F.lit(0)))
-
-
 def redact_pii(df: DataFrame, text_col: str = "text",
                out_col: str = "redacted",
                with_counts: bool = True) -> DataFrame:

@@ -3,15 +3,16 @@ Lucene's write path (SURVEY.md §3.2).
 
 Stage 0  docid assignment (= IndexWriter's dense per-segment docIDs,
          ref: lucene/core .../index/AtomicReader.java docID model):
-         range-partition by url + within-partition sort + partition-count
-         offsets ⇒ docid == global lexicographic rank of url. The oracle
-         uses the same rule, so ids agree with zero coordination.
+         bucket = md5_60(url) mod N, docid = bucket << 44 | rank within
+         the bucket (docid_expr). The oracle uses the same rule, so ids
+         agree with zero coordination; NRT generations use it too.
 
 Stage 1  per-segment inversion + pack (= DocumentsWriterPerThread flush,
          ref: index/DocumentsWriterPerThread.java:58-80, FreqProxTerms-
          WriterPerField.java:166-216): one task per segment tokenizes,
          counts (term, docid) tfs, computes norms, FOR/varint-packs each
-         term's postings. Emits a per-segment checkpoint manifest with
+         term's postings (invert_docs — the path NRT micro-batches take
+         as well). Emits a per-segment checkpoint manifest with
          lineage + docs/sec metrics (north_rule); a segment whose
          manifest already exists is skipped on re-run (resumability).
 
@@ -40,11 +41,12 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (Column, DataFrame, SparkSession, Window,
+                         functions as F, types as T)
 
 from .. import fsio
 from ..analysis.htmlstrip import extract_text_series
-from ..analysis.standard import analyze_expr, analyze_flat
+from ..analysis.standard import analyze_expr
 from ..index.codec import (POSTINGS_FORMATS, decode_positions,
                            pack_positions_batch, pack_postings_batch,
                            unpack_postings)
@@ -118,11 +120,25 @@ def _success(path: str) -> bool:
 # ------------------------------------------------------------- stage 0
 
 BUCKET_SHIFT = 44  # docid = (bucket << 44) | rank-within-bucket
+# an NRT generation's sub-buckets start at multiples of 2^RUN_SHIFT
+# within its route bucket (docid = bucket << 44 | sub << 32 | rank)
+RUN_SHIFT = 32
 
 
 def url_hash60_expr():
     """JVM-side 60-bit url hash: first 15 hex chars of md5(url)."""
     return F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast("long")
+
+
+def docid_expr(high: Column, part: str, order: list[str]) -> Column:
+    """docid = `high` | dense 0-based rank of the row within `part`,
+    ordered by `order` — the one docid rule of base builds and NRT
+    generations. A JVM row_number over the exchange on `part`: no
+    single-partition step, and a pure function of the rows (the order
+    includes url), so a re-run or a replayed micro-batch gets the same
+    ids."""
+    win = Window.partitionBy(part).orderBy(*order)
+    return high.bitwiseOR((F.row_number().over(win) - 1).cast("long"))
 
 
 def assign_docids(spark: SparkSession, docs: DataFrame, out: IndexPaths,
@@ -172,21 +188,14 @@ def assign_docids(spark: SparkSession, docs: DataFrame, out: IndexPaths,
             .withColumn("h", url_hash60_expr())
             .withColumn("bucket", F.expr(f"pmod(h, {num_segments})").cast("int"))
             .repartition(num_segments, "bucket"))
-    order = (["bucket", "sort_key", "url"] if sort_col is not None
-             else ["bucket", "h", "url"])
+    order = ["sort_key", "url"] if sort_col is not None else ["h", "url"]
     # dense per-bucket rank as a JVM window over the SAME exchange the
-    # repartition already established (guide §2.4/§4: the former
-    # mapInPandas rank kernel shipped the whole corpus — url + every
-    # field column — through the Arrow boundary and back just to number
-    # rows; row_number() reuses the hash partitioning, sorts once, and
-    # stays in whole-stage codegen, so the text bytes never leave the JVM)
-    from pyspark.sql import Window
-    win = Window.partitionBy("bucket").orderBy(
-        *[F.col(c) for c in order if c != "bucket"])
+    # repartition already established: row_number() reuses the hash
+    # partitioning, sorts once, and stays in whole-stage codegen, so the
+    # text bytes never leave the JVM
     with_ids = part.select(
-        F.shiftleft(F.col("bucket").cast("long"), BUCKET_SHIFT)
-        .bitwiseOR((F.row_number().over(win) - 1).cast("long"))
-        .alias("docid"),
+        docid_expr(F.shiftleft(F.col("bucket").cast("long"), BUCKET_SHIFT),
+                   "bucket", order).alias("docid"),
         "url", *field_cols, *extra_cols)
     # plain write: per-file min/max docid stats give pushdown for
     # fetch-by-docid; files hold whole buckets (disjoint docid ranges)
@@ -198,86 +207,32 @@ def assign_docids(spark: SparkSession, docs: DataFrame, out: IndexPaths,
 
 # ------------------------------------------------------------- stage 1
 
-def _invert_rows(seg: int, docids: np.ndarray, texts: pd.Series) -> tuple[list, dict]:
-    """Invert from raw text (tokenizes in Python — oracle-twin path)."""
-    row_ids, flat_toks = analyze_flat(texts)
-    lens = np.bincount(row_ids, minlength=len(texts)).astype(np.int64)
-    return _invert_flat(seg, docids, flat_toks, lens)
-
-
-def _invert_token_arrays(seg: int, docids: np.ndarray, tok_arrays) -> tuple[list, dict]:
-    """Invert from pre-analyzed token arrays (the JVM-tokenized fast path)."""
-    lens = np.fromiter((len(t) for t in tok_arrays), dtype=np.int64,
-                       count=len(tok_arrays))
-    flat = (np.concatenate([np.asarray(t, dtype=object) for t in tok_arrays])
-            if lens.sum() else np.empty(0, object))
-    return _invert_flat(seg, docids, flat, lens)
-
-
-def _invert_flat(seg: int, docids: np.ndarray, flat_toks: np.ndarray,
-                 lens: np.ndarray) -> tuple[list, dict]:
-    """Invert from a flat token array (factorizes, then delegates)."""
-    if lens.sum() > 0:
-        codes, uniq_terms = pd.factorize(flat_toks, sort=True)
-    else:
-        codes, uniq_terms = np.empty(0, np.int64), np.empty(0, object)
-    return _invert_codes(seg, docids, codes, np.asarray(uniq_terms, object), lens)
-
-
-def _invert_codes(seg: int, docids: np.ndarray, codes: np.ndarray,
-                  uniq_terms: np.ndarray, lens: np.ndarray,
-                  positions: np.ndarray | None = None,
-                  pack_fn=pack_postings_batch) -> tuple[list, dict]:
-    """Invert one mini-segment (rows sorted by docid, disjoint range).
+def _invert_codes_arrow(seg: int, docids: np.ndarray, codes: np.ndarray,
+                        uniq_terms: np.ndarray, lens: np.ndarray,
+                        arrow_schema,
+                        positions: np.ndarray | None = None,
+                        pack_fn=pack_postings_batch):
+    """Invert one mini-segment (rows sorted by docid, disjoint range)
+    into one Arrow RecordBatch of POSTINGS_SCHEMA rows.
 
     Input is pre-factorized: `codes[i]` = term id of the i-th token in
     document order, `lens` = tokens per doc, optional `positions[i]` =
     within-doc token position (with stopword position increments, the
-    StopFilter contract). Returns (postings rows, metrics). Flat
-    (term_code, docid) -> tf via stable radix sort + run-length reduce —
-    the DWPT TermsHash analog (ref: index/
-    FreqProxTermsWriterPerField.java:166-216), no per-token Python.
+    StopFilter contract). Flat (term_code, docid) -> tf via stable radix
+    sort + run-length reduce — the DWPT TermsHash analog (ref: index/
+    FreqProxTermsWriterPerField.java:166-216), no per-token Python. The
+    batch is assembled from flat NumPy arrays + Arrow ListArrays, never
+    per-term Python tuples. Returns (RecordBatch|None, metrics).
     """
+    import pyarrow as pa
+
     t0 = time.time()
     norms = encode_norm(lens)
-    rows: list = []
+    batch = None
+    n_terms = 0
     total_postings = 0
+    total_bytes = 0
     if codes.size > 0:
-        core = _invert_core(docids, codes, lens, norms, positions, pack_fn)
-        (term_bounds, d_post, tf_all, packed, pos_blobs, ttfs, maxtfs,
-         c_post) = core
-        for i, tp in enumerate(packed):
-            total_postings += tp.n
-            rows.append((
-                str(uniq_terms[c_post[term_bounds[i]]]), seg,
-                int(d_post[term_bounds[i]]), tp.n, int(ttfs[i]),
-                int(maxtfs[i]), tp.blob,
-                tp.block_offset.tolist(), tp.block_first_docid.tolist(),
-                tp.block_n.tolist(), tp.block_max_tf.tolist(),
-                tp.block_min_len.tolist(),
-                pos_blobs[i] if pos_blobs is not None else None,
-                int(d_post[term_bounds[i + 1] - 1]),
-            ))
-    dur = time.time() - t0
-    metrics = {
-        "n_docs": int(len(lens)), "n_terms": len(rows),
-        "n_postings": int(total_postings), "sum_len": int(lens.sum()),
-        "min_docid": int(docids.min()) if len(docids) else -1,
-        "max_docid": int(docids.max()) if len(docids) else -1,
-        "duration_sec": dur,
-        "bytes": int(sum(len(r[6]) for r in rows)),
-    }
-    return rows, metrics
-
-
-def _invert_core(docids: np.ndarray, codes: np.ndarray, lens: np.ndarray,
-                 norms: np.ndarray, positions: np.ndarray | None,
-                 pack_fn):
-    """The shared inversion compute of _invert_codes/_invert_codes_arrow:
-    radix-sort the flat (term code, row) stream, run-length reduce to
-    postings, pack. Returns (term_bounds, d_post, tf_all, packed,
-    pos_blobs, ttfs, maxtfs, c_post)."""
-    if True:  # (kept indentation: body shared verbatim with pre-r6 code)
         codes = codes.astype(np.int32, copy=False)
         row_ids = np.repeat(np.arange(len(lens), dtype=np.int32), lens)
         # tokens arrive in document order, so ONE stable argsort on the
@@ -290,45 +245,16 @@ def _invert_core(docids: np.ndarray, codes: np.ndarray, lens: np.ndarray,
         tf_all = np.diff(np.append(starts, len(c_s))).astype(np.int64)
         c_post, r_post = c_s[starts], r_s[starts]
         d_post = docids[r_post]
-        n_post = norms[r_post]
         term_bounds = np.concatenate(
             (np.flatnonzero(np.concatenate(([True], c_post[1:] != c_post[:-1]))),
              [len(c_post)]))
-        packed = pack_fn(term_bounds, d_post, tf_all, n_post)
+        packed = pack_fn(term_bounds, d_post, tf_all, norms[r_post])
         pos_blobs = None
         if positions is not None:
             # stable sort keeps in-posting occurrence (= position) order
             pos_blobs = pack_positions_batch(term_bounds, tf_all, positions[order])
         ttfs = np.add.reduceat(tf_all, term_bounds[:-1])
         maxtfs = np.maximum.reduceat(tf_all, term_bounds[:-1])
-    return (term_bounds, d_post, tf_all, packed, pos_blobs, ttfs, maxtfs,
-            c_post)
-
-
-def _invert_codes_arrow(seg: int, docids: np.ndarray, codes: np.ndarray,
-                        uniq_terms: np.ndarray, lens: np.ndarray,
-                        arrow_schema,
-                        positions: np.ndarray | None = None,
-                        pack_fn=pack_postings_batch):
-    """_invert_codes with a COLUMNAR Arrow emit (r6, guide §4.2): the
-    same inversion compute, but the output RecordBatch is assembled
-    from flat NumPy arrays + Arrow ListArrays instead of ~n_terms
-    Python tuples (each with 5 .tolist() ragged fields) run through a
-    pandas DataFrame — the tuple/DataFrame conversion was a measurable
-    slice of the per-task build cost. Returns (RecordBatch|None, metrics).
-    """
-    import pyarrow as pa
-
-    t0 = time.time()
-    norms = encode_norm(lens)
-    batch = None
-    n_terms = 0
-    total_postings = 0
-    total_bytes = 0
-    if codes.size > 0:
-        (term_bounds, d_post, tf_all, packed, pos_blobs, ttfs, maxtfs,
-         c_post) = _invert_core(docids, codes, lens, norms, positions,
-                                pack_fn)
         n_terms = len(packed)
         blobs = [tp.blob for tp in packed]
         total_bytes = sum(len(b) for b in blobs)
@@ -380,24 +306,24 @@ def _invert_codes_arrow(seg: int, docids: np.ndarray, codes: np.ndarray,
     return batch, metrics
 
 
-def _make_invert_stream(file_to_seg: dict[str, int], positions: bool = False,
+def _make_invert_stream(positions: bool = False,
                         miniseg_docs: int = 16384, term_prefix: str = "",
                         metrics_term: str = "\x00metrics",
                         pack_fn=pack_postings_batch):
-    """Streaming inversion over RAW Arrow batches (mapInArrow) — NO
-    shuffle: the docs table's files are the segments (each file = one
-    sorted, disjoint docid range = one DWPT flush). Incoming batches are
-    buffered per file until ~miniseg_docs rows, then inverted as one
-    mini-segment (docids stay globally ordered; the merge re-concatenates
-    by first_docid). Larger mini-segments = fewer (term, seg) rows into
-    the merge shuffle — the RAM-buffer-size lever of
-    FlushByRamOrCountsPolicy (IndexWriterConfig.java:89).
+    """Streaming inversion over RAW Arrow batches of (seg, docid, tokens)
+    rows (mapInArrow) — NO shuffle: each input task reads docid-sorted
+    runs of one segment (a base docs-table file, or an NRT generation).
+    Incoming rows are buffered per segment until ~miniseg_docs rows, then
+    inverted as one mini-segment (docids stay globally ordered; the merge
+    re-concatenates by first_docid). Larger mini-segments = fewer
+    (term, seg) rows into the merge shuffle — the RAM-buffer-size lever
+    of FlushByRamOrCountsPolicy (IndexWriterConfig.java:89).
 
     Arrow-native hot path: the tokens list<string> column is flattened
     via its offsets (zero per-row Python lists) and factorized with
     Arrow's C dictionary_encode; only term-row emission touches Python
-    objects. Per-file metrics accumulate across batches and are emitted
-    as sentinel rows for the checkpoint manifests."""
+    objects. Per-segment metrics accumulate across batches and are
+    emitted as sentinel rows for the checkpoint manifests."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -410,19 +336,19 @@ def _make_invert_stream(file_to_seg: dict[str, int], positions: bool = False,
 
     def invert_stream(batches):
         acc: dict[int, dict] = {}
-        buf = {"seg": None, "rb": None, "docids": [], "lens": [],
-               "flat": [], "n": 0}
+        buf = {"key": None, "run": None, "docids": [], "lens": [], "flat": [],
+               "n": 0}
 
         def flush():
             if not buf["n"]:
                 return None
-            seg = buf["seg"]
+            seg = buf["key"][0]
             docids = np.concatenate(buf["docids"])
             lens = np.concatenate(buf["lens"])
             flat = (pa.concat_arrays([a.combine_chunks() if hasattr(a, "combine_chunks")
                                       else a for a in buf["flat"]])
                     if buf["flat"] else pa.array([], type=pa.string()))
-            buf.update(seg=None, rb=None, docids=[], lens=[], flat=[], n=0)
+            buf.update(key=None, run=None, docids=[], lens=[], flat=[], n=0)
             denc = pc.dictionary_encode(flat)
             codes = denc.indices.to_numpy().astype(np.int32, copy=False)
             uniq = np.asarray(denc.dictionary.to_pandas(), dtype=object)
@@ -474,43 +400,40 @@ def _make_invert_stream(file_to_seg: dict[str, int], positions: bool = False,
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            srcs = batch.column("src")
+            segs = batch.column("seg").to_numpy()
             docids_all = batch.column("docid").to_numpy()
             toks_col = batch.column("tokens")
             lens_all = pc.list_value_length(toks_col).to_numpy().astype(np.int64)
-            src_codes = pc.dictionary_encode(srcs).indices.to_numpy()
-            s_bounds = np.concatenate(
-                (np.flatnonzero(np.concatenate(([True], src_codes[1:] != src_codes[:-1]))),
-                 [len(src_codes)]))
-            for gi in range(len(s_bounds) - 1):
-                lo, hi = int(s_bounds[gi]), int(s_bounds[gi + 1])
-                seg = file_to_seg[os.path.basename(str(srcs[lo]))]
-                # also split mini-segments at docid ROUTE-bucket
-                # boundaries (docid >> BUCKET_SHIFT): the merge's salted
-                # head-term buckets are derived from the route bucket, so
-                # a (term, seg) row must never straddle one — this keeps
-                # per-term salt buckets' docid ranges disjoint (the
-                # CheckIndex invariant) at any df. Files are docid-sorted,
-                # so boundaries are contiguous; almost every slice has
-                # zero of them (one vectorized compare per batch).
-                rbs = docids_all[lo:hi] >> BUCKET_SHIFT
-                cuts = np.flatnonzero(rbs[1:] != rbs[:-1]) + 1
-                subs = np.concatenate(([0], cuts, [hi - lo]))
-                for si in range(len(subs) - 1):
-                    slo, shi = lo + int(subs[si]), lo + int(subs[si + 1])
-                    rb = int(rbs[int(subs[si])])
-                    if buf["seg"] is not None and (buf["seg"] != seg
-                                                   or buf["n"] >= miniseg_docs
-                                                   or buf["rb"] != rb):
-                        out = flush()
-                        if out is not None:
-                            yield out
-                    buf["seg"] = seg
-                    buf["rb"] = rb
-                    buf["docids"].append(docids_all[slo:shi])
-                    buf["lens"].append(lens_all[slo:shi])
-                    buf["flat"].append(toks_col.slice(slo, shi - slo).flatten())
-                    buf["n"] += shi - slo
+            # mini-segments split where the segment or the docid ROUTE
+            # bucket (docid >> BUCKET_SHIFT) changes — the merge's salted
+            # head-term buckets derive from the route bucket — and where
+            # the docid run (docid >> RUN_SHIFT) jumps by more than one:
+            # another task may hold the runs in between (an NRT
+            # generation's sub-buckets spread over tasks). So a term's
+            # rows keep disjoint docid ranges (the CheckIndex invariant,
+            # and the merge's block-copy precondition) at any df. Rows
+            # are docid-sorted within a run, so boundaries are
+            # contiguous; almost every batch has none.
+            rbs = docids_all >> BUCKET_SHIFT
+            runs = docids_all >> RUN_SHIFT
+            step = runs[1:] - runs[:-1]
+            cuts = np.flatnonzero((segs[1:] != segs[:-1]) | (rbs[1:] != rbs[:-1])
+                                  | ((step != 0) & (step != 1))) + 1
+            bounds = np.concatenate(([0], cuts, [batch.num_rows]))
+            for lo, hi in zip(bounds[:-1].tolist(), bounds[1:].tolist()):
+                key = (int(segs[lo]), int(rbs[lo]))
+                if buf["key"] is not None and (buf["key"] != key
+                                               or int(runs[lo]) - buf["run"] not in (0, 1)
+                                               or buf["n"] >= miniseg_docs):
+                    out = flush()
+                    if out is not None:
+                        yield out
+                buf["key"] = key
+                buf["run"] = int(runs[hi - 1])
+                buf["docids"].append(docids_all[lo:hi])
+                buf["lens"].append(lens_all[lo:hi])
+                buf["flat"].append(toks_col.slice(lo, hi - lo).flatten())
+                buf["n"] += hi - lo
         out = flush()
         if out is not None:
             yield out
@@ -523,6 +446,38 @@ def _make_invert_stream(file_to_seg: dict[str, int], positions: bool = False,
                 preserve_index=False)
 
     return invert_stream
+
+
+def _metrics_term(field: str | None) -> str:
+    return "\x00metrics" if field is None else f"\x00metrics{FIELD_SEP}{field}"
+
+
+def invert_docs(docs: DataFrame, seg: Column, positions: bool = False,
+                field: str | None = None, analyzer=None,
+                postings_format: str = "lucene41") -> DataFrame:
+    """Stage 1 over a docs-table DataFrame (docid + the field column):
+    the one inversion path of base builds (build_segments) and NRT
+    generations (StreamingIndexWriter.process_batch). `seg` is the
+    segment id column; rows must arrive docid-sorted within each
+    segment run, as the docs tables are written.
+
+    The field is analyzed JVM-side (analyze_expr, or `analyzer(col)` —
+    a fn(col_name) -> array<string> Column), inverted by the Arrow
+    kernel. Without positions the stopwords are dropped by the analyzer;
+    with positions they are dropped after numbering, so they still
+    advance positions. Output: POSTINGS_SCHEMA rows keyed by bare term
+    (field=None) or "<field>\\x1f<term>", plus per-segment metric
+    sentinel rows (term _metrics_term(field))."""
+    col = field or "text"
+    tokens = (analyzer(col) if analyzer is not None
+              else analyze_expr(col, stop_filter=not positions))
+    return (docs.select(seg.alias("seg"), "docid", tokens.alias("tokens"))
+            .mapInArrow(_make_invert_stream(
+                positions=positions,
+                term_prefix="" if field is None else field + FIELD_SEP,
+                metrics_term=_metrics_term(field),
+                pack_fn=POSTINGS_FORMATS[postings_format]),
+                schema=POSTINGS_SCHEMA))
 
 
 def list_doc_files(out: IndexPaths) -> list[str]:
@@ -538,7 +493,8 @@ def build_segments(spark: SparkSession, out: IndexPaths,
                    analyzers: dict | None = None) -> None:
     """Stage 1, resumable at (field, file) granularity: docs-table files
     missing a checkpoint manifest are (re)processed; manifests carry
-    lineage (the exact input file) + docs/sec (north_rule).
+    lineage (the exact input file) + docs/sec (north_rule). Each docs
+    file is one segment: seg = the file's index in list_doc_files.
 
     fields=None: single-field v1 layout (bare term keys, checkpoint
     seg_{i}.json). fields=[...]: one inversion pass per field over its
@@ -555,6 +511,9 @@ def build_segments(spark: SparkSession, out: IndexPaths,
     fsio.makedirs(out.checkpoints)
     all_files = list_doc_files(out)
     file_to_seg = {f: i for i, f in enumerate(all_files)}
+    seg_of_file = F.create_map(*[F.lit(x) for f, i in file_to_seg.items()
+                                 for x in (f, i)])[
+        F.substring_index(F.input_file_name(), "/", -1)]
     ckpts = {f for f in fsio.listdir(out.checkpoints)
              if f.startswith("seg_") and f.endswith(".json")}
     fresh = not ckpts
@@ -565,20 +524,11 @@ def build_segments(spark: SparkSession, out: IndexPaths,
         missing = [f for f in all_files if str(file_to_seg[f]) not in done]
         if not missing:
             continue
-        col = fld if fld is not None else "text"
-        metrics_term = "\x00metrics" if fld is None else f"\x00metrics{FIELD_SEP}{fld}"
-        custom = (analyzers or {}).get(col)
-        tokens_col = (custom(col) if custom is not None
-                      else analyze_expr(col, stop_filter=not positions))
-        docs = (spark.read.parquet(*[os.path.join(out.docs, f) for f in missing])
-                .withColumn("src", F.input_file_name())
-                .select("src", "docid", tokens_col.alias("tokens")))
-        packed = docs.mapInArrow(
-            _make_invert_stream(file_to_seg, positions=positions,
-                                term_prefix="" if fld is None else fld + FIELD_SEP,
-                                metrics_term=metrics_term,
-                                pack_fn=POSTINGS_FORMATS[postings_format]),
-            schema=POSTINGS_SCHEMA)
+        metrics_term = _metrics_term(fld)
+        docs = spark.read.parquet(*[os.path.join(out.docs, f) for f in missing])
+        packed = invert_docs(docs, seg_of_file, positions=positions, field=fld,
+                             analyzer=(analyzers or {}).get(fld or "text"),
+                             postings_format=postings_format)
         packed.write.mode("overwrite" if fresh else "append").parquet(out.segments)
         fresh = False
         # manifests: aggregate sentinel metric rows (a file read split across
@@ -636,7 +586,11 @@ def _merge_group_block(pdf: pd.DataFrame,
     (tests/test_spark_index.py decodes round-trip). This is the
     postings analog of Lucene's bulk segment-merge block copy. Groups
     that fail the disjointness probe (arbitrary merge_postings_df
-    inputs) fall back to decode + batch re-pack."""
+    inputs) fall back to decode + batch re-pack.
+
+    A multi-row group must be uniformly positional or not: a group that
+    mixes null and non-null pos_blob raises ValueError, since joining
+    only the non-null blobs would shift positions onto other postings."""
     keys = (pdf["term"].astype(str) + "\x1f" + pdf["bucket"].astype(str)).to_numpy()
     new = np.concatenate(([True], keys[1:] != keys[:-1]))
     gstarts = np.flatnonzero(new)
@@ -644,8 +598,9 @@ def _merge_group_block(pdf: pd.DataFrame,
 
     out_rows = []
     multi_d, multi_t, multi_n, multi_pb, multi_meta = [], [], [], [], []
+    multi_pos: list[bool] = []
     blobs = pdf["blob"].to_numpy(object)
-    has_pos = "pos_blob" in pdf.columns and pdf["pos_blob"].notna().any()
+    pos_present = pdf["pos_blob"].notna().to_numpy()
     cols = {c: pdf[c].to_numpy(object) for c in
             ("term", "bucket", "first_docid", "df", "ttf", "max_tf", "block_offset",
              "block_first_docid", "block_n", "block_max_tf", "block_min_len",
@@ -666,6 +621,13 @@ def _merge_group_block(pdf: pd.DataFrame,
                              int(cols["last_docid"][lo])))
             continue
         rng = range(lo, lo + sz)
+        g_pos = pos_present[lo:lo + sz]
+        if g_pos.any() and not g_pos.all():
+            raise ValueError(
+                f"postings group (term={cols['term'][lo]!r}, "
+                f"bucket={int(cols['bucket'][lo])}) mixes rows with and "
+                "without positions; merge inputs must share one positions "
+                "setting")
         g_first = np.fromiter((cols["first_docid"][r] for r in rng),
                               np.int64, sz)
         g_last = np.fromiter((cols["last_docid"][r] for r in rng),
@@ -688,12 +650,8 @@ def _merge_group_block(pdf: pd.DataFrame,
                 bn.extend(int(x) for x in cols["block_n"][r])
                 bmt.extend(int(x) for x in cols["block_max_tf"][r])
                 bml.extend(float(x) for x in cols["block_min_len"][r])
-            if has_pos:
-                pb = [cols["pos_blob"][r] for r in rng]
-                pos_blob = (b"".join(bytes(x) for x in pb if x is not None)
-                            or None) if any(x is not None for x in pb) else None
-            else:
-                pos_blob = None
+            pos_blob = (b"".join(bytes(cols["pos_blob"][r]) for r in rng)
+                        if g_pos[0] else None)
             out_rows.append((cols["term"][lo], int(cols["bucket"][lo]),
                              int(g_first[0]),
                              int(sum(cols["df"][r] for r in rng)),
@@ -712,6 +670,7 @@ def _merge_group_block(pdf: pd.DataFrame,
             multi_d.append(d); multi_t.append(t); multi_n.append(nb)
             multi_pb.append(cols["pos_blob"][r])
         multi_meta.append((cols["term"][lo], int(cols["bucket"][lo])))
+        multi_pos.append(bool(g_pos[0]))
     if multi_meta:
         d = np.concatenate(multi_d); t = np.concatenate(multi_t)
         nb = np.concatenate(multi_n)
@@ -735,13 +694,13 @@ def _merge_group_block(pdf: pd.DataFrame,
         for i, tp in enumerate(packed):
             lo, hi = gbounds[i], gbounds[i + 1]
             pos_blob = None
-            if has_pos:
+            if multi_pos[i]:
                 # position deltas reset at every posting, so merged blob =
                 # byte concat of row blobs — unless the group was reordered
                 row_lo, row_hi = int(rb[i]), int(rb[i + 1])
                 if i not in perms:
-                    pos_blob = b"".join(bytes(multi_pb[r]) for r in range(row_lo, row_hi)
-                                        if multi_pb[r] is not None)
+                    pos_blob = b"".join(bytes(multi_pb[r])
+                                        for r in range(row_lo, row_hi))
                 else:
                     flats = [decode_positions(bytes(multi_pb[r]), multi_t[r])[0]
                              for r in range(row_lo, row_hi)]
@@ -939,7 +898,9 @@ def build_index(spark: SparkSession, docs: DataFrame, root: str,
                 sort_by: str | None = None) -> IndexPaths:
     """Full build: resumable; re-running with complete checkpoints is a
     no-op. positions=True also stores per-posting token positions
-    (the .pos file analog) enabling phrase/span queries.
+    (the .pos file analog) enabling phrase/span queries; stats.json
+    records it, and NRT generations follow it. The stage-1 segments
+    table is removed once the commit point is written.
 
     sort_by: index sorting (SortingMergePolicy, lucene/misc/.../sorter/
     SortingMergePolicy.java:57) — per-segment docid order follows the
@@ -967,7 +928,11 @@ def build_index(spark: SparkSession, docs: DataFrame, root: str,
                    postings_format=postings_format)
     stats = write_stats(spark, out, fields=fields,
                         postings_format=postings_format,
-                        extra=({"num_segments": num_segments}
+                        extra=({"num_segments": num_segments,
+                                "positions": positions}
                                | ({"index_sort": sort_by} if sort_by else {})))
     write_commit_point(out, stats)
+    # the committed postings + termstats supersede the stage-1 segments
+    # table; the _checkpoints manifests keep a re-run a no-op without it
+    fsio.rmtree(out.segments, ignore_errors=True)
     return out

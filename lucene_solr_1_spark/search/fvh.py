@@ -307,12 +307,6 @@ def whitespace_positions(content: str):
             for i, m in enumerate(_WS_RE.finditer(content))]
 
 
-def standard_positions(content: str):
-    from ..analysis.standard import analyze_with_offsets
-    terms, pos, starts, ends = analyze_with_offsets(content)
-    return list(zip(terms, starts, ends, pos))
-
-
 def fvh_highlight(content: str, queries, frag_char_size: int = 100,
                   max_num_fragments: int = 1,
                   tokenizer=whitespace_positions,

@@ -94,8 +94,6 @@ def _positional_piv(searcher, tidx: dict[str, int], required_idx: list[int]):
     """Per-doc pivot of decoded position lists: DataFrame(docid, norm,
     p0..pn array<int>), null where the doc lacks the term; rows missing
     any `required_idx` column are dropped. Shared by phrase/span kernels."""
-    spark = searcher.spark
-
     def emit(batches):
         for pdf in batches:
             outs = []
@@ -115,10 +113,14 @@ def _positional_piv(searcher, tidx: dict[str, int], required_idx: list[int]):
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    matched = (spark.read.parquet(searcher.paths.postings)
-               .filter(F.col("term").isin(list(tidx))))
+    # the searcher's own view (NRT generations when include_nrt) minus
+    # its tombstoned docs, exactly as search() reads it
+    matched = searcher._read_postings().filter(F.col("term").isin(list(tidx)))
     cand_schema = "docid long, tidx int, norm int, positions array<int>"
     cands = matched.mapInPandas(emit, schema=cand_schema)
+    excl = searcher._excluded_docids()
+    if excl is not None:
+        cands = cands.join(excl, "docid", "left_anti")
     # ignorenulls=True is REQUIRED: each (docid, tidx) has exactly one
     # row, so "the non-null value" is well-defined; plain first() keeps
     # whichever row the partial-aggregate saw first (null for other

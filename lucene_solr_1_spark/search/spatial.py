@@ -154,13 +154,6 @@ def _balanced_or(conds: list[Column]) -> Column:
     return conds[0]
 
 
-def _cover_pred(cover: list[tuple[str, bool]], level: int) -> Column | None:
-    if not cover:
-        return None
-    return _balanced_or([F.col("token").between(a, b)
-                         for a, b in merged_intervals(cover, level)])
-
-
 def _adaptive_cover(lat_min, lat_max, lon_min, lon_max, level: int,
                     max_ranges: int = 64) -> list[tuple[str, str]]:
     """Pick the deepest cover whose MERGED range count stays small —

@@ -195,20 +195,3 @@ def pair_distance_udf(metric: str, n: int = 2) -> "Column":
                           for a, b in zip(s1, s2)])
 
     return _dist
-
-
-def rerank_suggestions(searcher, word: str, metric: str = "jarowinkler",
-                       max_edits: int = 2, n: int = 5, min_df: int = 1):
-    """SpellChecker.suggestSimilar with a pluggable StringDistance
-    (ref: spell/SpellChecker.java: setStringDistance + suggestSimilar
-    ranks by sd.getDistance desc): candidates pre-filter by levenshtein
-    <= max_edits (parquet-prunable JVM expr), then re-rank by the
-    chosen metric (distance desc, df desc, term asc)."""
-    w = word.lower()
-    ts = searcher.spark.read.parquet(searcher.paths.termstats)
-    lev = F.levenshtein(F.col("term"), F.lit(w))
-    cand = ts.filter((lev <= max_edits) & (F.col("df") >= min_df))
-    scored = cand.withColumn(
-        "distance", F.round(distance_udf(w, metric)(F.col("term")), 6))
-    return (scored.orderBy(F.desc("distance"), F.desc("df"), F.asc("term"))
-            .select("term", "distance", "df").limit(n))
