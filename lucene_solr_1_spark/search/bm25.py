@@ -58,6 +58,11 @@ class TermWeight:
     cache: np.ndarray                  # float dtype[256]
     max_score: np.floating             # upper bound over any posting (WAND)
 
+    def score(self, tfs: np.ndarray, norms: np.ndarray) -> np.ndarray:
+        """score_postings in the weight's own dtype: the same call as a
+        pluggable similarity's _SimWeight.score."""
+        return score_postings(self, tfs, norms, dtype=self.cache.dtype.type)
+
 
 def make_weight(term: str, df: int, max_doc: int, avgdl, max_tf: int | None = None,
                 dtype=np.float32) -> TermWeight:

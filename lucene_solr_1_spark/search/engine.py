@@ -8,9 +8,16 @@ The Spark re-expression of Lucene's read path (SURVEY.md §3.1):
                            broadcast into the scoring UDF closure
                            (ref: search/TermQuery.java:161,
                             similarities/BM25Similarity.java:207-211)
-  Weight.scorer/score   -> mapInPandas over the matching postings rows:
-                           vectorized decode + BM25 (float32)
-                           (ref: search/TermScorer.java:69-71)
+  Weight.scorer/score   -> ONE postings scan for every query
+                           (IndexSearcher._scored_candidates): the
+                           searcher's view (base, or base + NRT
+                           generations) term-filtered, each Arrow batch
+                           decoded + BM25-scored (float32) by
+                           score_postings_batch under mapInArrow, then
+                           the tombstoned docs anti-joined — live docs
+                           applied in the scan itself, as acceptDocs are
+                           in TermsEnum.docs (ref: search/TermScorer.java:69-71,
+                           search/Weight.java scorer(..., acceptDocs))
   Boolean combination   -> per-doc combine via pivot on term index +
                            left-to-right float32 adds — the same
                            association order as the oracle's scatter-add
@@ -38,8 +45,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from .. import fsio
 from ..analysis.standard import analyze_text
 from ..index.build import IndexPaths
-from ..index.codec import unpack_postings
-from .bm25 import K1, avg_field_length, make_weight, score_postings
+from ..index.codec import decode_positions, unpack_postings
+from .bm25 import K1, avg_field_length, make_weight
 from .similarities import get_similarity
 
 
@@ -195,6 +202,84 @@ class BooleanQuery:
             raise ValueError("maxClauseCount is set to 1024")  # BooleanQuery.java:40
 
 
+def _scan_schema(dtype, extra=()) -> T.StructType:
+    """Output of the postings scan: docid, tidx, score, then the
+    requested ``extra`` columns in their fixed order."""
+    optional = {"tf": T.IntegerType(), "norm": T.IntegerType(),
+                "positions": T.ArrayType(T.IntegerType())}
+    return T.StructType(
+        [T.StructField("docid", T.LongType()),
+         T.StructField("tidx", T.IntegerType()),
+         T.StructField("score", T.FloatType() if dtype == np.float32
+                       else T.DoubleType())]
+        + [T.StructField(c, optional[c]) for c in optional if c in extra])
+
+
+def score_postings_batch(batch, weights: dict, dtype=np.float32, extra=()):
+    """Decode and score one Arrow batch of postings rows: the kernel of
+    the postings scan (Arrow RecordBatch in, RecordBatch out; mapInArrow
+    wraps it, as it wraps _invert_codes_arrow for builds).
+
+    ``weights``: term -> (tidx, weight), where weight.score(tf, norm) is
+    BM25's TermWeight or a pluggable _SimWeight. The kernel branches
+    only on its input:
+      * an optional ``skip`` column (list<int>, null = none): block
+        indices of the row that are not decoded (block-max WAND);
+      * ``extra``: the tf / norm / positions columns to emit.
+    Positions need every block's tf, so they do not combine with skip."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def lists(name):
+        arr = batch.column(name)
+        off = arr.offsets.to_numpy()
+        vals = arr.values.to_numpy(zero_copy_only=False)
+        return [vals[off[i]:off[i + 1]] for i in range(len(arr))]
+
+    boff, bfd, bn = (lists(c) for c in
+                     ("block_offset", "block_first_docid", "block_n"))
+    blobs = batch.column("blob")
+    skips = (batch.column("skip").to_pylist()
+             if "skip" in batch.schema.names else None)
+    pos_blobs = batch.column("pos_blob") if "positions" in extra else None
+    docid, tidx, score, tfs, norms, pos = [], [], [], [], [], []
+    for i, term in enumerate(batch.column("term").to_pylist()):
+        ti, w = weights[term]
+        offs, fds, ns = boff[i], bfd[i], bn[i]
+        if skips is not None and skips[i]:
+            keep = np.setdiff1d(np.arange(len(ns)), skips[i])
+            offs, fds, ns = offs[keep], fds[keep], ns[keep]
+        d, tf, nb = unpack_postings(blobs[i].as_buffer(), offs, fds, ns)
+        if pos_blobs is not None:
+            pb = pos_blobs[i].as_py()
+            if pb is None:
+                raise ValueError("index was built without positions=True")
+            pos.append(decode_positions(pb, tf)[0])
+        docid.append(d)
+        tidx.append(np.full(len(d), ti, np.int32))
+        score.append(w.score(tf, nb))
+        tfs.append(tf)
+        norms.append(nb)
+
+    def flat(parts, dt):
+        return (np.concatenate(parts) if parts
+                else np.empty(0, dt)).astype(dt, copy=False)
+
+    tf_all = flat(tfs, np.int32)
+    cols = {"docid": pa.array(flat(docid, np.int64)),
+            "tidx": pa.array(flat(tidx, np.int32)),
+            "score": pa.array(flat(score, dtype)),
+            "tf": pa.array(tf_all),
+            "norm": pa.array(flat(norms, np.int32))}
+    if pos_blobs is not None:
+        bounds = np.concatenate(([0], np.cumsum(tf_all))).astype(np.int32)
+        cols["positions"] = pa.ListArray.from_arrays(
+            pa.array(bounds), pa.array(flat(pos, np.int32)))
+    schema = to_arrow_schema(_scan_schema(dtype, extra))
+    return pa.RecordBatch.from_arrays([cols[n] for n in schema.names],
+                                      schema=schema)
+
+
 class IndexSearcher:
     """Point-in-time reader + searcher over a built index directory."""
 
@@ -226,8 +311,6 @@ class IndexSearcher:
         else:
             self.default_field = None
         self._ts_cache: pd.DataFrame | None = None
-        self._has_tombstones = fsio.exists(
-            os.path.join(root, "tombstones"))
         if include_nrt:
             nrt_docs = os.path.join(root, "nrt", "docs")
             if fsio.exists(nrt_docs):
@@ -365,46 +448,52 @@ class IndexSearcher:
 
     # -- scoring scan ------------------------------------------------------
     def _scored_candidates(self, terms: list[str], dtype=np.float32,
-                           similarity=None, boosts: dict | None = None) -> DataFrame:
-        """DataFrame(docid, tidx, score): decode+score matching postings.
+                           similarity=None, boosts: dict | None = None,
+                           extra: tuple = (), where=None,
+                           skip=None) -> DataFrame:
+        """The postings scan every query runs: DataFrame(docid, tidx,
+        score[, tf, norm, positions]) over the searcher's view, deleted
+        docs dropped. ``tidx`` is the term's index in ``terms``.
 
-        Term filter is pushed into the parquet scan of the term-sorted
-        postings table (min/max row-group pruning = the .tip term index).
-        """
+        The term filter (ANDed with the Column ``where``, if given) is
+        pushed into the parquet scan of the term-sorted postings table
+        (min/max row-group pruning = the .tip term index). ``extra``
+        names the per-posting columns to add. ``skip`` gives each
+        postings row the block indices not to decode: an array<int>
+        Column over the row, or a DataFrame(term, first_docid, skip)
+        joined to it (rows it lacks decode whole). Tombstoned
+        docs are anti-joined here, so no query can see them (Lucene's
+        acceptDocs, handed to every postings enum)."""
         if similarity is None:
             weights = self._weights(terms, dtype=dtype, boosts=boosts)
         else:
             weights = self._sim_weights(terms, similarity, dtype=dtype)
-        spark_t = T.FloatType() if dtype == np.float32 else T.DoubleType()
-        schema = T.StructType([
-            T.StructField("docid", T.LongType()),
-            T.StructField("tidx", T.IntegerType()),
-            T.StructField("score", spark_t),
-        ])
+        schema = _scan_schema(dtype, extra)
         if not weights:
             return self.spark.createDataFrame([], schema)
-        matched = self._read_postings().filter(F.col("term").isin(list(weights)))
+        cond = F.col("term").isin(list(weights))
+        rows = self._read_postings().filter(
+            cond if where is None else cond & where)
+        if isinstance(skip, DataFrame):
+            rows = rows.join(skip, ["term", "first_docid"], "left")
+        elif skip is not None:
+            rows = rows.withColumn("skip", skip)
+        rows = rows.select(
+            "term", "blob", "block_offset", "block_first_docid", "block_n",
+            *(["pos_blob"] if "positions" in extra else []),
+            *(["skip"] if skip is not None else []))
 
-        def score_rows(batches):
-            for pdf in batches:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    tidx, tw = weights[r.term]
-                    d, tf, nb = unpack_postings(
-                        np.frombuffer(r.blob, np.uint8),
-                        np.asarray(r.block_offset, np.int64),
-                        np.asarray(r.block_first_docid, np.int64),
-                        np.asarray(r.block_n, np.int64))
-                    if hasattr(tw, "cache"):          # BM25 TermWeight
-                        s = score_postings(tw, tf, nb, dtype=dtype)
-                    else:                              # pluggable _SimWeight
-                        s = tw.score(tf, nb)
-                    outs.append(pd.DataFrame({"docid": d, "tidx": np.int32(tidx),
-                                              "score": s}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+        def scan(batches):
+            for b in batches:
+                out = score_postings_batch(b, weights, dtype, extra)
+                if out.num_rows:
+                    yield out
 
-        return matched.mapInPandas(score_rows, schema=schema)
+        cands = rows.mapInArrow(scan, schema=schema)
+        excl = self._excluded_docids()
+        if excl is not None:
+            cands = cands.join(excl, "docid", "left_anti")
+        return cands
 
     def search(self, query: BooleanQuery | str | list[str], op: str = "OR",
                k: int | None = None, dtype=np.float32,
@@ -456,13 +545,13 @@ class IndexSearcher:
                 "docid", "score", F.lit(1).cast("long").alias("rank")).limit(0)
 
         if (nclauses == 1 and nterms == 1 and not q.must_not and not neg_phr
-                and not self.include_nrt and not self._has_tombstones
                 and after is None and q.min_should_match <= 1):
             # (msm > 1 with one should-term matches nothing; the general
             # path below handles that — don't take the fast path)
-            # single-term fast path: one postings row per (term, bucket)
-            # and bucket rows hold disjoint docid ranges, so docids are
-            # already unique — no combine shuffle at all; the plan is
+            # single-term fast path: a term's postings rows hold disjoint
+            # docid ranges (base buckets and NRT generations alike) and
+            # the scan already dropped deleted docs, so docids are unique
+            # — no combine shuffle at all; the plan is
             # scan → score → TakeOrderedAndProject (TermScorer straight
             # into TopScoreDocCollector, TermQuery.java:40)
             return topk_with_rank(apply_filter(cands), q.k)
@@ -531,9 +620,6 @@ class IndexSearcher:
             negp = phrase_scores(self, list(p.terms), slop=p.slop,
                                  dtype=dtype).select("docid")
             scored = scored.join(negp, "docid", "left_anti")
-        excl = self._excluded_docids()
-        if excl is not None:
-            scored = scored.join(excl, "docid", "left_anti")  # live-docs bitset
         if after is not None:
             # searchAfter paging (TopScoreDocCollector.java:139-151): only
             # hits strictly after the (score desc, docid asc) cursor
@@ -555,7 +641,7 @@ class IndexSearcher:
                     force: bool = False) -> DataFrame:
         """Block-max WAND OR top-k (see search/wand.py): exact results,
         block decode skipped where upper bounds can't reach θ.
-        stats={} receives blocks_total/blocks_kept accumulators.
+        stats={} receives the exact blocks_total/blocks_kept counts.
         Cost-based dispatch: under WAND_MIN_POSTINGS total candidate
         postings the exact disjunction plan runs instead (same results,
         fewer jobs); force=True always takes the WAND path (tests,
@@ -605,9 +691,6 @@ class IndexSearcher:
         if q.must_not:
             neg = self._scored_candidates(q.must_not).select("docid").distinct()
             hits = hits.join(neg, "docid", "left_anti")
-        excl = self._excluded_docids()
-        if excl is not None:           # live-docs bitset, as in search()
-            hits = hits.join(excl, "docid", "left_anti")
         return hits
 
     _filter_cache: dict = None
@@ -644,12 +727,13 @@ class IndexSearcher:
             return {"match": False, "reason": "term not in index"}
         df_t = int(st["df"].iloc[0])
         tw = self._weights([term])[term][1]
-        # prune to the ONE (term, bucket) row whose docid range contains
-        # the target (buckets hold disjoint contiguous ranges), then
+        # prune to the ONE postings row of the searcher's view whose docid
+        # range contains the target (a term's rows hold disjoint ranges,
+        # base buckets and NRT generations alike), then
         # decode only the containing 128-doc block — a head term at
         # 10^12 docs costs one row fetch + one block, not the whole
         # postings list on the driver
-        rows = (self.spark.read.parquet(self.paths.postings)
+        rows = (self._read_postings()
                 .filter((F.col("term") == term)
                         & (F.col("first_docid") <= int(docid)))
                 .orderBy(F.desc("first_docid")).limit(1).collect())
@@ -665,7 +749,7 @@ class IndexSearcher:
                 int(r["block_n"][bi]))
             i = np.searchsorted(d, docid)
             if i < len(d) and d[i] == docid:
-                score = score_postings(tw, tf[i:i + 1], nb[i:i + 1])[0]
+                score = tw.score(tf[i:i + 1], nb[i:i + 1])[0]
                 return {
                     "match": True, "term": term, "docid": int(docid),
                     "score": float(score),
@@ -675,7 +759,7 @@ class IndexSearcher:
                         "idf": float(tw.weight_value / np.float32(1.2 + 1)),
                         "weight_value(idf*(k1+1))": float(tw.weight_value),
                         "norm_cache(k1*((1-b)+b*dl/avgdl))": float(tw.cache[nb[i]]),
-                        "avgdl": float(avg_field_length(self.sum_ttf, self.max_doc)),
+                        "avgdl": float(self._avgdl_for(term)),
                     },
                 }
         return {"match": False, "term": term, "docid": int(docid),
@@ -691,62 +775,33 @@ class IndexSearcher:
         (idf*(k1+1)), normCache (k1*((1-b)+b*dl/avgdl)) and the term's
         score contribution, joined to the hit's rank + total score.
 
-        Scale: the postings scan is pruned to the query's terms (term-
-        sorted parquet min/max) and each decoded block only keeps rows
-        whose docid is in the k-element hit set (a broadcast literal) —
-        driver traffic is k ids in, k×|terms| rows out."""
+        The decomposition is the postings scan's own output (tf and
+        norm columns beside the score), so contrib is the score the
+        search summed. The scan is pruned to the query's terms
+        (term-sorted parquet min/max) and joined to the k-row hit set."""
         terms = analyze_text(query) if isinstance(query, str) else list(query)
         top = self.search(terms, op=op, k=k, dtype=dtype)
-        hit_ids = np.array(sorted(r["docid"] for r in
-                                  top.select("docid").collect()), np.int64)
         weights = self._weights(terms, dtype=dtype)
-        spark_t = T.FloatType() if dtype == np.float32 else T.DoubleType()
-        schema = T.StructType([
-            T.StructField("docid", T.LongType()),
-            T.StructField("term", T.StringType()),
-            T.StructField("freq", T.LongType()),
-            T.StructField("norm_byte", T.IntegerType()),
-            T.StructField("norm_cache", spark_t),
-            T.StructField("contrib", spark_t),
-        ])
-        if not weights or not len(hit_ids):
-            return self.spark.createDataFrame([], schema)
-        matched = self._read_postings().filter(
-            F.col("term").isin(list(weights)))
-
-        def explain_rows(batches):
-            for pdf in batches:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    _, tw = weights[r.term]
-                    d, tf, nb = unpack_postings(
-                        np.frombuffer(r.blob, np.uint8),
-                        np.asarray(r.block_offset, np.int64),
-                        np.asarray(r.block_first_docid, np.int64),
-                        np.asarray(r.block_n, np.int64))
-                    keep = np.isin(d, hit_ids)
-                    if not keep.any():
-                        continue
-                    d, tf, nb = d[keep], tf[keep], nb[keep]
-                    s = score_postings(tw, tf, nb, dtype=dtype)
-                    outs.append(pd.DataFrame({
-                        "docid": d, "term": r.term,
-                        "freq": tf.astype(np.int64),
-                        "norm_byte": nb.astype(np.int32),
-                        "norm_cache": tw.cache[nb.astype(np.uint8)],
-                        "contrib": s}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        decomp = matched.mapInPandas(explain_rows, schema=schema)
+        ftype = "float" if dtype == np.float32 else "double"
+        decomp = (self._scored_candidates(terms, dtype=dtype,
+                                          extra=("tf", "norm"))
+                  .select("docid", "tidx",
+                          F.col("tf").cast("long").alias("freq"),
+                          F.col("norm").alias("norm_byte"),
+                          F.col("score").alias("contrib")))
         consts = self.spark.createDataFrame(
-            [(t, int(tw.df),
+            [(ti, t, int(tw.df),
               float(tw.weight_value / dtype(dtype(K1) + dtype(1.0))),
               float(tw.weight_value))
-             for t, (_, tw) in weights.items()],
-            "term string, df long, idf double, weight_value double")
+             for t, (ti, tw) in weights.items()],
+            "tidx int, term string, df long, idf double, weight_value double")
+        caches = self.spark.createDataFrame(
+            [(ti, b, float(tw.cache[b]))
+             for ti, tw in weights.values() for b in range(256)],
+            f"tidx int, norm_byte int, norm_cache {ftype}")
         return (top.join(decomp, "docid")
-                .join(F.broadcast(consts), "term")
+                .join(F.broadcast(consts), "tidx")
+                .join(F.broadcast(caches), ["tidx", "norm_byte"])
                 .select("docid", "rank", F.col("score").alias("total_score"),
                         "term", "freq", "df", "idf", "weight_value",
                         "norm_byte", "norm_cache", "contrib")

@@ -14,10 +14,12 @@ Reference semantics:
   * SpanNearQuery (spans/SpanNearQuery.java:41): unordered within-window
     matching via the same kernel with ordered=False.
 
-Execution shape: candidate docs = conjunction of the terms' postings
-(least-frequent-first is free — the join prunes), positions decoded
-only for candidates, the position-intersection kernel is vectorized
-NumPy per (doc) over Arrow-shipped position arrays.
+Execution shape: the terms' postings come from the searcher's one
+postings scan (IndexSearcher._scored_candidates) with norms and
+positions requested — its view (NRT generations too), deleted docs
+already dropped. One pivot per doc gathers the position arrays, rows
+missing a required term drop out (the conjunction), and the
+position-intersection kernel runs per doc over Arrow-shipped arrays.
 """
 
 from __future__ import annotations
@@ -26,7 +28,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..index.codec import decode_positions, unpack_postings
 from .bm25 import avg_field_length, idf as bm25_idf, K1, B as B_PARAM
 
 
@@ -93,34 +94,10 @@ def _phrase_freq(pos_lists: list[np.ndarray], slop: int, ordered: bool,
 def _positional_piv(searcher, tidx: dict[str, int], required_idx: list[int]):
     """Per-doc pivot of decoded position lists: DataFrame(docid, norm,
     p0..pn array<int>), null where the doc lacks the term; rows missing
-    any `required_idx` column are dropped. Shared by phrase/span kernels."""
-    def emit(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                d, tf, nb = unpack_postings(
-                    np.frombuffer(r.blob, np.uint8),
-                    np.asarray(r.block_offset, np.int64),
-                    np.asarray(r.block_first_docid, np.int64),
-                    np.asarray(r.block_n, np.int64))
-                if r.pos_blob is None:
-                    raise ValueError("index was built without positions=True")
-                pos, bounds = decode_positions(bytes(r.pos_blob), tf)
-                outs.append(pd.DataFrame({
-                    "docid": d, "tidx": np.int32(tidx[r.term]), "norm": nb.astype(np.int32),
-                    "positions": [pos[bounds[i]:bounds[i + 1]].tolist()
-                                  for i in range(len(d))]}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    # the searcher's own view (NRT generations when include_nrt) minus
-    # its tombstoned docs, exactly as search() reads it
-    matched = searcher._read_postings().filter(F.col("term").isin(list(tidx)))
-    cand_schema = "docid long, tidx int, norm int, positions array<int>"
-    cands = matched.mapInPandas(emit, schema=cand_schema)
-    excl = searcher._excluded_docids()
-    if excl is not None:
-        cands = cands.join(excl, "docid", "left_anti")
+    any `required_idx` column are dropped. ``tidx`` numbers its terms in
+    order (0, 1, ...). Shared by phrase/span kernels."""
+    cands = searcher._scored_candidates(list(tidx),
+                                        extra=("norm", "positions"))
     # ignorenulls=True is REQUIRED: each (docid, tidx) has exactly one
     # row, so "the non-null value" is well-defined; plain first() keeps
     # whichever row the partial-aggregate saw first (null for other

@@ -700,7 +700,4 @@ def search_precedence(searcher, q: str, k: int = 10,
         anyg = anyg | ok
     scored = (pivoted.withColumn("score", total).filter(anyg)
               .select("docid", "score"))
-    excl = searcher._excluded_docids()
-    if excl is not None:
-        scored = scored.join(excl, "docid", "left_anti")
     return topk_with_rank(scored, k)

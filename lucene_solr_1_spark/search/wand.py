@@ -9,8 +9,10 @@ execution model:
 Phase A (θ probe, one tiny job): for each query term pick the block
 with the highest upper bound (distributed max_by over the exploded block
 grid), decode & score just those blocks; θ0 = the k-th largest per-doc
-partial sum observed. θ0 is a valid lower bound of the final k-th score
-because partial sums are lower bounds of total scores.
+partial sum observed over LIVE docs. θ0 is a valid lower bound of the
+final k-th score because partial sums are lower bounds of total scores;
+a deleted doc is dropped first, or a deleted hub doc could lift θ0 above
+the true k-th live score and prune needed blocks.
 
 Phase B (pruned scan): DOCID-ALIGNED block bounds — the defining move
 of Block-Max WAND (Ding & Suel 2011). Postings blocks are docid-range
@@ -27,13 +29,24 @@ doc-bucket, so chunk population is bounded by the routing scheme at any
 corpus scale). A per-chunk applyInPandas kernel computes the overlap
 maxima with a vectorized sparse-table sliding-window max. Cross-chunk
 state is carried through a tiny per-(term, chunk) summary table
-(first/last block fd, last-block ub, chunk-max ub — O(terms × chunks)
-rows, broadcast): a window that extends past its chunk takes the exact
-in-chunk maximum plus the summary chunk-maxima of the spanned chunks —
-an OVERestimate only for the final partial chunk, which keeps extra
-blocks but can never skip a needed one (exactness is one-sided). Keep
-decisions flow back to the scan as a (term, bucket) -> dropped-blocks
-join (auto-broadcast when small), never a driver-side dict.
+(first/last block fd, last-block ub, chunk-max ub, block count —
+O(terms × chunks) rows, broadcast): a window that extends past its chunk
+takes the exact in-chunk maximum plus the summary chunk-maxima of the
+spanned chunks — an OVERestimate only for the final partial chunk, which
+keeps extra blocks but can never skip a needed one (exactness is
+one-sided). Keep decisions flow back to the scan as a
+(term, first_docid) -> skipped-blocks join (auto-broadcast when small),
+never a driver-side dict. A postings row is keyed by its term and first
+docid: a term's rows hold disjoint docid ranges on every view, while
+every NRT row of the include_nrt view has bucket -1.
+
+Both phases decode through the searcher's one postings scan
+(IndexSearcher._scored_candidates): the probe passes every block but the
+best one as skipped, the pruned scan passes the dropped blocks. The
+scan reads the searcher's view and drops deleted docs, as every other
+query does. Block counts (``stats``) are exact and computed on the
+driver from the summary and the dropped table, which the plan collects
+anyway: no accumulator, so no double counting across jobs or retries.
 
 Exactness proof (the TestBoolean2-style equivalence tests enforce it):
 a doc d in a skipped block B lies in [s, e), so for every other term u
@@ -51,20 +64,22 @@ conservative (≥ the two-pointer value) across chunk boundaries.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
-from ..index.codec import decode_block, unpack_postings
 from .bm25 import B as B_PARAM
-from .bm25 import K1, score_postings
+from .bm25 import K1
 
 # docid chunk for grid partitioning = the doc-bucket of the routing
 # scheme (index/build.py BUCKET_SHIFT): chunks are uniformly doc-dense,
 # so per-chunk grid size is bounded by bucket doc count / 128
 CHUNK_SHIFT = 44
 
-_END_SENTINEL = 1 << 62
+# past every docid: NRT generation docids start at 1 << 62
+_END_SENTINEL = np.iinfo(np.int64).max
 
 
 def _block_upper_bounds(weights: dict, avgdl: float, term: str,
@@ -115,31 +130,41 @@ def _window_max(vals: np.ndarray, los: np.ndarray, his: np.ndarray) -> np.ndarra
     return out
 
 
-_GRID_SCHEMA = ("term string, bucket int, bidx int, fd long, ub double, "
-                "chunk long")
+_GRID_SCHEMA = ("term string, first_docid long, bidx int, fd long, "
+                "ub double, chunk long")
 
 
-def _make_explode_blocks(weights: dict, avgdls: dict):
-    """mapInPandas kernel: postings meta rows -> one row per block
-    (term, bucket, bidx, first_docid, upper bound, docid chunk)."""
+def _explode_blocks(batch, weights: dict, avgdls: dict):
+    """Arrow kernel: one batch of postings meta rows -> one row per block
+    (term, row first_docid, bidx, block first docid, upper bound, docid
+    chunk)."""
+    import pyarrow as pa
 
-    def explode(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                bfd = np.asarray(r.block_first_docid, np.int64)
-                ubs = _block_upper_bounds(weights, avgdls[r.term], r.term,
-                                          np.asarray(r.block_max_tf, np.int64),
-                                          np.asarray(r.block_min_len, np.float32))
-                outs.append(pd.DataFrame({
-                    "term": r.term, "bucket": np.int32(r.bucket),
-                    "bidx": np.arange(len(bfd), dtype=np.int32),
-                    "fd": bfd, "ub": ubs,
-                    "chunk": bfd >> CHUNK_SHIFT}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def flat(name):
+        arr = batch.column(name)
+        off = arr.offsets.to_numpy()
+        return off, arr.values.to_numpy(zero_copy_only=False)[off[0]:off[-1]]
 
-    return explode
+    off, fd = flat("block_first_docid")
+    max_tf, min_len = (flat(c)[1] for c in ("block_max_tf", "block_min_len"))
+    nblk = np.diff(off)
+    row = np.repeat(np.arange(batch.num_rows), nblk)
+    terms = np.asarray(batch.column("term").to_pylist(), dtype=object)[row]
+    ub = np.empty(len(fd), dtype=np.float64)
+    for t in set(terms):
+        m = terms == t
+        ub[m] = _block_upper_bounds(weights, avgdls[t], t,
+                                    max_tf[m].astype(np.int64),
+                                    min_len[m].astype(np.float32))
+    return pa.RecordBatch.from_pydict({
+        "term": pa.array(terms, pa.string()),
+        "first_docid": pa.array(batch.column("first_docid").to_numpy()[row],
+                                pa.int64()),
+        "bidx": pa.array(np.arange(len(fd)) - np.repeat(off[:-1] - off[0],
+                                                         nblk), pa.int32()),
+        "fd": pa.array(fd, pa.int64()),
+        "ub": pa.array(ub, pa.float64()),
+        "chunk": pa.array(fd >> CHUNK_SHIFT, pa.int64())})
 
 
 def _chunk_tables(summ: pd.DataFrame):
@@ -184,7 +209,7 @@ def _range_max(chunk_max_t, c_lo: int, c_hi: int) -> float:
 
 def _make_keep_kernel(theta0: float, terms: list[str], bc_tables):
     """applyInPandas kernel (one docid chunk): emit the DROPPED
-    (term, bucket, bidx) rows — absence means keep."""
+    (term, first_docid, bidx) rows — absence means keep."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         carry_in, next_first, chunk_max = bc_tables.value
@@ -195,10 +220,10 @@ def _make_keep_kernel(theta0: float, terms: list[str], bc_tables):
             g = g.sort_values("fd", kind="mergesort")
             grids[t] = (g["fd"].to_numpy(np.int64),
                         g["ub"].to_numpy(np.float64),
-                        g["bucket"].to_numpy(np.int32),
+                        g["first_docid"].to_numpy(np.int64),
                         g["bidx"].to_numpy(np.int32))
         out_t, out_b, out_i = [], [], []
-        for t, (fd, ub, bkt, bidx) in grids.items():
+        for t, (fd, ub, row_fd, bidx) in grids.items():
             end = np.append(fd[1:], next_first.get((t, c), _END_SENTINEL))
             crossing = end > chunk_end   # windows extending past this chunk
             others = np.zeros(len(fd), dtype=np.float64)
@@ -233,14 +258,14 @@ def _make_keep_kernel(theta0: float, terms: list[str], bc_tables):
             drop = np.flatnonzero(ub + others < theta0)
             if len(drop):
                 out_t.append(np.full(len(drop), t, dtype=object))
-                out_b.append(bkt[drop])
+                out_b.append(row_fd[drop])
                 out_i.append(bidx[drop])
         if not out_t:
             return pd.DataFrame({"term": pd.Series(dtype=object),
-                                 "bucket": pd.Series(dtype=np.int32),
+                                 "first_docid": pd.Series(dtype=np.int64),
                                  "bidx": pd.Series(dtype=np.int32)})
         return pd.DataFrame({"term": np.concatenate(out_t),
-                             "bucket": np.concatenate(out_b),
+                             "first_docid": np.concatenate(out_b),
                              "bidx": np.concatenate(out_i)})
 
     return kernel
@@ -250,38 +275,34 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
                 stats: dict | None = None) -> DataFrame:
     """Exact OR top-k with block skipping. Returns (docid, score, rank).
 
-    Pass ``stats={}`` to receive skip accounting: after an action on the
-    result, stats["blocks_total"].value / stats["blocks_kept"].value
-    report block pruning. NOTE: the accumulators are added inside a
-    transformation evaluated by more than one Spark job (top-k limit +
-    rank), and task retries re-add — only the kept/total RATIO is
-    meaningful, not the absolute counts."""
-
+    Pass ``stats={}`` to receive skip accounting: stats["blocks_total"]
+    .value is the number of postings blocks of the query terms on the
+    searcher's view, stats["blocks_kept"].value those the pruned scan
+    decodes. Both are exact counts, known when this returns."""
     spark = searcher.spark
-    if stats is not None:
-        stats["blocks_total"] = spark.sparkContext.accumulator(0)
-        stats["blocks_kept"] = spark.sparkContext.accumulator(0)
     weights = searcher._weights(terms, dtype=dtype)
-    terms = [t for t in terms if t in weights]
-    spark_t = T.FloatType() if dtype == np.float32 else T.DoubleType()
-    empty_schema = T.StructType([
-        T.StructField("docid", T.LongType()),
-        T.StructField("score", spark_t),
-        T.StructField("rank", T.LongType()),
-    ])
+    terms = [t for t in dict.fromkeys(terms) if t in weights]
     if not terms:
-        return spark.createDataFrame([], empty_schema)
+        if stats is not None:
+            stats["blocks_total"] = SimpleNamespace(value=0)
+            stats["blocks_kept"] = SimpleNamespace(value=0)
+        return spark.createDataFrame(
+            [], "docid long, score "
+            + ("float" if dtype == np.float32 else "double") + ", rank long")
     # per-term avgdl: per-field CollectionStatistics on multi-field indexes
     avgdls = {t: float(searcher._avgdl_for(t, dtype=dtype)) for t in terms}
 
     # ---- block grid: one row per postings block, computed distributed
     # from column-pruned meta (blobs never read here) and kept distributed
-    grid = (spark.read.parquet(searcher.paths.postings)
+    def explode(batches):
+        for b in batches:
+            yield _explode_blocks(b, weights, avgdls)
+
+    grid = (searcher._read_postings()
             .filter(F.col("term").isin(terms))
-            .select("term", "bucket", "block_first_docid",
+            .select("term", "first_docid", "block_first_docid",
                     "block_max_tf", "block_min_len")
-            .mapInPandas(_make_explode_blocks(weights, avgdls),
-                         schema=_GRID_SCHEMA))
+            .mapInArrow(explode, schema=_GRID_SCHEMA))
     grid = grid.persist()
 
     # ---- ONE distributed aggregation produces both the per-(term, chunk)
@@ -291,140 +312,79 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
             .agg(F.min("fd").alias("min_fd"), F.max("fd").alias("max_fd"),
                  F.max_by("ub", "fd").alias("last_ub"),
                  F.max("ub").alias("max_ub"),
-                 F.max_by(F.struct("bucket", "bidx"), "ub").alias("best"))
+                 F.count("*").alias("nblocks"),
+                 F.max_by(F.struct("first_docid", "bidx"),
+                          "ub").alias("best"))
             .toPandas())
-    probe_keys: set[tuple[str, int, int]] = set()
+    blocks_total = int(summ["nblocks"].sum())
+    probe = []
     for t, g in summ.groupby("term"):
-        i = int(g["max_ub"].to_numpy().argmax())
-        best = g["best"].iloc[i]
-        probe_keys.add((t, int(best["bucket"]), int(best["bidx"])))
+        best = g["best"].iloc[int(g["max_ub"].to_numpy().argmax())]
+        probe.append((t, int(best["first_docid"]), int(best["bidx"])))
 
-    def decode_probe(batches):
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                key_base = (r.term, int(r.bucket))
-                for (t, b, bi) in probe_keys:
-                    if (t, b) != key_base:
-                        continue
-                    buf = np.frombuffer(r.blob, np.uint8)
-                    d, tf, nb = decode_block(
-                        buf, int(r.block_offset[bi]), int(r.block_first_docid[bi]),
-                        int(r.block_n[bi]))
-                    s = score_postings(weights[t][1], tf, nb, dtype=dtype)
-                    outs.append(pd.DataFrame({"docid": d, "score": s.astype(np.float64)}))
-            yield (pd.concat(outs, ignore_index=True) if outs
-                   else pd.DataFrame({"docid": pd.Series(dtype=np.int64),
-                                      "score": pd.Series(dtype=np.float64)}))
-
-    # pushdown the exact (term, bucket) probe rows — reads ~|terms| rows'
-    # blobs instead of every matching blob (parquet min/max prunes both)
-    if probe_keys:
-        probe_filter = None
-        for (t, b, _) in probe_keys:
-            cond = (F.col("term") == t) & (F.col("bucket") == b)
-            probe_filter = cond if probe_filter is None else (probe_filter | cond)
-        probe_df = (spark.read.parquet(searcher.paths.postings)
-                    .filter(probe_filter)
-                    .mapInPandas(decode_probe, schema="docid long, score double"))
+    theta0 = 0.0
+    if probe:
+        # decode only the probe blocks: the pushed-down row filter reads
+        # ~|terms| rows' blobs (parquet min/max prunes both columns), the
+        # skip column drops every other block of those rows
+        where, best = None, F.lit(-1)
+        for t, fd, bidx in probe:
+            cond = (F.col("term") == t) & (F.col("first_docid") == fd)
+            where = cond if where is None else (where | cond)
+            best = F.when(cond, F.lit(bidx)).otherwise(best)
+        skip = F.filter(F.sequence(F.lit(0), F.size("block_n") - 1),
+                        lambda i: i != best)
+        probe_pdf = (searcher._scored_candidates(terms, dtype=dtype,
+                                                 where=where, skip=skip)
+                     .select("docid", "score").toPandas())
         # θ0 = k-th best per-DOC partial sum over the probed blocks: a doc
         # appearing in several terms' best blocks combines (hub docs), which
         # tightens θ0 well above any single-term score. Still a valid lower
         # bound of the true k-th total (partial sum ≤ total per doc), so the
         # result stays exact.
-        probe_pdf = probe_df.toPandas()
-    else:
-        # terms in termstats but no postings meta rows: skip phase A
-        probe_pdf = pd.DataFrame()
-    if len(probe_pdf):
-        per_doc = probe_pdf.groupby("docid")["score"].sum().to_numpy()
+        per_doc = (probe_pdf["score"].astype(np.float64)
+                   .groupby(probe_pdf["docid"]).sum().to_numpy())
         per_doc.sort()
-        theta0 = float(per_doc[-k]) if len(per_doc) >= k else 0.0
-    else:
-        theta0 = 0.0
+        if len(per_doc) >= k:
+            theta0 = float(per_doc[-k])
 
     # ---- phase B: distributed docid-aligned keep sets ----
-    dropped = None
+    dropped, blocks_dropped = None, 0
     if theta0 > 0.0:
         bc_tables = spark.sparkContext.broadcast(_chunk_tables(summ))
         kernel = _make_keep_kernel(theta0, terms, bc_tables)
         drop_df = (grid.groupBy("chunk")
                    .applyInPandas(lambda pdf: kernel(pdf),
-                                  schema="term string, bucket int, bidx int"))
-        dropped = (drop_df.groupBy("term", "bucket")
-                   .agg(F.collect_list("bidx").alias("dropped"))
+                                  schema="term string, first_docid long, "
+                                         "bidx int"))
+        dropped = (drop_df.groupBy("term", "first_docid")
+                   .agg(F.collect_list("bidx").alias("skip"))
                    .persist())
-        # materialize (small: one row per pruned (term, bucket)) so the
-        # grid scan isn't re-run by the main job; a zero count means no
-        # block anywhere fell below θ — skip the join entirely
-        if dropped.count() == 0:
+        # materialize (small: one row per pruned postings row) so the grid
+        # scan isn't re-run by the main job; one aggregate gives both
+        # whether any block fell below θ (else skip the join entirely) and
+        # how many did
+        n_rows, n_dropped = dropped.agg(
+            F.count("*"), F.sum(F.size("skip"))).first()
+        if n_rows == 0:
             dropped.unpersist()
             dropped = None
+        else:
+            blocks_dropped = int(n_dropped)
     grid.unpersist()
+    if stats is not None:
+        stats["blocks_total"] = SimpleNamespace(value=blocks_total)
+        stats["blocks_kept"] = SimpleNamespace(
+            value=blocks_total - blocks_dropped)
 
-    def score_pruned(batches):
-        for pdf in batches:
-            outs = []
-            has_drop = "dropped" in pdf.columns
-            for r in pdf.itertuples(index=False):
-                t = r.term
-                nblocks = len(r.block_offset)
-                drop = getattr(r, "dropped", None) if has_drop else None
-                if drop is None or (isinstance(drop, float) and pd.isna(drop)):
-                    keep = None
-                else:
-                    drop_set = set(int(x) for x in drop)
-                    keep = np.array([i for i in range(nblocks)
-                                     if i not in drop_set], dtype=np.int64)
-                if stats is not None:
-                    stats["blocks_total"].add(nblocks)
-                    stats["blocks_kept"].add(nblocks if keep is None
-                                             else len(keep))
-                if keep is not None and not len(keep):
-                    continue
-                buf = np.frombuffer(r.blob, np.uint8)
-                tidx, tw = weights[t]
-                if keep is None:
-                    # nothing to skip in this row: whole-blob vectorized
-                    # decode (the exact path's kernel) beats per-block calls
-                    d, tf, nb = unpack_postings(
-                        buf, np.asarray(r.block_offset, np.int64),
-                        np.asarray(r.block_first_docid, np.int64),
-                        np.asarray(r.block_n, np.int64))
-                    s = score_postings(tw, tf, nb, dtype=dtype)
-                    outs.append(pd.DataFrame({"docid": d, "tidx": np.int32(tidx),
-                                              "score": s}))
-                    continue
-                for bi in keep:
-                    d, tf, nb = decode_block(
-                        buf, int(r.block_offset[bi]), int(r.block_first_docid[bi]),
-                        int(r.block_n[bi]))
-                    s = score_postings(tw, tf, nb, dtype=dtype)
-                    outs.append(pd.DataFrame({"docid": d, "tidx": np.int32(tidx),
-                                              "score": s}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    schema = T.StructType([
-        T.StructField("docid", T.LongType()),
-        T.StructField("tidx", T.IntegerType()),
-        T.StructField("score", spark_t),
-    ])
-    matched = (spark.read.parquet(searcher.paths.postings)
-               .filter(F.col("term").isin(terms)))
-    if dropped is not None:
-        # keep decisions flow in as data (left join, auto-broadcast when
-        # small) — never a driver-side dict of the whole grid
-        matched = matched.join(dropped, ["term", "bucket"], "left")
-    cands = matched.mapInPandas(score_pruned, schema=schema)
-
+    cands = searcher._scored_candidates(terms, dtype=dtype, skip=dropped)
     from .engine import topk_with_rank
     pivoted = (cands.groupBy("docid")
-               .pivot("tidx", [weights[t][0] for t in terms])
+               .pivot("tidx", list(range(len(terms))))
                .agg(F.first("score")))
     zero = F.lit(0.0).cast("float" if dtype == np.float32 else "double")
     total = None
-    for t in terms:
-        c = F.coalesce(F.col(str(weights[t][0])), zero)
+    for i in range(len(terms)):
+        c = F.coalesce(F.col(str(i)), zero)
         total = c if total is None else total + c
     return topk_with_rank(pivoted.withColumn("score", total), k)

@@ -1,6 +1,20 @@
+import os
 import shutil
 
 import pytest
+
+# the Lucene/Solr source checkout whose test data some tests replay
+REFERENCE_ROOT = "/root/reference"
+
+
+def reference_path(rel: str) -> str:
+    """Path of ``rel`` inside the reference checkout. Skips the calling
+    test, naming the path, when it is absent, so tier-1 runs on a host
+    without the checkout."""
+    path = os.path.join(REFERENCE_ROOT, rel)
+    if not os.path.exists(path):
+        pytest.skip(f"reference fixture absent: {path}")
+    return path
 
 
 @pytest.fixture(scope="session")

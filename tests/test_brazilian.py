@@ -3,15 +3,16 @@
 
 import re
 
+from conftest import reference_path
 from lucene_solr_1_spark.analysis.brazilian import brazilian_stem
 from lucene_solr_1_spark.analysis.stemmer import stem_vocab
 
-_TEST_SRC = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
+_TEST_SRC = ("lucene/analysis/common/src/test/org/apache/"
              "lucene/analysis/br/TestBrazilianStemmer.java")
 
 
 def test_all_reference_vectors():
-    src = open(_TEST_SRC, encoding="utf-8").read()
+    src = open(reference_path(_TEST_SRC), encoding="utf-8").read()
     pairs = re.findall(r'check\("([^"]*)",\s*"([^"]*)"\)', src)
     assert len(pairs) > 80
     bad = [(w, e, brazilian_stem(w)) for w, e in pairs

@@ -73,3 +73,27 @@ def test_debug_component(spark, searcher):
     assert set(dbg["explain"].columns) >= {
         "docid", "rank", "total_score", "term", "freq", "df", "idf",
         "weight_value", "norm_byte", "norm_cache", "contrib"}
+
+
+def test_explain_reads_the_searchers_view(spark, tmp_root):
+    """explain() on IndexSearcher(include_nrt=True) finds a doc that only
+    an NRT generation holds, scores it as search() does, and reports the
+    avgdl that score used."""
+    import pandas as pd
+
+    from lucene_solr_1_spark.streaming.ingest import StreamingIndexWriter
+    root = os.path.join(tmp_root, "exp_nrt_idx")
+    build_index(spark, spark.createDataFrame(gen_docs(100)), root,
+                num_segments=2, out_partitions=2)
+    batch = pd.DataFrame({"url": ["https://nrt.example/0"],
+                          "text": [f"{VOCAB[0]} {VOCAB[0]} novelterm"]})
+    StreamingIndexWriter(root).process_batch(spark.createDataFrame(batch), 0)
+    s = IndexSearcher(spark, root, include_nrt=True)
+    did = spark.read.parquet(os.path.join(root, "nrt", "docs")).first()["docid"]
+    for term in (VOCAB[0], "novelterm"):
+        e = s.explain(term, did)
+        assert e["match"], e
+        hits = {r["docid"]: r["score"]
+                for r in s.search([term], "OR", 1 << 20).collect()}
+        assert np.float32(e["score"]) == np.float32(hits[did])
+        assert e["details"]["avgdl"] == float(s._avgdl_for(term))

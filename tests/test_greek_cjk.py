@@ -1,25 +1,23 @@
 """Greek stemmer (analysis/greek_stem.py) + CJKWidthFilter
 (analysis/extra.py): reference-vector parity.
 """
-import os
 import re
 
 import pytest
 
+from conftest import reference_path
 from lucene_solr_1_spark.analysis.extra import cjk_width_expr, cjk_width_py
 from lucene_solr_1_spark.analysis.greek_stem import greek_stem
 from lucene_solr_1_spark.analysis.lang_filters import greek_lowercase
 
-_TGS = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
+_TGS = ("lucene/analysis/common/src/test/org/apache/"
         "lucene/analysis/el/TestGreekStemmer.java")
 
 
 def test_greek_stemmer_all_reference_vectors():
     """Every checkOneTerm vector in TestGreekStemmer.java (342 pairs),
     through the GreekAnalyzer order: GreekLowerCaseFilter then stem."""
-    if not os.path.exists(_TGS):
-        pytest.skip("reference test file not available")
-    src = open(_TGS, encoding="utf-8").read()
+    src = open(reference_path(_TGS), encoding="utf-8").read()
     pairs = re.findall(r'checkOneTerm\(a,\s*"([^"]+)",\s*"([^"]+)"\)', src)
     assert len(pairs) > 300
     bad = [(w, greek_stem(greek_lowercase(w)), e)

@@ -15,12 +15,12 @@ import os
 import numpy as np
 import pytest
 
+from conftest import reference_path
 from lucene_solr_1_spark.sources.quality import (
     MAX_POINTS, QualityQuery, QualityStats, TrecJudge, quality_benchmark,
     quality_stats_df, read_trec_topics)
 
-REF_Q = ("/root/reference/lucene/benchmark/src/test/org/apache/lucene/"
-         "benchmark/quality")
+REF_Q = "lucene/benchmark/src/test/org/apache/lucene/benchmark/quality"
 
 
 # ------------------------------------------------------------------ scalars
@@ -88,7 +88,7 @@ def test_trec_judge_parsing_and_validate():
 
 
 def test_read_trec_topics_reference_fixture():
-    with open(f"{REF_Q}/trecTopics.txt", encoding="utf-8") as f:
+    with open(reference_path(f"{REF_Q}/trecTopics.txt"), encoding="utf-8") as f:
         qqs = read_trec_topics(f.read())
     assert len(qqs) == 20
     assert qqs[0].query_id == "0"
@@ -147,10 +147,9 @@ def reuters_stats(spark, tmp_path_factory):
     from lucene_solr_1_spark.search.engine import IndexSearcher
     from lucene_solr_1_spark.sources.readers import read_line_docs
 
-    if not os.path.exists(f"{REF_Q}/reuters.578.lines.txt.bz2"):
-        pytest.skip("reference fixture absent")
+    lines = reference_path(f"{REF_Q}/reuters.578.lines.txt.bz2")
     root = str(tmp_path_factory.mktemp("qidx"))
-    docs = read_line_docs(spark, f"{REF_Q}/reuters.578.lines.txt.bz2")
+    docs = read_line_docs(spark, lines)
 
     # the reference indexes with ClassicAnalyzer
     # (TestQualityRun.java:182 "analyzer=...ClassicAnalyzer"); plug the
@@ -168,9 +167,9 @@ def reuters_stats(spark, tmp_path_factory):
                         out_partitions=4,
                         analyzers={"text": classic_tokens})
     searcher = IndexSearcher(spark, paths.root)
-    with open(f"{REF_Q}/trecTopics.txt", encoding="utf-8") as f:
+    with open(reference_path(f"{REF_Q}/trecTopics.txt"), encoding="utf-8") as f:
         qqs = read_trec_topics(f.read())
-    with open(f"{REF_Q}/trecQRels.txt", encoding="utf-8") as f:
+    with open(reference_path(f"{REF_Q}/trecQRels.txt"), encoding="utf-8") as f:
         judge = TrecJudge(f)
     assert judge.validate_data(qqs)
     stats = quality_benchmark(searcher, qqs, judge, max_results=1000,

@@ -8,17 +8,17 @@ import zipfile
 
 import pytest
 
+from conftest import reference_path
 from lucene_solr_1_spark.analysis.rslp import (
     galician_minimal_stem, galician_stem, portuguese_minimal_stem,
     portuguese_rslp_stem)
 from lucene_solr_1_spark.analysis.stemmer import stem_vocab
 
-_BASE = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-         "lucene/analysis/")
+_BASE = "lucene/analysis/common/src/test/org/apache/lucene/analysis/"
 
 
 def _pairs(zip_rel, inner):
-    with zipfile.ZipFile(_BASE + zip_rel) as z:
+    with zipfile.ZipFile(reference_path(_BASE + zip_rel)) as z:
         text = z.read(inner).decode("utf-8")
     return [line.split("\t") for line in text.splitlines() if line]
 

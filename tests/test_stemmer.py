@@ -7,6 +7,7 @@ synonym expression parity with the Python twin.
 import pandas as pd
 import pytest
 
+from conftest import reference_path
 from lucene_solr_1_spark.analysis.stemmer import (
     porter_stem, stem_token_lists, stem_vocab, synonym_expr, synonyms_py)
 
@@ -121,15 +122,13 @@ def test_porter2_full_snowball_vocabulary():
     shipped in the reference's test data (TestSnowballVocab.java uses the
     same zip): every word must stem identically."""
     import io
-    import os
     import zipfile
 
     from lucene_solr_1_spark.analysis.stemmer import porter2_stem
 
-    zpath = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-             "lucene/analysis/snowball/TestSnowballVocabData.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("reference snowball vocab not available")
+    zpath = reference_path(
+        "lucene/analysis/common/src/test/org/apache/"
+        "lucene/analysis/snowball/TestSnowballVocabData.zip")
     with zipfile.ZipFile(zpath) as z:
         voc = io.TextIOWrapper(z.open("english/voc.txt")).read().split()
         out = io.TextIOWrapper(z.open("english/output.txt")).read().split()
@@ -305,15 +304,13 @@ def test_german_full_snowball_vocabulary():
     TestSnowballVocab.java reads (german/voc.txt -> output.txt in
     TestSnowballVocabData.zip): every word must stem identically."""
     import io
-    import os
     import zipfile
 
     from lucene_solr_1_spark.analysis.snowball import german_stem
 
-    zpath = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-             "lucene/analysis/snowball/TestSnowballVocabData.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("reference snowball vocab not available")
+    zpath = reference_path(
+        "lucene/analysis/common/src/test/org/apache/"
+        "lucene/analysis/snowball/TestSnowballVocabData.zip")
     with zipfile.ZipFile(zpath) as z:
         voc = io.TextIOWrapper(z.open("german/voc.txt"),
                                encoding="utf-8").read().split()
@@ -385,15 +382,13 @@ def test_kstem_full_oracle_vocabulary():
     TestKStemmer.java testVocabulary): every word must stem
     identically."""
     import io
-    import os
     import zipfile
 
     from lucene_solr_1_spark.analysis.kstem import kstem
 
-    zpath = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-             "lucene/analysis/en/kstemTestData.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("reference kstem oracle not available")
+    zpath = reference_path(
+        "lucene/analysis/common/src/test/org/apache/"
+        "lucene/analysis/en/kstemTestData.zip")
     with zipfile.ZipFile(zpath) as z:
         lines = io.TextIOWrapper(z.open("kstem_examples.txt")).read()
     pairs = [ln.split("\t") for ln in lines.splitlines() if ln.strip()]
@@ -444,15 +439,13 @@ def test_scandinavian_full_snowball_vocabularies(lang, algo):
     word must stem identically (595,726 words across the sixteen).
     Line-aligned read: Turkish stems some words to "" (e.g. ları), so
     output.txt has empty lines that whitespace-split would drop."""
-    import os
     import zipfile
 
     from lucene_solr_1_spark.analysis.stemmer import _stem_fn
 
-    zpath = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-             "lucene/analysis/snowball/TestSnowballVocabData.zip")
-    if not os.path.exists(zpath):
-        pytest.skip("reference snowball vocab not available")
+    zpath = reference_path(
+        "lucene/analysis/common/src/test/org/apache/"
+        "lucene/analysis/snowball/TestSnowballVocabData.zip")
     fn = _stem_fn(algo)
     with zipfile.ZipFile(zpath) as z:
         voc = z.read(f"{lang}/voc.txt").decode("utf-8").splitlines()
@@ -540,16 +533,12 @@ def test_unine_light_minimal_vocabularies(algo, rel, member):
     assertVocabulary over these semicolon/tab pair files): every word
     must stem identically."""
     import io
-    import os
     import zipfile
 
     from lucene_solr_1_spark.analysis.stemmer import _LIGHT_STEMMERS
 
-    base = ("/root/reference/lucene/analysis/common/src/test/org/apache/"
-            "lucene/analysis/")
-    path = base + rel
-    if not os.path.exists(path):
-        pytest.skip("reference vocabulary not available")
+    path = reference_path("lucene/analysis/common/src/test/org/apache/"
+                          "lucene/analysis/" + rel)
     if member is not None:
         with zipfile.ZipFile(path) as z:
             text = io.TextIOWrapper(z.open(member), encoding="utf-8").read()

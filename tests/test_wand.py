@@ -185,3 +185,56 @@ def test_wand_cost_based_bypass(spark, built, monkeypatch):
     got = searcher.search_wand(heads, k=5).toPandas()
     exp = searcher.search(heads, "OR", 5).toPandas()
     assert got["docid"].tolist() == exp["docid"].tolist()
+
+
+def test_wand_block_counts_are_exact(spark, tmp_root, monkeypatch):
+    """stats["blocks_total"] is the number of postings blocks of the
+    query terms on the searcher's view, and blocks_kept is that total
+    minus the blocks the pruned scan is told to skip. Both are known when
+    search_wand returns; collecting the result twice changes neither."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    rows = []
+    for i in range(1200):
+        if i == 0:      # the hub: short, both terms at high tf
+            text = " ".join(["alpha"] * 15 + ["beta"] * 12 + ["pad"])
+        else:
+            filler = [f"w{(i * 7 + j) % 500}" for j in range(60)]
+            if i % 3 == 0:
+                filler[0] = "alpha"
+            if i % 5 == 0:
+                filler[1] = "beta"
+            text = " ".join(filler)
+        rows.append((f"u{i:06d}", text))
+    paths = build_index(spark, spark.createDataFrame(
+        pd.DataFrame(rows, columns=["url", "text"])),
+        os.path.join(tmp_root, "idx_wand_counts"), num_segments=2)
+    s = IndexSearcher(spark, paths.root)
+    terms = ["alpha", "beta"]
+    want_total = sum(len(r["block_n"]) for r in
+                     s._read_postings().filter(F.col("term").isin(terms))
+                     .select("block_n").collect())
+
+    skipped = []
+    orig = IndexSearcher._scored_candidates
+
+    def spy(self, *a, where=None, skip=None, **kw):
+        if skip is not None and where is None:      # the pruned scan
+            skipped.append(sum(len(r["skip"]) for r in skip.collect()))
+        return orig(self, *a, where=where, skip=skip, **kw)
+
+    monkeypatch.setattr(IndexSearcher, "_scored_candidates", spy)
+    stats = {}
+    res = s.search_wand(terms, k=1, stats=stats)
+    total, kept = stats["blocks_total"].value, stats["blocks_kept"].value
+    assert total == want_total
+    assert len(skipped) == 1 and kept == total - skipped[0]
+    assert 0 < kept < total, (kept, total)
+    first, second = res.collect(), res.collect()
+    assert first == second
+    assert (stats["blocks_total"].value,
+            stats["blocks_kept"].value) == (total, kept)
+    exp = s.search(terms, "OR", 1).collect()
+    assert [(r["docid"], r["score"]) for r in first] == \
+        [(r["docid"], r["score"]) for r in exp]
