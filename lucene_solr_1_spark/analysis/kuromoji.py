@@ -577,18 +577,17 @@ class CharacterDefinition:
 
 @lru_cache(maxsize=1)
 def _dicts():
-    """Dictionary singletons with a per-host on-disk cache (r6, guide
-    §4.5): decoding the vendored vint streams costs ~0.6 s and every
-    Python worker pays it on its first batch. The decoded structures
-    are pure data derived only from the static vendored dictionary
-    files, so they are pickled to the system temp dir keyed by those
-    files' sizes+mtimes — a compiler-artifact cache (like .pyc), not a
-    result cache. Races are benign (atomic rename; losers recompile)."""
+    """Dictionary singletons with an on-disk cache (r6, guide §4.5):
+    decoding the vendored vint streams costs ~0.6 s and every Python
+    worker pays it on its first batch. The decoded structures are pure
+    data derived only from the static vendored dictionary files, so
+    they are pickled to this user's private artifact directory
+    (fsio.cached_artifact) keyed by those files' sizes+mtimes — a
+    compiler-artifact cache (like .pyc), not a result cache."""
     import hashlib
     import os
-    import pickle
-    import tempfile
 
+    from .. import fsio
     data_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                             "data")
     sig = hashlib.md5()
@@ -599,24 +598,10 @@ def _dicts():
                 sig.update(f"{f}:{st.st_size}:{st.st_mtime_ns}".encode())
     except OSError:
         pass
-    path = os.path.join(tempfile.gettempdir(),
-                        f"kuromoji_dicts_{sig.hexdigest()[:20]}.pkl")
-    try:
-        with open(path, "rb") as fh:
-            return pickle.load(fh)
-    except Exception:
-        pass
-    built = (TokenInfoDictionary(), UnknownDictionary(), ConnectionCosts(),
-             CharacterDefinition())
-    try:
-        fd, tmp = tempfile.mkstemp(prefix="kuromoji_dicts_",
-                                   dir=tempfile.gettempdir())
-        with os.fdopen(fd, "wb") as fh:
-            pickle.dump(built, fh, protocol=4)
-        os.replace(tmp, path)
-    except Exception:
-        pass
-    return built
+    return fsio.cached_artifact(
+        "kuromoji_dicts", sig.hexdigest()[:20],
+        lambda: (TokenInfoDictionary(), UnknownDictionary(),
+                 ConnectionCosts(), CharacterDefinition()))
 
 
 # ---------------------------------------------------------------------------

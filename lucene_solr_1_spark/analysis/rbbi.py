@@ -532,36 +532,19 @@ class BreakRules:
 
 @lru_cache(maxsize=64)
 def compile_rules(source: str) -> BreakRules:
-    """Compile with a per-host on-disk DFA cache (r6, guide §4.5): the
+    """Compile with an on-disk DFA cache (r6, guide §4.5): the
     Default/Latin rule sets cost ~0.6 s each to compile and EVERY Python
     worker process pays it on its first batch. The compiled BreakRules
     is a pure-data object (transition table + category map) derived only
-    from the static rule SOURCE text, so it is cached in the system temp
-    dir keyed by a hash of that source — a compiler artifact cache like
-    CPython's .pyc, not a result cache (nothing about input data or
-    queries is stored). Concurrent workers race benignly: losers just
-    recompile and the atomic rename keeps the file consistent."""
+    from the static rule SOURCE text, so it is cached in this user's
+    private artifact directory (fsio.cached_artifact) keyed by a hash of
+    that source — a compiler artifact cache like CPython's .pyc, not a
+    result cache (nothing about input data or queries is stored)."""
     import hashlib
-    import pickle
-    import tempfile
 
+    from .. import fsio
     h = hashlib.md5(source.encode("utf-8")).hexdigest()[:20]
-    path = os.path.join(tempfile.gettempdir(), f"rbbi_dfa_{h}.pkl")
-    try:
-        with open(path, "rb") as f:
-            return pickle.load(f)
-    except Exception:
-        pass
-    br = BreakRules(source)
-    try:
-        fd, tmp = tempfile.mkstemp(prefix="rbbi_dfa_",
-                                   dir=tempfile.gettempdir())
-        with os.fdopen(fd, "wb") as f:
-            pickle.dump(br, f, protocol=4)
-        os.replace(tmp, path)
-    except Exception:
-        pass
-    return br
+    return fsio.cached_artifact("rbbi_dfa", h, lambda: BreakRules(source))
 
 
 # ---------------------------------------------------------------------------

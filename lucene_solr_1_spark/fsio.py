@@ -155,3 +155,55 @@ def rmtree(path: str, ignore_errors: bool = False) -> None:
     except Exception:
         if not ignore_errors:
             raise
+
+
+def artifact_cache_dir() -> str | None:
+    """This user's private directory for compiled analyzer artifacts:
+    <tempdir>/lucene_solr_1_spark-<uid>, created with mode 0700. None
+    when it is unsafe to use: not a plain directory, owned by another
+    user, or writable by group or others. Loading a pickle runs code,
+    so a cache someone else can write to is never read."""
+    import stat
+    import tempfile
+    path = os.path.join(tempfile.gettempdir(),
+                        f"lucene_solr_1_spark-{os.getuid()}")
+    try:
+        os.makedirs(path, mode=0o700, exist_ok=True)
+        st = os.lstat(path)
+    except OSError:
+        return None
+    if (not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid()
+            or st.st_mode & 0o022):
+        return None
+    return path
+
+
+def cached_artifact(name: str, key: str, build):
+    """build(), memoized on local disk across processes (every Python
+    worker would otherwise rebuild it): a compiler-artifact cache like
+    CPython's .pyc, keyed by ``key`` (a hash of the static inputs) and
+    the package version, kept in artifact_cache_dir(). Without a safe
+    directory it just builds. Concurrent writers race benignly: the
+    atomic rename keeps every file whole."""
+    import pickle
+    import tempfile
+
+    from . import __version__
+    cache_dir = artifact_cache_dir()
+    if cache_dir is None:
+        return build()
+    path = os.path.join(cache_dir, f"{name}_{__version__}_{key}.pkl")
+    try:
+        with open(path, "rb") as f:
+            return pickle.load(f)
+    except Exception:       # absent, partial, or from an older layout
+        pass
+    obj = build()
+    try:
+        fd, tmp = tempfile.mkstemp(prefix=f"{name}_", dir=cache_dir)
+        with os.fdopen(fd, "wb") as f:
+            pickle.dump(obj, f, protocol=4)
+        os.replace(tmp, path)
+    except OSError:
+        pass
+    return obj

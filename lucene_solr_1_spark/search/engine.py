@@ -8,15 +8,15 @@ The Spark re-expression of Lucene's read path (SURVEY.md §3.1):
                            broadcast into the scoring UDF closure
                            (ref: search/TermQuery.java:161,
                             similarities/BM25Similarity.java:207-211)
-  Weight.scorer/score   -> ONE postings scan for every query
-                           (IndexSearcher._scored_candidates): the
+  Weight.scorer/score   -> ONE postings kernel for every query: the
                            searcher's view (base, or base + NRT
                            generations) term-filtered, each Arrow batch
                            decoded + BM25-scored (float32) by
-                           score_postings_batch under mapInArrow, then
-                           the tombstoned docs anti-joined — live docs
-                           applied in the scan itself, as acceptDocs are
-                           in TermsEnum.docs (ref: search/TermScorer.java:69-71,
+                           score_postings_batch, then the searcher's
+                           deleted docs (computed once per searcher, as
+                           Lucene's per-reader liveDocs) dropped — live
+                           docs applied in the scan itself, as acceptDocs
+                           are in TermsEnum.docs (ref: search/TermScorer.java:69-71,
                            search/Weight.java scorer(..., acceptDocs))
   Boolean combination   -> per-doc combine via pivot on term index +
                            left-to-right float32 adds — the same
@@ -30,6 +30,26 @@ The Spark re-expression of Lucene's read path (SURVEY.md §3.1):
   ids-then-fields       -> fetch_fields(): collect k docids, pushdown
                            filter on the docs table (the Solr two-phase
                            distributed pattern, SearchHandler.java:229-264)
+
+One kernel, two executors. The postings kernel (score_postings_batch)
+has two call sites, chosen per query by a size rule, as Spark chooses a
+broadcast join from its input size:
+  * in-process (_scan_local): when the query reads at most
+    IndexSearcher.LOCAL_POSTINGS postings (Σ df of its terms, Σ ttf for
+    phrases, from the cached term stats), its files are local and it has
+    no DataFrame/SQL input (doc_filter, docid_filter), the driver reads
+    the term-filtered rows with pyarrow.dataset, runs the kernel, drops
+    the searcher's deleted docs, and finishes with combine_topk — one
+    NumPy per-doc combine + top-k shared by search, search_wand and
+    phrase clauses. The result is a LocalTableScan DataFrame of <= k
+    rows: the query has already run when search() returns, and
+    collecting it runs no Spark job (so collect_time_limited bounds only
+    the Spark executor);
+  * Spark (_scored_candidates under mapInArrow, Catalyst pivot,
+    topk_with_rank): every other query, lazily, as before. It is the
+    executor for postings that do not fit the driver.
+Both return the same bits: tests/test_two_executors.py runs every query
+kind at budget 0 and unbounded and compares (docid, float32 score, rank).
 """
 
 from __future__ import annotations
@@ -48,6 +68,86 @@ from ..index.build import IndexPaths
 from ..index.codec import decode_positions, unpack_postings
 from .bm25 import K1, avg_field_length, make_weight
 from .similarities import get_similarity
+
+
+def result_schema(dtype=np.float32) -> T.StructType:
+    """Schema of every top-k result: docid, score, 1-based rank."""
+    return T.StructType([
+        T.StructField("docid", T.LongType()),
+        T.StructField("score", T.FloatType() if dtype == np.float32
+                      else T.DoubleType()),
+        T.StructField("rank", T.LongType())])
+
+
+def local_frame(spark: SparkSession, schema, data=None) -> DataFrame:
+    """A driver-built table as a DataFrame whose plan is a LocalTableScan:
+    collecting it runs no Spark job. ``schema`` is a DDL string or a
+    StructType; ``data`` an Arrow table, a pandas DataFrame or a dict of
+    columns (None: no rows). createDataFrame of a Python list would be a
+    Scan ExistingRDD instead, which runs a job on every collect."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if data is None:
+        table = arrow_schema.empty_table()
+    elif isinstance(data, pa.Table):
+        # one chunk: createDataFrame returns no rows at all when the
+        # table's first chunk is empty (pyspark 4.1)
+        table = (data.select(arrow_schema.names).cast(arrow_schema)
+                 .combine_chunks())
+    else:
+        table = pa.Table.from_pandas(pd.DataFrame(data), schema=arrow_schema,
+                                     preserve_index=False)
+    return spark.createDataFrame(table)
+
+
+def combine_topk(docid, clause, score, nclauses: int, k: int,
+                 dtype=np.float32, must=(), should=(), msm: int = 0,
+                 coord: bool = False, exclude=None,
+                 after: tuple | None = None) -> dict:
+    """Per-doc combine and top-k in the driver process: the in-process
+    twin of the Catalyst pivot + topk_with_rank, bit for bit.
+
+    (docid, clause, score) are the clause hits, one row per (doc,
+    clause). A doc's score adds its clause scores left to right in
+    ``dtype`` (0 for a clause it misses), as the pivot's coalesce chain
+    does. It must hit every clause in ``must`` and at least ``msm`` of
+    ``should``; ``coord`` multiplies by matched/nclauses (classic
+    similarity); docids in ``exclude`` and hits at or before the
+    searchAfter cursor ``after=(score, docid)`` drop out. Returns the k
+    best as columns docid, score, rank in (score desc, docid asc)
+    order."""
+    docid = np.asarray(docid, np.int64)
+    docs, row = np.unique(docid, return_inverse=True)
+    mat = np.zeros((len(docs), nclauses), dtype)
+    hit = np.zeros((len(docs), nclauses), bool)
+    clause = np.asarray(clause, np.int64)
+    mat[row, clause] = np.asarray(score, dtype)
+    hit[row, clause] = True
+    total = mat[:, 0].copy() if nclauses else np.zeros(len(docs), dtype)
+    for i in range(1, nclauses):
+        total = total + mat[:, i]
+    keep = np.ones(len(docs), bool)
+    for i in must:
+        keep &= hit[:, i]
+    if coord:
+        # Spark computes coord in double and casts it to the score type
+        c = hit.sum(axis=1) / np.float64(dtype(nclauses))
+        total = (total * c.astype(dtype)).astype(dtype)
+    if len(should) and msm:
+        keep &= hit[:, list(should)].sum(axis=1) >= msm
+    if exclude is not None:
+        keep &= ~np.isin(docs, exclude)
+    if after is not None:
+        a_score, a_docid = float(after[0]), int(after[1])
+        s64 = total.astype(np.float64)
+        keep &= (s64 < a_score) | ((s64 == a_score) & (docs > a_docid))
+    docs, total = docs[keep], total[keep]
+    top = np.lexsort((docs, -total))[:k]
+    return {"docid": docs[top], "score": total[top],
+            "rank": np.arange(1, len(top) + 1, dtype=np.int64)}
 
 
 def topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
@@ -138,7 +238,8 @@ def collect_time_limited(spark: SparkSession, df: DataFrame,
     budget. Spark can't surface partial results from a cancelled job, so
     this implements the greedy=false contract — on expiry the job group
     is cancelled and TimeExceededException raised (Solr's timeAllowed
-    without partialResults)."""
+    without partialResults). A result the in-process executor built has
+    no job left to run, so only Spark-executed queries are bounded."""
     import threading
     import time as _time
     import uuid
@@ -288,6 +389,18 @@ class IndexSearcher:
     # disk and every lookup is a pruned parquet scan
     TERMSTATS_CACHE_BYTES = 64 << 20
 
+    # Queries reading at most this many postings (Σ df of their terms,
+    # Σ ttf when positions are read) run in the driver process; bigger
+    # ones run the Spark plan. The crossover, measured on a 4-core host
+    # (100k-doc gen_docs index, 8 segments, warm medians): the Spark plan
+    # costs ~0.8 s before its first posting (0.72-0.88 s for 3k-99k
+    # posting terms); in-process, a term of 99k postings takes 0.15 s and
+    # a 16-term OR of 1.06M postings 0.83 s (Spark: 3.1 s). At 1 << 20
+    # postings the in-process work alone reaches the Spark plan's fixed
+    # cost; above it the Spark plan, whose decode scales with cores,
+    # keeps the driver's memory bounded.
+    LOCAL_POSTINGS = 1 << 20
+
     def __init__(self, spark: SparkSession, root: str, include_nrt: bool = False,
                  default_field: str | None = None):
         """include_nrt=True gives the NRT-reopen view (SURVEY §2.H):
@@ -311,15 +424,25 @@ class IndexSearcher:
         else:
             self.default_field = None
         self._ts_cache: pd.DataFrame | None = None
+        self._excluded: np.ndarray | None = None
+        self._excluded_df: DataFrame | None = None
+        # per-term (df, ttf, max_tf) of the unfolded NRT generations, read
+        # once: this view's stats stay as fixed as its max_doc/sum_ttf
+        self._nrt_stats: pd.DataFrame | None = None
         if include_nrt:
-            nrt_docs = os.path.join(root, "nrt", "docs")
+            nrt_post = self._nrt_path("postings")
+            if fsio.exists(nrt_post):
+                rows = self._read_table(
+                    nrt_post, ["term", "df", "ttf", "max_tf"]).to_pandas()
+                rows = rows[rows["term"] != "\x00metrics"]
+                self._nrt_stats = rows.groupby("term", as_index=False).agg(
+                    df=("df", "sum"), ttf=("ttf", "sum"),
+                    max_tf=("max_tf", "max"))
+                self.sum_ttf += int(rows["ttf"].sum())
+            nrt_docs = self._nrt_path("docs")
             if fsio.exists(nrt_docs):
-                extra = spark.read.parquet(nrt_docs).count()
-                extra_ttf = (self._read_postings()
-                             .filter(F.col("bucket") == -1)
-                             .agg(F.sum("ttf")).collect()[0][0] or 0)
-                self.max_doc += int(extra)
-                self.sum_ttf += int(extra_ttf)
+                # deleted copies count, as they do in Lucene's maxDoc
+                self.max_doc += self._read_table(nrt_docs, ["docid"]).num_rows
 
     def term_key(self, field: str | None, term: str) -> str:
         """Postings key for (field, term) — bare term on a single-field
@@ -342,6 +465,32 @@ class IndexSearcher:
                                     self.max_doc, dtype=dtype)
         return avg_field_length(self.sum_ttf, self.max_doc, dtype=dtype)
 
+    def _nrt_path(self, table: str) -> str:
+        return os.path.join(self.paths.root, "nrt", table)
+
+    def _read_table(self, path: str, columns: list[str] | None,
+                    isin: tuple | None = None):
+        """One parquet table of the index as an Arrow table, pruned to
+        ``columns`` and to rows whose column isin[0] is in isin[1]. Local
+        files are read by pyarrow (no Spark job); remote ones by Spark."""
+        if not fsio.is_remote(path):
+            import pyarrow.dataset as ds
+            flt = None if isin is None else ds.field(isin[0]).isin(isin[1])
+            return ds.dataset(path, format="parquet").to_table(
+                columns=columns, filter=flt)
+        df = self.spark.read.parquet(path)
+        if isin is not None:
+            df = df.filter(F.col(isin[0]).isin(list(isin[1])))
+        return df.select(*(columns or df.columns)).toArrow()
+
+    def _postings_views(self) -> list[str]:
+        """The postings tables of the searcher's view: the base, plus the
+        NRT generations' on include_nrt (whose \x00metrics rows no term
+        filter selects)."""
+        nrt = self._nrt_path("postings")
+        return [self.paths.postings] + (
+            [nrt] if self.include_nrt and fsio.exists(nrt) else [])
+
     def _read_postings(self) -> DataFrame:
         if self.include_nrt:
             from ..streaming.ingest import nrt_postings
@@ -354,21 +503,7 @@ class IndexSearcher:
                        for f in fsio.listdir(self.paths.termstats)
                        if f.endswith(".parquet"))
             if size <= self.TERMSTATS_CACHE_BYTES:
-                local_files = ([os.path.join(self.paths.termstats, f)
-                                for f in fsio.listdir(self.paths.termstats)
-                                if f.endswith(".parquet")]
-                               if not fsio.is_remote(self.paths.termstats)
-                               else [])
-                if local_files:
-                    # r6: the cache is a DRIVER-side structure over a
-                    # <=64 MB local table — read it with pyarrow directly
-                    # instead of scheduling a Spark job + toPandas round
-                    # trip (one fewer job on every searcher's first query)
-                    import pyarrow.parquet as pq
-                    pdf = pq.ParquetDataset(local_files).read().to_pandas()
-                else:
-                    pdf = (self.spark.read.parquet(self.paths.termstats)
-                           .toPandas())
+                pdf = self._read_table(self.paths.termstats, None).to_pandas()
                 self._ts_cache = pdf.set_index("term", drop=False)
         return self._ts_cache
 
@@ -376,46 +511,79 @@ class IndexSearcher:
     def term_stats(self, terms: list[str]) -> pd.DataFrame:
         if not terms:
             return pd.DataFrame(columns=["term", "df", "ttf", "max_tf"])
-        if self.include_nrt:
-            # recompute from the multi-segment view (base + NRT rows)
-            return (self._read_postings().filter(F.col("term").isin(terms))
-                    .groupBy("term").agg(F.sum("df").alias("df"),
-                                         F.sum("ttf").alias("ttf"),
-                                         F.max("max_tf").alias("max_tf"))
-                    .toPandas())
         cache = self._termstats_cached()
         if cache is not None:
             hit = [t for t in set(terms) if t in cache.index]
-            return cache.loc[hit].reset_index(drop=True)
-        return (self.spark.read.parquet(self.paths.termstats)
-                .filter(F.col("term").isin(terms)).toPandas())
+            base = cache.loc[hit].reset_index(drop=True)
+        else:
+            base = (self.spark.read.parquet(self.paths.termstats)
+                    .filter(F.col("term").isin(terms)).toPandas())
+        if self._nrt_stats is None:
+            return base
+        # multi-segment view: the base's stats plus the NRT generations'
+        nrt = self._nrt_stats[self._nrt_stats["term"].isin(terms)]
+        cols = ["term", "df", "ttf", "max_tf"]
+        return (pd.concat([base[cols], nrt[cols]], ignore_index=True)
+                .groupby("term", as_index=False)
+                .agg(df=("df", "sum"), ttf=("ttf", "sum"),
+                     max_tf=("max_tf", "max")))
 
-    def _excluded_docids(self) -> DataFrame | None:
+    def _postings_count(self, terms, positions: bool = False) -> int:
+        """Postings a scan of ``terms`` reads: Σ df, or Σ ttf (positions)."""
+        st = self.term_stats(list(dict.fromkeys(terms)))
+        return int(st["ttf" if positions else "df"].sum()) if len(st) else 0
+
+    def _runs_local(self, postings: int) -> bool:
+        """The size rule: a query over at most LOCAL_POSTINGS postings of
+        local files runs in the driver process, as Spark broadcasts a
+        join side under its threshold; results are the same either way."""
+        return (postings <= self.LOCAL_POSTINGS
+                and not fsio.is_remote(self.paths.root))
+
+    def _excluded_docids(self) -> np.ndarray:
         """Tombstoned docs (the .del bitset analog — applied by EVERY
         reader whenever a tombstones table exists, exactly as Lucene's
         liveDocs are not opt-in): a url tombstoned at generation g
         excludes its copies from earlier generations. Base copies have
         gen -1; docs folded into the base by tiered_compact KEEP their
         generation-bucket docids, so their gen stays derivable from the
-        docid alone after the fold."""
-        from ..index.build import BUCKET_SHIFT
-        from ..streaming.ingest import NRT_BASE_BUCKETS
-        tomb_dir = os.path.join(self.paths.root, "tombstones")
-        if not fsio.exists(tomb_dir):
+        docid alone after the fold.
+
+        Computed once per searcher (a point-in-time view, as Lucene's
+        per-reader liveDocs are) as a sorted docid array."""
+        if self._excluded is None:
+            from ..index.build import BUCKET_SHIFT
+            from ..streaming.ingest import NRT_BASE_BUCKETS
+            self._excluded = np.empty(0, np.int64)
+            tomb_dir = os.path.join(self.paths.root, "tombstones")
+            if fsio.exists(tomb_dir):
+                tombs = (self._read_table(tomb_dir, ["url", "gen"]).to_pandas()
+                         .groupby("url")["gen"].max())
+                doc_paths = [self.paths.docs] + (
+                    [self._nrt_path("docs")] if self.include_nrt
+                    and fsio.exists(self._nrt_path("docs")) else [])
+                docs = pd.concat([self._read_table(
+                    p, ["docid", "url"], ("url", tombs.index.tolist()))
+                    .to_pandas() for p in doc_paths], ignore_index=True)
+                docid = docs["docid"].to_numpy(np.int64)
+                rb = (docid.view(np.uint64) >> np.uint64(BUCKET_SHIFT)
+                      ).astype(np.int64)
+                gen = np.where(rb >= NRT_BASE_BUCKETS,
+                               rb - NRT_BASE_BUCKETS, -1)
+                dead = gen < tombs.loc[docs["url"]].to_numpy(np.int64)
+                self._excluded = np.sort(docid[dead])
+        return self._excluded
+
+    def _excluded_frame(self) -> DataFrame | None:
+        """The same snapshot as a LocalTableScan, for the Spark scan's
+        broadcast anti-join; None when no doc is deleted."""
+        excl = self._excluded_docids()
+        if not len(excl):
             return None
-        tombs = (self.spark.read.parquet(tomb_dir)
-                 .groupBy("url").agg(F.max("gen").alias("gen")))
-        docs = self.spark.read.parquet(self.paths.docs)
-        nrt_docs_path = os.path.join(self.paths.root, "nrt", "docs")
-        if self.include_nrt and fsio.exists(nrt_docs_path):
-            docs = docs.unionByName(
-                self.spark.read.parquet(nrt_docs_path),
-                allowMissingColumns=True)
-        rb = F.shiftrightunsigned(F.col("docid"), BUCKET_SHIFT)
-        gen_of = F.when(rb >= NRT_BASE_BUCKETS,
-                        rb - F.lit(NRT_BASE_BUCKETS)).otherwise(F.lit(-1))
-        return (docs.join(F.broadcast(tombs), "url")
-                .filter(gen_of < F.col("gen")).select("docid"))
+        if self._excluded_df is None:
+            self._excluded_df = local_frame(self.spark, "docid long",
+                                            {"docid": excl})
+        return self._excluded_df
 
     def _weights(self, terms: list[str], dtype=np.float32,
                  boosts: dict | None = None):
@@ -446,7 +614,58 @@ class IndexSearcher:
                               dtype=dtype)
         return {t: (i, sw[t]) for i, t in enumerate(terms) if t in sw}
 
+    def _term_weights(self, terms: list[str], dtype=np.float32,
+                      similarity=None, boosts: dict | None = None):
+        if similarity is None:
+            return self._weights(terms, dtype=dtype, boosts=boosts)
+        return self._sim_weights(terms, similarity, dtype=dtype)
+
     # -- scoring scan ------------------------------------------------------
+    def _scan_local(self, weights: dict, dtype=np.float32, extra: tuple = (),
+                    rows: list | None = None, skip: dict | None = None):
+        """The postings scan in the driver process: the Spark scan's
+        kernel (score_postings_batch) over the same view, term filter
+        and columns, read by pyarrow.dataset. Returns an Arrow table with
+        the _scan_schema columns, deleted docs dropped.
+
+        ``rows``: (term, first_docid) keys, the only postings rows read.
+        ``skip``: (term, first_docid) -> block indices not decoded."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(_scan_schema(dtype, extra))
+        if not weights:
+            return schema.empty_table()
+        flt = ds.field("term").isin(list(weights))
+        if rows is not None:
+            keys = None
+            for t, fd in rows:
+                key = (ds.field("term") == t) & (ds.field("first_docid") == fd)
+                keys = key if keys is None else keys | key
+            flt = flt & keys
+        cols = ["term", "first_docid", "blob", "block_offset",
+                "block_first_docid", "block_n",
+                *(["pos_blob"] if "positions" in extra else [])]
+        excl = self._excluded_docids()
+        out = []
+        for path in self._postings_views():
+            for b in ds.dataset(path, format="parquet").to_batches(
+                    columns=cols, filter=flt):
+                if not b.num_rows:
+                    continue
+                if skip is not None:
+                    keys = zip(b.column("term").to_pylist(),
+                               b.column("first_docid").to_pylist())
+                    b = b.append_column("skip", pa.array(
+                        [skip.get(key) for key in keys], pa.list_(pa.int32())))
+                o = score_postings_batch(b, weights, dtype, extra)
+                if len(excl):
+                    o = o.filter(pa.array(~np.isin(
+                        o.column("docid").to_numpy(), excl)))
+                out.append(o)
+        return pa.Table.from_batches(out, schema=schema)
+
     def _scored_candidates(self, terms: list[str], dtype=np.float32,
                            similarity=None, boosts: dict | None = None,
                            extra: tuple = (), where=None,
@@ -455,7 +674,9 @@ class IndexSearcher:
         score[, tf, norm, positions]) over the searcher's view, deleted
         docs dropped. ``tidx`` is the term's index in ``terms``.
 
-        The term filter (ANDed with the Column ``where``, if given) is
+        Under the size rule (_runs_local) the scan runs in the driver
+        (_scan_local) and the DataFrame is its LocalTableScan. Otherwise
+        the term filter (ANDed with the Column ``where``, if given) is
         pushed into the parquet scan of the term-sorted postings table
         (min/max row-group pruning = the .tip term index). ``extra``
         names the per-posting columns to add. ``skip`` gives each
@@ -464,13 +685,14 @@ class IndexSearcher:
         joined to it (rows it lacks decode whole). Tombstoned
         docs are anti-joined here, so no query can see them (Lucene's
         acceptDocs, handed to every postings enum)."""
-        if similarity is None:
-            weights = self._weights(terms, dtype=dtype, boosts=boosts)
-        else:
-            weights = self._sim_weights(terms, similarity, dtype=dtype)
+        weights = self._term_weights(terms, dtype, similarity, boosts)
         schema = _scan_schema(dtype, extra)
         if not weights:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, schema)
+        if where is None and skip is None and self._runs_local(
+                self._postings_count(weights, "positions" in extra)):
+            return local_frame(self.spark, schema,
+                               self._scan_local(weights, dtype, extra))
         cond = F.col("term").isin(list(weights))
         rows = self._read_postings().filter(
             cond if where is None else cond & where)
@@ -490,10 +712,56 @@ class IndexSearcher:
                     yield out
 
         cands = rows.mapInArrow(scan, schema=schema)
-        excl = self._excluded_docids()
+        excl = self._excluded_frame()
         if excl is not None:
-            cands = cands.join(excl, "docid", "left_anti")
+            cands = cands.join(F.broadcast(excl), "docid", "left_anti")
         return cands
+
+    def _search_local(self, q: BooleanQuery, dtype, similarity,
+                      after: tuple | None) -> dict:
+        """search() in the driver process: the in-process scan per clause
+        kind, then combine_topk."""
+        from .phrase import phrase_table
+        pos_terms = q.must + q.should
+        nterms = len(pos_terms)
+        pos_phr = [p for p in q.phrases if p.occur != "MUST_NOT"]
+        neg_phr = [p for p in q.phrases if p.occur == "MUST_NOT"]
+        cands = self._scan_local(
+            self._term_weights(pos_terms, dtype, similarity, q.boosts), dtype)
+        docid = [cands.column("docid").to_numpy()]
+        clause = [cands.column("tidx").to_numpy()]
+        score = [cands.column("score").to_numpy()]
+        for j, p in enumerate(pos_phr):
+            ph = phrase_table(self, list(p.terms), slop=p.slop, dtype=dtype,
+                              boost=p.boost)
+            docid.append(ph["docid"].to_numpy())
+            clause.append(np.full(len(ph), nterms + j))
+            score.append(ph["score"].to_numpy())
+        exclude = [self._scan_local(self._weights(q.must_not, dtype=dtype),
+                                    dtype).column("docid").to_numpy()]
+        exclude += [phrase_table(self, list(p.terms), slop=p.slop,
+                                 dtype=dtype)["docid"].to_numpy()
+                    for p in neg_phr]
+        must, should, msm = self._clause_roles(q, pos_phr)
+        return combine_topk(
+            np.concatenate(docid), np.concatenate(clause),
+            np.concatenate(score), nterms + len(pos_phr), q.k, dtype,
+            must=must, should=should, msm=msm,
+            coord=get_similarity(similarity).uses_coord(),
+            exclude=np.concatenate(exclude), after=after)
+
+    @staticmethod
+    def _clause_roles(q: BooleanQuery, pos_phr: list):
+        """(must clause indices, should clause indices, effective
+        minimum-should-match) of q's positive clauses: terms first
+        (must, then should), then the positive phrases in order."""
+        nterms = len(q.must) + len(q.should)
+        must = list(range(len(q.must))) + [
+            nterms + j for j, p in enumerate(pos_phr) if p.occur == "MUST"]
+        should = list(range(len(q.must), nterms)) + [
+            nterms + j for j, p in enumerate(pos_phr) if p.occur == "SHOULD"]
+        msm = max(q.min_should_match, 0 if must or not should else 1)
+        return must, should, msm
 
     def search(self, query: BooleanQuery | str | list[str], op: str = "OR",
                k: int | None = None, dtype=np.float32,
@@ -520,8 +788,18 @@ class IndexSearcher:
         ``docid_filter``: a DataFrame with a ``docid`` column — a
         pre-resolved ConstantScore DocSet (e.g. ``index/numeric.py``'s
         ``numeric_range_docids`` trie lookup, or ``cached_filter``);
-        hits restrict to it by a semi join, scores unchanged."""
+        hits restrict to it by a semi join, scores unchanged.
+
+        Under the size rule (no filter input, at most LOCAL_POSTINGS
+        postings) the query runs here, in the driver, and the result's
+        rows are already computed; otherwise it runs when collected."""
         q = self._coerce(query, op, k)
+        if doc_filter is None and docid_filter is None and self._runs_local(
+                self._postings_count(q.must + q.should + q.must_not)
+                + sum(self._postings_count(p.terms, positions=True)
+                      for p in q.phrases)):
+            return local_frame(self.spark, result_schema(dtype),
+                               self._search_local(q, dtype, similarity, after))
 
         def apply_filter(df: DataFrame) -> DataFrame:
             if doc_filter is not None:
@@ -580,8 +858,7 @@ class IndexSearcher:
         for i in range(1, nclauses):
             total = total + F.coalesce(F.col(str(i)), zero)
             nmatch = nmatch + F.col(str(i)).isNotNull().cast("int")
-        must_idx = list(range(len(q.must))) + [
-            nterms + j for j, p in enumerate(pos_phr) if p.occur == "MUST"]
+        must_idx, should_idx, msm = self._clause_roles(q, pos_phr)
         must_ok = F.lit(True)
         for i in must_idx:
             must_ok = must_ok & F.col(str(i)).isNotNull()
@@ -601,10 +878,6 @@ class IndexSearcher:
                      / F.lit(float(dtype(nclauses)))).cast(ftype)
             scored = scored.withColumn(
                 "score", (F.col("score") * coord).cast(ftype))
-        should_idx = list(range(len(q.must), nterms)) + [
-            nterms + j for j, p in enumerate(pos_phr) if p.occur == "SHOULD"]
-        has_must = bool(q.must) or any(p.occur == "MUST" for p in pos_phr)
-        msm = max(q.min_should_match, 0 if has_must or not should_idx else 1)
         if should_idx and msm:
             smatch = None
             for i in should_idx:
@@ -789,16 +1062,21 @@ class IndexSearcher:
                           F.col("tf").cast("long").alias("freq"),
                           F.col("norm").alias("norm_byte"),
                           F.col("score").alias("contrib")))
-        consts = self.spark.createDataFrame(
-            [(ti, t, int(tw.df),
-              float(tw.weight_value / dtype(dtype(K1) + dtype(1.0))),
-              float(tw.weight_value))
-             for t, (ti, tw) in weights.items()],
-            "tidx int, term string, df long, idf double, weight_value double")
-        caches = self.spark.createDataFrame(
-            [(ti, b, float(tw.cache[b]))
-             for ti, tw in weights.values() for b in range(256)],
-            f"tidx int, norm_byte int, norm_cache {ftype}")
+        tws = list(weights.values())
+        consts = local_frame(
+            self.spark,
+            "tidx int, term string, df long, idf double, weight_value double",
+            {"tidx": [ti for ti, _ in tws], "term": list(weights),
+             "df": [int(tw.df) for _, tw in tws],
+             "idf": [float(tw.weight_value / dtype(dtype(K1) + dtype(1.0)))
+                     for _, tw in tws],
+             "weight_value": [float(tw.weight_value) for _, tw in tws]})
+        caches = local_frame(
+            self.spark, f"tidx int, norm_byte int, norm_cache {ftype}",
+            {"tidx": np.repeat([ti for ti, _ in tws], 256),
+             "norm_byte": np.tile(np.arange(256), len(tws)),
+             "norm_cache": np.concatenate(
+                 [tw.cache for _, tw in tws] or [np.empty(0, dtype)])})
         return (top.join(decomp, "docid")
                 .join(F.broadcast(consts), "tidx")
                 .join(F.broadcast(caches), ["tidx", "norm_byte"])
@@ -839,8 +1117,7 @@ class IndexSearcher:
         ftype = "float" if dtype == np.float32 else "double"
         spark = self.spark
         if not clauses:
-            return spark.createDataFrame(
-                [], f"docid long, score {ftype}, rank long")
+            return local_frame(spark, result_schema(dtype))
         term_keys, term_boosts = [], {}
         phrase_specs = []      # (clause_idx, field_idx, terms, slop)
         key_of = {}            # (clause_idx, field_idx) -> tidx

@@ -99,13 +99,12 @@ def fuzzy_like_this(searcher, query: str | list[str], k: int = 10,
                     max_num_terms: int = 50) -> DataFrame:
     """Run the rewritten boosted OR query; empty result when no term
     survives the fuzzy expansion."""
-    from .engine import BooleanQuery
+    from .engine import BooleanQuery, local_frame, result_schema
     clauses = fuzzy_like_this_terms(
         searcher, query, min_similarity=min_similarity,
         prefix_length=prefix_length, max_num_terms=max_num_terms)
     if not clauses:
-        return searcher.spark.createDataFrame(
-            [], "docid long, score float, rank long")
+        return local_frame(searcher.spark, result_schema())
     bq = BooleanQuery(should=[t for t, _ in clauses],
                       boosts={t: b for t, b in clauses if b != 1.0}, k=k)
     return searcher.search(bq, k=k)

@@ -15,20 +15,24 @@ Reference semantics:
     matching via the same kernel with ordered=False.
 
 Execution shape: the terms' postings come from the searcher's one
-postings scan (IndexSearcher._scored_candidates) with norms and
-positions requested — its view (NRT generations too), deleted docs
-already dropped. One pivot per doc gathers the position arrays, rows
-missing a required term drop out (the conjunction), and the
-position-intersection kernel runs per doc over Arrow-shipped arrays.
+postings scan with norms and positions requested — its view (NRT
+generations too), deleted docs already dropped. One pivot per doc
+gathers the position arrays, rows missing a required term drop out (the
+conjunction), and score_positions runs the position-intersection kernel
+per doc. Under the searcher's size rule (Σ ttf of the phrase terms) the
+scan, the gather by docid and score_positions run in the driver process;
+otherwise the pivot is a Spark aggregate and score_positions runs under
+mapInPandas.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from .bm25 import avg_field_length, idf as bm25_idf, K1, B as B_PARAM
+from .engine import combine_topk, local_frame, result_schema, topk_with_rank
 
 
 def _phrase_freq(pos_lists: list[np.ndarray], slop: int, ordered: bool,
@@ -112,6 +116,66 @@ def _positional_piv(searcher, tidx: dict[str, int], required_idx: list[int]):
     return piv
 
 
+def _positional_table(searcher, tidx: dict[str, int],
+                      required_idx: list[int]) -> pd.DataFrame:
+    """_positional_piv in the driver process: the same (docid, norm,
+    p0..pn) rows, gathered from the in-process scan by docid."""
+    weights = searcher._term_weights(list(tidx))
+    tbl = searcher._scan_local(weights, extra=("norm", "positions"))
+    docid = tbl.column("docid").to_numpy()
+    docs, row = np.unique(docid, return_inverse=True)
+    norm = np.zeros(len(docs), np.int32)
+    norm[row] = tbl.column("norm").to_numpy()
+    pos = tbl.column("positions").combine_chunks()
+    off = pos.offsets.to_numpy()
+    vals = pos.values.to_numpy()
+    tix = tbl.column("tidx").to_numpy()
+    out = {"docid": docs, "norm": norm}
+    for i in range(len(tidx)):
+        col = np.full(len(docs), None, dtype=object)
+        for r in np.flatnonzero(tix == i):
+            col[row[r]] = vals[off[r]:off[r + 1]]
+        out[f"p{i}"] = col
+    pdf = pd.DataFrame(out)
+    if required_idx:
+        pdf = pdf.dropna(subset=[f"p{i}" for i in required_idx])
+    return pdf
+
+
+def score_positions(pdf: pd.DataFrame, freq_fn, weight_value, cache,
+                    dtype=np.float32) -> pd.DataFrame:
+    """Score the rows of a positional pivot (docid, norm, p0..pn; a
+    missing term's p is None): freq = freq_fn(position arrays), scored
+    like one term with BM25's norm cache; rows with freq 0 drop. The
+    body of both executors: mapInPandas calls it per batch, the
+    in-process path once."""
+    cols = [pdf[c].tolist() for c in pdf.columns if c.startswith("p")]
+    freqs = np.zeros(len(pdf), dtype=np.int64)
+    for i in range(len(pdf)):
+        freqs[i] = freq_fn([None if col[i] is None
+                            else np.asarray(col[i], dtype=np.int64)
+                            for col in cols])
+    keep = freqs > 0
+    tf = freqs[keep].astype(dtype)
+    c = cache[pdf["norm"].to_numpy(np.int64)[keep] & 0xFF]
+    score = ((weight_value * tf) / (tf + c)).astype(dtype)
+    return pd.DataFrame({"docid": pdf["docid"].to_numpy(np.int64)[keep],
+                         "score": score})
+
+
+def _map_scores(piv, freq_fn, weight_value, cache, dtype):
+    """score_positions over a Spark positional pivot (mapInPandas)."""
+    spark_t = "float" if dtype == np.float32 else "double"
+
+    def score_rows(batches):
+        for pdf in batches:
+            out = score_positions(pdf, freq_fn, weight_value, cache, dtype)
+            if len(out):
+                yield out
+
+    return piv.mapInPandas(score_rows, schema=f"docid long, score {spark_t}")
+
+
 def span_first(searcher, term: str, end: int, k: int = 10,
                dtype=np.float32) -> DataFrame:
     """SpanFirstQuery analog (ref: search/spans/SpanFirstQuery.java):
@@ -121,19 +185,13 @@ def span_first(searcher, term: str, end: int, k: int = 10,
                          dtype=dtype, max_position=end - 1)
 
 
-def phrase_scores(searcher, terms: list[str], slop: int = 0, ordered: bool = True,
-                  dtype=np.float32, max_position: int | None = None,
-                  boost: float = 1.0) -> DataFrame:
-    """Per-doc phrase scores, pre-top-k: DataFrame(docid, score) with one
-    row per doc where the phrase occurs (freq > 0). The building block
-    for phrase_search and for phrase clauses inside parsed BooleanQueries
-    (PhraseWeight inside BooleanWeight). boost multiplies the weight
-    value before scoring (Query.setBoost, float discipline)."""
-    spark = searcher.spark
-    spark_t = "float" if dtype == np.float32 else "double"
+def _phrase_query(searcher, terms: list[str], slop: int, ordered: bool,
+                  dtype, max_position: int | None, boost: float):
+    """(tidx, freq_fn, weight_value, cache) of a phrase, or None when a
+    phrase term is absent (no hits)."""
     st = searcher.term_stats(terms)
-    if len(st) < len(set(terms)):   # a term is missing: no hits
-        return spark.createDataFrame([], f"docid long, score {spark_t}")
+    if len(st) < len(set(terms)):
+        return None
     # phrase weight: sum of per-term idfs (PhraseWeight), float discipline
     sum_idf = dtype(0.0)
     for t in terms:
@@ -149,32 +207,60 @@ def phrase_scores(searcher, terms: list[str], slop: int = 0, ordered: bool = Tru
     cache = (dtype(K1) * ((dtype(1.0) - dtype(B_PARAM))
              + (dtype(B_PARAM) * NORM_INV_TABLE.astype(dtype)) / dtype(avgdl))).astype(dtype)
     tidx = {t: i for i, t in enumerate(dict.fromkeys(terms))}
-    piv = _positional_piv(searcher, tidx, required_idx=list(range(len(tidx))))
-
     # term occurrence order in the phrase (duplicate terms share postings)
     order_idx = [tidx[t] for t in terms]
 
-    def score_rows(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            freqs = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(len(pdf)):
-                pls = [np.asarray(pdf[f"p{j}"].iloc[i], dtype=np.int64)
-                       for j in order_idx]
-                if max_position is not None:
-                    pls = [p[p <= max_position] for p in pls]
-                freqs[i] = _phrase_freq(pls, slop, ordered)
-            keep = freqs > 0
-            if not keep.any():
-                continue
-            tf = freqs[keep].astype(dtype)
-            c = cache[pdf["norm"].to_numpy(np.int64)[keep] & 0xFF]
-            score = ((weight_value * tf) / (tf + c)).astype(dtype)
-            yield pd.DataFrame({"docid": pdf["docid"].to_numpy()[keep],
-                                "score": score})
+    def freq_fn(pls):
+        pls = [pls[j] for j in order_idx]
+        if max_position is not None:
+            pls = [p[p <= max_position] for p in pls]
+        return _phrase_freq(pls, slop, ordered)
 
-    return piv.mapInPandas(score_rows, schema=f"docid long, score {spark_t}")
+    return tidx, freq_fn, weight_value, cache
+
+
+def phrase_table(searcher, terms: list[str], slop: int = 0,
+                 ordered: bool = True, dtype=np.float32,
+                 max_position: int | None = None,
+                 boost: float = 1.0) -> pd.DataFrame:
+    """phrase_scores computed in the driver process, as a pandas
+    DataFrame(docid, score)."""
+    q = _phrase_query(searcher, terms, slop, ordered, dtype, max_position,
+                      boost)
+    if q is None:
+        return pd.DataFrame({"docid": np.empty(0, np.int64),
+                             "score": np.empty(0, dtype)})
+    tidx, freq_fn, weight_value, cache = q
+    pdf = _positional_table(searcher, tidx, list(range(len(tidx))))
+    return score_positions(pdf, freq_fn, weight_value, cache, dtype)
+
+
+def _phrase_runs_local(searcher, terms: list[str]) -> bool:
+    return searcher._runs_local(
+        searcher._postings_count(terms, positions=True))
+
+
+def phrase_scores(searcher, terms: list[str], slop: int = 0, ordered: bool = True,
+                  dtype=np.float32, max_position: int | None = None,
+                  boost: float = 1.0) -> DataFrame:
+    """Per-doc phrase scores, pre-top-k: DataFrame(docid, score) with one
+    row per doc where the phrase occurs (freq > 0). The building block
+    for phrase_search and for phrase clauses inside parsed BooleanQueries
+    (PhraseWeight inside BooleanWeight). boost multiplies the weight
+    value before scoring (Query.setBoost, float discipline). Under the
+    searcher's size rule (Σ ttf) the scores are computed here."""
+    spark_t = "float" if dtype == np.float32 else "double"
+    schema = f"docid long, score {spark_t}"
+    if _phrase_runs_local(searcher, terms):
+        return local_frame(searcher.spark, schema, phrase_table(
+            searcher, terms, slop, ordered, dtype, max_position, boost))
+    q = _phrase_query(searcher, terms, slop, ordered, dtype, max_position,
+                      boost)
+    if q is None:
+        return local_frame(searcher.spark, schema)
+    tidx, freq_fn, weight_value, cache = q
+    piv = _positional_piv(searcher, tidx, required_idx=list(range(len(tidx))))
+    return _map_scores(piv, freq_fn, weight_value, cache, dtype)
 
 
 def phrase_search(searcher, terms: list[str], slop: int = 0, ordered: bool = True,
@@ -183,7 +269,11 @@ def phrase_search(searcher, terms: list[str], slop: int = 0, ordered: bool = Tru
     """Top-k DataFrame(docid, score, rank) for a positional query.
     Requires an index built with positions=True. max_position restricts
     matches to positions <= max_position (SpanFirst support)."""
-    from .engine import topk_with_rank
+    if _phrase_runs_local(searcher, terms):
+        ph = phrase_table(searcher, terms, slop, ordered, dtype, max_position)
+        return local_frame(searcher.spark, result_schema(dtype), combine_topk(
+            ph["docid"].to_numpy(), np.zeros(len(ph), np.int64),
+            ph["score"].to_numpy(), 1, k, dtype))
     scored = phrase_scores(searcher, terms, slop=slop, ordered=ordered,
                            dtype=dtype, max_position=max_position)
     return topk_with_rank(scored, k)
@@ -201,34 +291,11 @@ def _bm25_phrase_scorer(searcher, sum_idf, dtype):
     return weight_value, cache
 
 
-def _span_topk(piv, freq_fn, weight_value, cache, k, dtype, spark_t):
+def _span_topk(piv, freq_fn, weight_value, cache, k, dtype):
     """Shared tail: per-doc freq via freq_fn(row_positions) -> BM25-style
     score -> global top-k with (score desc, docid asc) ties."""
-    ncols = len([c for c in piv.columns if c.startswith("p")])
-
-    def score_rows(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            freqs = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(len(pdf)):
-                pls = [None if pdf[f"p{j}"].iloc[i] is None
-                       else np.asarray(pdf[f"p{j}"].iloc[i], dtype=np.int64)
-                       for j in range(ncols)]
-                freqs[i] = freq_fn(pls)
-            keep = freqs > 0
-            if not keep.any():
-                continue
-            tf = freqs[keep].astype(dtype)
-            c = cache[pdf["norm"].to_numpy(np.int64)[keep] & 0xFF]
-            score = ((weight_value * tf) / (tf + c)).astype(dtype)
-            yield pd.DataFrame({"docid": pdf["docid"].to_numpy()[keep],
-                                "score": score})
-
-    from .engine import topk_with_rank
-    scored = piv.mapInPandas(
-        score_rows, schema=f"docid long, score {spark_t}")
-    return topk_with_rank(scored, k)
+    return topk_with_rank(
+        _map_scores(piv, freq_fn, weight_value, cache, dtype), k)
 
 
 def multi_phrase_search(searcher, slots: list[list[str]], slop: int = 0,
@@ -245,14 +312,12 @@ def multi_phrase_search(searcher, slots: list[list[str]], slop: int = 0,
     terms of all slots (MultiPhraseWeight pulls termStatistics for every
     term). Requires positions=True."""
     spark = searcher.spark
-    spark_t = "float" if dtype == np.float32 else "double"
     all_terms = list(dict.fromkeys(t for s in slots for t in s))
     st = searcher.term_stats(all_terms)
     present = set(st["term"]) if len(st) else set()
     # a slot with NO present term can never match (conjunction over slots)
     if any(not any(t in present for t in s) for s in slots):
-        return spark.createDataFrame(
-            [], f"docid long, score {spark_t}, rank long")
+        return local_frame(spark, result_schema(dtype))
     sidx = st.set_index("term")
     sum_idf = dtype(0.0)
     for t in all_terms:
@@ -277,7 +342,7 @@ def multi_phrase_search(searcher, slots: list[list[str]], slop: int = 0,
         return _phrase_freq(union_lists, slop, ordered=ordered,
                             strict=strict)
 
-    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype, spark_t)
+    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype)
 
 
 def span_or(searcher, phrases: list[list[str]], slop: int = 0,
@@ -287,17 +352,12 @@ def span_or(searcher, phrases: list[list[str]], slop: int = 0,
     freq = Σ sub-span freqs; weight = Σ idf over the terms of the
     matchable sub-spans (SpanWeight pulls stats for the whole tree)."""
     spark = searcher.spark
-    spark_t = "float" if dtype == np.float32 else "double"
-    empty = T.StructType([T.StructField("docid", T.LongType()),
-                          T.StructField("score", T.FloatType() if dtype == np.float32
-                                        else T.DoubleType()),
-                          T.StructField("rank", T.LongType())])
     all_terms = list(dict.fromkeys(t for p in phrases for t in p))
     st = searcher.term_stats(all_terms)
     present = set(st["term"]) if len(st) else set()
     live = [p for p in phrases if all(t in present for t in p)]
     if not live:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, result_schema(dtype))
     live_terms = list(dict.fromkeys(t for p in live for t in p))
     sidx = st.set_index("term")
     sum_idf = dtype(0.0)
@@ -318,7 +378,7 @@ def span_or(searcher, phrases: list[list[str]], slop: int = 0,
             total += _phrase_freq(sub, slop, ordered)
         return total
 
-    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype, spark_t)
+    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype)
 
 
 def span_not(searcher, include: str, exclude: str, pre: int = 0,
@@ -331,15 +391,10 @@ def span_not(searcher, include: str, exclude: str, pre: int = 0,
     window before the include span). Freq = surviving occurrences;
     weight = include's idf (the exclusion clause contributes no stats)."""
     spark = searcher.spark
-    spark_t = "float" if dtype == np.float32 else "double"
-    empty = T.StructType([T.StructField("docid", T.LongType()),
-                          T.StructField("score", T.FloatType() if dtype == np.float32
-                                        else T.DoubleType()),
-                          T.StructField("rank", T.LongType())])
     st = searcher.term_stats([include, exclude])
     sidx = st.set_index("term") if len(st) else st
     if not len(st) or include not in sidx.index:
-        return spark.createDataFrame([], empty)
+        return local_frame(spark, result_schema(dtype))
     sum_idf = bm25_idf(int(sidx.loc[include, "df"]), searcher.max_doc,
                        dtype=dtype)
     weight_value, cache = _bm25_phrase_scorer(searcher, dtype(sum_idf), dtype)
@@ -359,7 +414,7 @@ def span_not(searcher, include: str, exclude: str, pre: int = 0,
         bad = (lo < len(exc)) & (exc[np.minimum(lo, len(exc) - 1)] <= inc + post)
         return int((~bad).sum())
 
-    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype, spark_t)
+    return _span_topk(piv, freq_fn, weight_value, cache, k, dtype)
 
 
 def field_masking_span(searcher, clauses: list[tuple[str, str]],

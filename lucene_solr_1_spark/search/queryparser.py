@@ -41,7 +41,7 @@ import re
 from dataclasses import dataclass, field
 
 from ..analysis.standard import analyze_text
-from .engine import BooleanQuery
+from .engine import BooleanQuery, local_frame, result_schema
 
 _TOKEN_RE = re.compile(
     r"""
@@ -444,13 +444,11 @@ def parse_complex_phrase(searcher, q: str, k: int = 10,
             continue
         slots.append(sorted(set(slot)))
     if not slots:
-        spark = searcher.spark
-        return spark.createDataFrame([], "docid long, score float, rank long")
+        return local_frame(searcher.spark, result_schema())
     if any(not s for s in slots):
         # a wildcard/fuzzy slot with no dictionary match can never
         # match (conjunction over slots)
-        spark = searcher.spark
-        return spark.createDataFrame([], "docid long, score float, rank long")
+        return local_frame(searcher.spark, result_schema())
     return multi_phrase_search(searcher, slots, slop=slop, k=k)
 
 
@@ -487,8 +485,7 @@ def parse_surround(searcher, q: str, k: int = 10,
         slot = _expand_slot_token(searcher, tok, max_expansions)
         slots.append(sorted(set(slot)))
     if any(not s for s in slots):
-        spark = searcher.spark
-        return spark.createDataFrame([], "docid long, score float, rank long")
+        return local_frame(searcher.spark, result_schema())
     if ordered:
         # W: SpanNear(ordered, slop=D-1) — strict order, sum of gaps
         return multi_phrase_search(searcher, slots, slop=max(dist - 1, 0),

@@ -40,13 +40,21 @@ never a driver-side dict. A postings row is keyed by its term and first
 docid: a term's rows hold disjoint docid ranges on every view, while
 every NRT row of the include_nrt view has bucket -1.
 
-Both phases decode through the searcher's one postings scan
-(IndexSearcher._scored_candidates): the probe passes every block but the
-best one as skipped, the pruned scan passes the dropped blocks. The
-scan reads the searcher's view and drops deleted docs, as every other
-query does. Block counts (``stats``) are exact and computed on the
-driver from the summary and the dropped table, which the plan collects
-anyway: no accumulator, so no double counting across jobs or retries.
+Both phases decode through the searcher's one postings kernel: the
+probe passes every block but the best one as skipped, the pruned scan
+passes the dropped blocks. The scan reads the searcher's view and drops
+deleted docs, as every other query does. Block counts (``stats``) are
+exact and computed on the driver from the summary and the dropped table,
+which the plan collects anyway: no accumulator, so no double counting
+across jobs or retries.
+
+Under the searcher's size rule (IndexSearcher.LOCAL_POSTINGS) the same
+steps run in the driver process on pandas/Arrow: the grid from
+_explode_blocks, the summary as a groupby, the probe and pruned scans
+through IndexSearcher._scan_local, and _make_keep_kernel once per chunk.
+Each chunk's best block is the one with the highest bound and, on ties,
+the lowest docid, so both executors probe the same blocks, get the same
+θ0 and skip the same blocks.
 
 Exactness proof (the TestBoolean2-style equivalence tests enforce it):
 a doc d in a skipped block B lies in [s, e), so for every other term u
@@ -72,6 +80,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .bm25 import B as B_PARAM
 from .bm25 import K1
+from .engine import combine_topk, local_frame, result_schema, topk_with_rank
 
 # docid chunk for grid partitioning = the doc-bucket of the routing
 # scheme (index/build.py BUCKET_SHIFT): chunks are uniformly doc-dense,
@@ -271,6 +280,48 @@ def _make_keep_kernel(theta0: float, terms: list[str], bc_tables):
     return kernel
 
 
+def _summary(grid: pd.DataFrame) -> pd.DataFrame:
+    """The per-(term, chunk) summary in the driver process: the pandas
+    twin of the Spark aggregate in search_wand (same columns, same
+    (ub desc, fd asc) choice of each chunk's best block)."""
+    g = grid.sort_values(["term", "chunk", "ub", "fd"],
+                         ascending=[True, True, False, True], kind="mergesort")
+    summ = g.groupby(["term", "chunk"], as_index=False, sort=True).agg(
+        min_fd=("fd", "min"), max_fd=("fd", "max"), max_ub=("ub", "max"),
+        nblocks=("fd", "size"), best_fd=("first_docid", "first"),
+        best_bidx=("bidx", "first"))
+    last = grid.loc[grid.groupby(["term", "chunk"])["fd"].idxmax(),
+                    ["term", "chunk", "ub"]]
+    return summ.merge(last.rename(columns={"ub": "last_ub"}),
+                      on=["term", "chunk"])
+
+
+def _probe_blocks(summ: pd.DataFrame) -> list:
+    """(term, row first_docid, bidx) of each term's block with the
+    highest upper bound; ties go to the lowest docid, so both executors
+    probe the same blocks."""
+    probe = []
+    for t, g in summ.sort_values(["term", "chunk"]).groupby("term"):
+        i = int(g["max_ub"].to_numpy().argmax())
+        probe.append((t, int(g["best_fd"].iloc[i]),
+                      int(g["best_bidx"].iloc[i])))
+    return probe
+
+
+def _theta0(probe: pd.DataFrame, k: int) -> float:
+    """θ0 = k-th best per-DOC partial sum over the probed blocks: a doc
+    appearing in several terms' best blocks combines (hub docs), which
+    tightens θ0 well above any single-term score. Still a valid lower
+    bound of the true k-th total (partial sum ≤ total per doc), so the
+    result stays exact. Summed in (docid, tidx) order, so both executors
+    get the same float64 sums."""
+    probe = probe.sort_values(["docid", "tidx"], kind="mergesort")
+    per_doc = (probe["score"].astype(np.float64)
+               .groupby(probe["docid"]).sum().to_numpy())
+    per_doc.sort()
+    return float(per_doc[-k]) if len(per_doc) >= k else 0.0
+
+
 def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
                 stats: dict | None = None) -> DataFrame:
     """Exact OR top-k with block skipping. Returns (docid, score, rank).
@@ -278,55 +329,74 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
     Pass ``stats={}`` to receive skip accounting: stats["blocks_total"]
     .value is the number of postings blocks of the query terms on the
     searcher's view, stats["blocks_kept"].value those the pruned scan
-    decodes. Both are exact counts, known when this returns."""
+    decodes. Both are exact counts, known when this returns.
+
+    Under the searcher's size rule every step runs in the driver
+    process on the same kernels (_explode_blocks, the summary, the
+    probe and pruned scans, _make_keep_kernel per chunk) and the same
+    skip decisions; otherwise each step is a Spark job."""
     spark = searcher.spark
     weights = searcher._weights(terms, dtype=dtype)
     terms = [t for t in dict.fromkeys(terms) if t in weights]
+    blocks_total = blocks_dropped = 0
     if not terms:
         if stats is not None:
             stats["blocks_total"] = SimpleNamespace(value=0)
             stats["blocks_kept"] = SimpleNamespace(value=0)
-        return spark.createDataFrame(
-            [], "docid long, score "
-            + ("float" if dtype == np.float32 else "double") + ", rank long")
+        return local_frame(spark, result_schema(dtype))
     # per-term avgdl: per-field CollectionStatistics on multi-field indexes
     avgdls = {t: float(searcher._avgdl_for(t, dtype=dtype)) for t in terms}
+    local = searcher._runs_local(searcher._postings_count(terms))
+    meta_cols = ["term", "first_docid", "block_first_docid",
+                 "block_max_tf", "block_min_len"]
 
-    # ---- block grid: one row per postings block, computed distributed
-    # from column-pruned meta (blobs never read here) and kept distributed
-    def explode(batches):
-        for b in batches:
-            yield _explode_blocks(b, weights, avgdls)
+    # ---- block grid: one row per postings block, from column-pruned
+    # meta (blobs never read here); kept distributed on the Spark path
+    if local:
+        import pyarrow as pa
+        # every weighted term has postings rows, so meta is not empty
+        meta = pa.concat_tables(
+            [searcher._read_table(p, meta_cols, ("term", terms))
+             for p in searcher._postings_views()]).combine_chunks()
+        grid = _explode_blocks(meta.to_batches()[0], weights,
+                               avgdls).to_pandas()
+        summ = _summary(grid)
+    else:
+        def explode(batches):
+            for b in batches:
+                yield _explode_blocks(b, weights, avgdls)
 
-    grid = (searcher._read_postings()
-            .filter(F.col("term").isin(terms))
-            .select("term", "first_docid", "block_first_docid",
-                    "block_max_tf", "block_min_len")
-            .mapInArrow(explode, schema=_GRID_SCHEMA))
-    grid = grid.persist()
-
-    # ---- ONE distributed aggregation produces both the per-(term, chunk)
-    # cross-chunk summaries (phase B) and the per-term argmax block
-    # (phase A probe): O(terms × chunks) rows to the driver, never the grid
-    summ = (grid.groupBy("term", "chunk")
-            .agg(F.min("fd").alias("min_fd"), F.max("fd").alias("max_fd"),
-                 F.max_by("ub", "fd").alias("last_ub"),
-                 F.max("ub").alias("max_ub"),
-                 F.count("*").alias("nblocks"),
-                 F.max_by(F.struct("first_docid", "bidx"),
-                          "ub").alias("best"))
-            .toPandas())
+        grid = (searcher._read_postings()
+                .filter(F.col("term").isin(terms))
+                .select(*meta_cols)
+                .mapInArrow(explode, schema=_GRID_SCHEMA)).persist()
+        # ONE distributed aggregation produces both the per-(term, chunk)
+        # cross-chunk summaries (phase B) and each chunk's argmax block
+        # (phase A probe): O(terms × chunks) rows to the driver, never
+        # the grid
+        best_key = F.struct("ub", (-F.col("fd")).alias("nfd"))
+        summ = (grid.groupBy("term", "chunk")
+                .agg(F.min("fd").alias("min_fd"), F.max("fd").alias("max_fd"),
+                     F.max_by("ub", "fd").alias("last_ub"),
+                     F.max("ub").alias("max_ub"),
+                     F.count("*").alias("nblocks"),
+                     F.max_by("first_docid", best_key).alias("best_fd"),
+                     F.max_by("bidx", best_key).alias("best_bidx"))
+                .toPandas())
     blocks_total = int(summ["nblocks"].sum())
-    probe = []
-    for t, g in summ.groupby("term"):
-        best = g["best"].iloc[int(g["max_ub"].to_numpy().argmax())]
-        probe.append((t, int(best["first_docid"]), int(best["bidx"])))
+    probe = _probe_blocks(summ)
 
-    theta0 = 0.0
-    if probe:
-        # decode only the probe blocks: the pushed-down row filter reads
-        # ~|terms| rows' blobs (parquet min/max prunes both columns), the
-        # skip column drops every other block of those rows
+    # ---- phase A: decode only the probe blocks: the pushed-down row
+    # filter reads ~|terms| rows' blobs (parquet min/max prunes both
+    # columns), the skip drops every other block of those rows
+    if local:
+        nblk = grid.groupby(["term", "first_docid"]).size()
+        probe_tbl = searcher._scan_local(
+            weights, dtype, rows=[(t, fd) for t, fd, _ in probe],
+            skip={(t, fd): [i for i in range(int(nblk[(t, fd)])) if i != b]
+                  for t, fd, b in probe})
+        probe_pdf = probe_tbl.select(["docid", "tidx", "score"]).to_pandas()
+    else:
         where, best = None, F.lit(-1)
         for t, fd, bidx in probe:
             cond = (F.col("term") == t) & (F.col("first_docid") == fd)
@@ -336,49 +406,54 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
                         lambda i: i != best)
         probe_pdf = (searcher._scored_candidates(terms, dtype=dtype,
                                                  where=where, skip=skip)
-                     .select("docid", "score").toPandas())
-        # θ0 = k-th best per-DOC partial sum over the probed blocks: a doc
-        # appearing in several terms' best blocks combines (hub docs), which
-        # tightens θ0 well above any single-term score. Still a valid lower
-        # bound of the true k-th total (partial sum ≤ total per doc), so the
-        # result stays exact.
-        per_doc = (probe_pdf["score"].astype(np.float64)
-                   .groupby(probe_pdf["docid"]).sum().to_numpy())
-        per_doc.sort()
-        if len(per_doc) >= k:
-            theta0 = float(per_doc[-k])
+                     .select("docid", "tidx", "score").toPandas())
+    theta0 = _theta0(probe_pdf, k)
 
-    # ---- phase B: distributed docid-aligned keep sets ----
-    dropped, blocks_dropped = None, 0
+    # ---- phase B: docid-aligned keep sets, one kernel call per chunk ----
+    dropped = None
     if theta0 > 0.0:
-        bc_tables = spark.sparkContext.broadcast(_chunk_tables(summ))
-        kernel = _make_keep_kernel(theta0, terms, bc_tables)
-        drop_df = (grid.groupBy("chunk")
-                   .applyInPandas(lambda pdf: kernel(pdf),
-                                  schema="term string, first_docid long, "
-                                         "bidx int"))
-        dropped = (drop_df.groupBy("term", "first_docid")
-                   .agg(F.collect_list("bidx").alias("skip"))
-                   .persist())
-        # materialize (small: one row per pruned postings row) so the grid
-        # scan isn't re-run by the main job; one aggregate gives both
-        # whether any block fell below θ (else skip the join entirely) and
-        # how many did
-        n_rows, n_dropped = dropped.agg(
-            F.count("*"), F.sum(F.size("skip"))).first()
-        if n_rows == 0:
-            dropped.unpersist()
-            dropped = None
+        tables = _chunk_tables(summ)
+        if local:
+            kernel = _make_keep_kernel(theta0, terms,
+                                       SimpleNamespace(value=tables))
+            drops = pd.concat([kernel(pdf) for _, pdf in grid.groupby("chunk")],
+                              ignore_index=True)
+            blocks_dropped = len(drops)
+            dropped = {key: g.tolist() for key, g in
+                       drops.groupby(["term", "first_docid"])["bidx"]}
         else:
-            blocks_dropped = int(n_dropped)
-    grid.unpersist()
+            kernel = _make_keep_kernel(
+                theta0, terms, spark.sparkContext.broadcast(tables))
+            drop_df = (grid.groupBy("chunk")
+                       .applyInPandas(lambda pdf: kernel(pdf),
+                                      schema="term string, first_docid long, "
+                                             "bidx int"))
+            dropped = (drop_df.groupBy("term", "first_docid")
+                       .agg(F.collect_list("bidx").alias("skip"))
+                       .persist())
+            # materialize (small: one row per pruned postings row) so the
+            # grid scan isn't re-run by the main job; one aggregate gives
+            # both whether any block fell below θ (else skip the join
+            # entirely) and how many did
+            n_rows, n_dropped = dropped.agg(
+                F.count("*"), F.sum(F.size("skip"))).first()
+            if n_rows == 0:
+                dropped.unpersist()
+                dropped = None
+            else:
+                blocks_dropped = int(n_dropped)
     if stats is not None:
         stats["blocks_total"] = SimpleNamespace(value=blocks_total)
         stats["blocks_kept"] = SimpleNamespace(
             value=blocks_total - blocks_dropped)
 
+    if local:
+        cands = searcher._scan_local(weights, dtype, skip=dropped)
+        return local_frame(spark, result_schema(dtype), combine_topk(
+            cands.column("docid").to_numpy(), cands.column("tidx").to_numpy(),
+            cands.column("score").to_numpy(), len(terms), k, dtype))
+    grid.unpersist()
     cands = searcher._scored_candidates(terms, dtype=dtype, skip=dropped)
-    from .engine import topk_with_rank
     pivoted = (cands.groupBy("docid")
                .pivot("tidx", list(range(len(terms))))
                .agg(F.first("score")))

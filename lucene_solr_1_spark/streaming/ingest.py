@@ -232,7 +232,7 @@ def compact(spark: SparkSession, root: str, out_partitions: int = 32) -> None:
     if not have_nrt and not have_tombs:
         return
     searcher = IndexSearcher(spark, root, include_nrt=True)
-    excl = searcher._excluded_docids()
+    excl = searcher._excluded_frame()
 
     # docs: base + nrt, minus tombstoned
     docs = spark.read.parquet(paths.docs)

@@ -71,3 +71,71 @@ def test_full_build_and_search_on_file_scheme(spark, tmp_path):
     # does not duplicate data
     build_index(spark, spark.createDataFrame(docs_pdf), root, num_segments=4)
     assert s.max_doc == IndexSearcher(spark, root).max_doc
+
+
+# -- analyzer artifact caches ------------------------------------------------
+
+def _rbbi_source():
+    from lucene_solr_1_spark.analysis import icuseg
+    return icuseg.rule_sources()["KeywordTokenizer"]
+
+
+def _compile_uncached(source):
+    from lucene_solr_1_spark.analysis import rbbi
+    return rbbi.compile_rules.__wrapped__(source)   # past the lru_cache
+
+
+def _plant(path):
+    import pickle
+    with open(path, "wb") as f:
+        pickle.dump("planted", f)
+
+
+def test_artifact_cache_ignores_the_old_shared_path(tmp_path, monkeypatch):
+    """A pickle planted at the old world-writable temp-dir name is never
+    loaded; the cache lives in a private per-uid directory instead."""
+    import hashlib
+    import stat
+    import tempfile
+
+    from lucene_solr_1_spark.analysis.rbbi import BreakRules
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = _rbbi_source()
+    h = hashlib.md5(src.encode("utf-8")).hexdigest()[:20]
+    _plant(os.path.join(str(tmp_path), f"rbbi_dfa_{h}.pkl"))
+    assert isinstance(_compile_uncached(src), BreakRules)
+    d = fsio.artifact_cache_dir()
+    assert d == os.path.join(str(tmp_path), f"lucene_solr_1_spark-{os.getuid()}")
+    assert stat.S_IMODE(os.stat(d).st_mode) == 0o700
+    from lucene_solr_1_spark import __version__
+    assert os.listdir(d) == [f"rbbi_dfa_{__version__}_{h}.pkl"]
+    # the private copy is what a second compile loads
+    assert isinstance(_compile_uncached(src), BreakRules)
+
+
+def test_artifact_cache_refuses_an_unsafe_directory(tmp_path, monkeypatch):
+    """A cache directory writable by others, or owned by someone else, is
+    not used: the analyzer recompiles and nothing is loaded from it."""
+    import hashlib
+    import tempfile
+
+    from lucene_solr_1_spark import __version__
+    from lucene_solr_1_spark.analysis.rbbi import BreakRules
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    src = _rbbi_source()
+    h = hashlib.md5(src.encode("utf-8")).hexdigest()[:20]
+    d = os.path.join(str(tmp_path), f"lucene_solr_1_spark-{os.getuid()}")
+    os.makedirs(d)
+    os.chmod(d, 0o777)
+    planted = os.path.join(d, f"rbbi_dfa_{__version__}_{h}.pkl")
+    _plant(planted)
+    assert fsio.artifact_cache_dir() is None
+    assert isinstance(_compile_uncached(src), BreakRules)
+    os.chmod(d, 0o700)
+    assert fsio.artifact_cache_dir() == d
+    # the same directory, seen by another uid, belongs to someone else
+    uid = os.getuid()
+    monkeypatch.setattr(os, "getuid", lambda: uid + 1)
+    os.rename(d, os.path.join(str(tmp_path), f"lucene_solr_1_spark-{uid + 1}"))
+    assert fsio.artifact_cache_dir() is None
+    assert isinstance(_compile_uncached(src), BreakRules)

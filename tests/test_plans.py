@@ -39,7 +39,14 @@ def test_term_filter_pushed_to_postings_scan(spark, built):
     assert "ReadSchema" in plan and "blob" not in plan.split("ReadSchema")[1][:300]
 
 
-def test_topk_is_take_ordered(spark, built):
+@pytest.fixture
+def spark_executor(monkeypatch):
+    """Queries of any size run the Spark plan (the in-process executor
+    takes every query on an index this small)."""
+    monkeypatch.setattr(IndexSearcher, "LOCAL_POSTINGS", 0)
+
+
+def test_topk_is_take_ordered(spark, built, spark_executor):
     topk = built.search(["alpha"], "OR", k=10)
     plan = _plan(topk)
     assert "TakeOrderedAndProject" in plan, plan[:1200]
@@ -74,7 +81,7 @@ def test_analyzer_expr_stays_jvm_side(spark, built):
     assert "PythonUDF" not in plan and "ArrowEval" not in plan and "MapInPandas" not in plan
 
 
-def test_single_term_search_has_no_shuffle(spark, built):
+def test_single_term_search_has_no_shuffle(spark, built, spark_executor):
     """Single-term top-k = scan -> score -> TakeOrderedAndProject; the
     combine shuffle (groupBy pivot) must be absent."""
     topk = built.search(["alpha"], "OR", k=10)

@@ -161,6 +161,8 @@ def test_wand_no_full_metadata_driver_collect(spark, built, monkeypatch):
 
     monkeypatch.setattr(SDF, "toPandas", tp)
     monkeypatch.setattr(SDF, "collect", col)
+    # the Spark executor: the in-process one holds the grid by design
+    monkeypatch.setattr(IndexSearcher, "LOCAL_POSTINGS", 0)
     got = searcher.search_wand(heads, k=5, force=True).toPandas()
     assert len(got) == 5
     # probe decode <= terms * 128 rows; summaries <= terms * chunks;
@@ -225,6 +227,9 @@ def test_wand_block_counts_are_exact(spark, tmp_root, monkeypatch):
         return orig(self, *a, where=where, skip=skip, **kw)
 
     monkeypatch.setattr(IndexSearcher, "_scored_candidates", spy)
+    # the Spark executor's pruned scan (the in-process one is pinned to
+    # it in test_two_executors)
+    monkeypatch.setattr(IndexSearcher, "LOCAL_POSTINGS", 0)
     stats = {}
     res = s.search_wand(terms, k=1, stats=stats)
     total, kept = stats["blocks_total"].value, stats["blocks_kept"].value
