@@ -133,6 +133,20 @@ def main():
         t0 = time.time()
         searcher.search(terms, op, k=10).collect()
         queries[name] = round(time.time() - t0, 3)
+    # an OR of head terms past IndexSearcher.LOCAL_POSTINGS, so the Spark
+    # executor is timed too (when the corpus is large enough to reach it)
+    head_st = (searcher.term_stats([str(t) for t in VOCAB[:128]])
+               .sort_values(["df", "term"], ascending=[False, True]))
+    heads, n_post = [], 0
+    for t, df in zip(head_st["term"], head_st["df"]):
+        if n_post > IndexSearcher.LOCAL_POSTINGS:
+            break
+        heads.append(t)
+        n_post += int(df)
+    if n_post > IndexSearcher.LOCAL_POSTINGS:
+        t0 = time.time()
+        searcher.search(heads, "OR", k=10).collect()
+        queries["engine_or_spark_executor"] = round(time.time() - t0, 3)
     t0 = time.time()
     searcher.search_wand([str(VOCAB[1]), str(VOCAB[200]), str(VOCAB[3000])],
                          k=10).collect()

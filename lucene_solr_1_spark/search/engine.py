@@ -391,14 +391,17 @@ class IndexSearcher:
 
     # Queries reading at most this many postings (Σ df of their terms,
     # Σ ttf when positions are read) run in the driver process; bigger
-    # ones run the Spark plan. The crossover, measured on a 4-core host
-    # (100k-doc gen_docs index, 8 segments, warm medians): the Spark plan
-    # costs ~0.8 s before its first posting (0.72-0.88 s for 3k-99k
-    # posting terms); in-process, a term of 99k postings takes 0.15 s and
-    # a 16-term OR of 1.06M postings 0.83 s (Spark: 3.1 s). At 1 << 20
-    # postings the in-process work alone reaches the Spark plan's fixed
-    # cost; above it the Spark plan, whose decode scales with cores,
-    # keeps the driver's memory bounded.
+    # ones run the Spark plan. The bound is on driver memory, not time:
+    # on a 4-core host (100k-doc gen_docs index, 8 segments, warm) the
+    # in-process executor beat the Spark plan at every size measured,
+    # 0.16 vs 0.79 s at 99k postings, 0.66 vs 3.07 s at 1.06M (16-term
+    # OR), 1.30 vs 4.83 s at 1.92M (48 terms), so no time crossover
+    # exists below 2M. Its peak RSS grew by 56 MB at 99k postings,
+    # 149 MB at 1.06M, 216 MB at 1.92M and 604 MB at 3.97M (512 terms,
+    # where the dense doc x clause matrix dominates). 1 << 20 keeps one
+    # query's driver peak near 150 MB, a sixth of the 1 GB Spark lets a
+    # job return to the driver (spark.driver.maxResultSize); above it
+    # the Spark plan decodes in executor tasks.
     LOCAL_POSTINGS = 1 << 20
 
     def __init__(self, spark: SparkSession, root: str, include_nrt: bool = False,
@@ -903,10 +906,14 @@ class IndexSearcher:
                  (F.col("docid") > F.lit(int(a_docid)))))
         return topk_with_rank(apply_filter(scored), q.k)
 
-    # below this many candidate postings the θ-probe + keep-kernel jobs
-    # (~2-3 extra Spark jobs) cost more than decoding everything — the
-    # cost-based scorer pick BooleanWeight does per-clause
-    # (BooleanWeight.java scorer cost); identical results either way
+    # search_wand runs block-max WAND only where it is the cheaper plan:
+    # on the Spark executor, from this many candidate postings on. Below
+    # it the θ-probe + keep-kernel jobs (~2-3 extra Spark jobs) cost more
+    # than decoding everything; in the driver, the exhaustive plan beat
+    # the in-process WAND at every size measured (100k-doc gen_docs
+    # index: 0.16 vs 0.19 s at 99k postings, 0.66 vs 1.14 s at 1.06M,
+    # 1.30 vs 2.95 s at 1.92M) — the cost-based scorer pick
+    # BooleanWeight does per-clause; identical results either way
     WAND_MIN_POSTINGS = 1 << 21
 
     def search_wand(self, terms: list[str] | str, k: int = 10,
@@ -915,17 +922,19 @@ class IndexSearcher:
         """Block-max WAND OR top-k (see search/wand.py): exact results,
         block decode skipped where upper bounds can't reach θ.
         stats={} receives the exact blocks_total/blocks_kept counts.
-        Cost-based dispatch: under WAND_MIN_POSTINGS total candidate
-        postings the exact disjunction plan runs instead (same results,
-        fewer jobs); force=True always takes the WAND path (tests,
-        skip-rate measurement)."""
+        Cost-based dispatch: the exact disjunction plan runs instead
+        (same results, less work) unless the query takes the Spark
+        executor with at least WAND_MIN_POSTINGS candidate postings.
+        stats={} or force=True always take the WAND path (tests,
+        skip-rate measurement); under LOCAL_POSTINGS they are the only
+        callers of the in-process WAND."""
         from .wand import search_wand
         if isinstance(terms, str):
             terms = analyze_text(terms)
         terms = list(terms)
         if not force and stats is None:
-            st = self.term_stats(terms)
-            if not len(st) or int(st["df"].sum()) < self.WAND_MIN_POSTINGS:
+            n = self._postings_count(terms)
+            if n < self.WAND_MIN_POSTINGS or self._runs_local(n):
                 return self.search(terms, "OR", k, dtype=dtype)
         return search_wand(self, terms, k=k, dtype=dtype, stats=stats)
 

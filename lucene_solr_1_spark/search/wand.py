@@ -54,7 +54,10 @@ _explode_blocks, the summary as a groupby, the probe and pruned scans
 through IndexSearcher._scan_local, and _make_keep_kernel once per chunk.
 Each chunk's best block is the one with the highest bound and, on ties,
 the lowest docid, so both executors probe the same blocks, get the same
-θ0 and skip the same blocks.
+θ0 and skip the same blocks. Only ``stats``/``force`` callers reach the
+in-process WAND: in the driver the exhaustive plan is faster at every
+size measured (see IndexSearcher.WAND_MIN_POSTINGS), so
+IndexSearcher.search_wand sends every other small query there.
 
 Exactness proof (the TestBoolean2-style equivalence tests enforce it):
 a doc d in a skipped block B lies in [s, e), so for every other term u
@@ -338,6 +341,9 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
     spark = searcher.spark
     weights = searcher._weights(terms, dtype=dtype)
     terms = [t for t in dict.fromkeys(terms) if t in weights]
+    # clause index = position among the distinct present terms, as the
+    # Spark path's final scan of ``terms`` numbers them
+    weights = {t: (i, weights[t][1]) for i, t in enumerate(terms)}
     blocks_total = blocks_dropped = 0
     if not terms:
         if stats is not None:

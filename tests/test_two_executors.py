@@ -110,12 +110,21 @@ def test_executors_bitwise_equal(spark, view, monkeypatch, case):
     assert got[0] and got[0] == got[UNBOUNDED]
 
 
-def test_wand_executors_equal_with_equal_counters(spark, view, monkeypatch):
+@pytest.mark.parametrize("terms", [
+    ["alpha", "beta"],
+    # an absent term ahead of present ones, and a repeated term: clause
+    # indices are positions among the distinct present terms
+    ["zzabsent", "alpha", "beta"],
+    ["alpha", "alpha", "beta"],
+    "alpha alpha beta",
+], ids=["two_terms", "absent_first", "repeated", "repeated_string"])
+def test_wand_executors_equal_with_equal_counters(spark, view, monkeypatch,
+                                                  terms):
     got = {}
     for budget in (0, UNBOUNDED):
         s = _searcher(spark, view, budget, monkeypatch)
         stats = {}
-        rows = _rows(s.search_wand(["alpha", "beta"], k=1, stats=stats))
+        rows = _rows(s.search_wand(terms, k=1, stats=stats))
         got[budget] = (rows, stats["blocks_total"].value,
                        stats["blocks_kept"].value)
     assert got[0] == got[UNBOUNDED]

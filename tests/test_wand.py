@@ -189,6 +189,30 @@ def test_wand_cost_based_bypass(spark, built, monkeypatch):
     assert got["docid"].tolist() == exp["docid"].tolist()
 
 
+def test_wand_runs_only_on_the_spark_executor(spark, built, monkeypatch):
+    """Past WAND_MIN_POSTINGS, search_wand takes the WAND path only when
+    the query runs the Spark plan; in the driver the exhaustive plan is
+    the cheaper one at every size."""
+    oracle, searcher = built
+    heads = oracle.term_stats.nlargest(2, "df")["term"].tolist()
+    import lucene_solr_1_spark.search.wand as wand_mod
+    calls = []
+    real = wand_mod.search_wand
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+    monkeypatch.setattr(wand_mod, "search_wand", spy)
+    monkeypatch.setattr(IndexSearcher, "WAND_MIN_POSTINGS", 0)
+    exp = searcher.search(heads, "OR", 5).toPandas()
+    for budget, wand_calls in ((1 << 62, 0), (0, 1)):
+        monkeypatch.setattr(IndexSearcher, "LOCAL_POSTINGS", budget)
+        calls.clear()
+        got = searcher.search_wand(heads, k=5).toPandas()
+        assert len(calls) == wand_calls, budget
+        assert got["docid"].tolist() == exp["docid"].tolist()
+
+
 def test_wand_block_counts_are_exact(spark, tmp_root, monkeypatch):
     """stats["blocks_total"] is the number of postings blocks of the
     query terms on the searcher's view, and blocks_kept is that total
