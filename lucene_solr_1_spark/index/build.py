@@ -24,7 +24,10 @@ Stage 2  global merge (= SegmentMerger, ref: index/SegmentMerger.java:
          terms collapse to one row. Output is a postings table
          range-partitioned and sorted by term (parquet min/max stats
          play the role of the .tip FST term index,
-         ref: codecs/BlockTreeTermsWriter.java:182-187).
+         ref: codecs/BlockTreeTermsWriter.java:182-187). The merge,
+         merge_postings_df, is the one every NRT compaction runs too;
+         its kernel drops deleted docids as SegmentMerger applies
+         liveDocs.
 
 All heavy compute is vectorized NumPy inside mapInPandas/applyInPandas;
 every relational step (range partition, group, agg, sort) is stock
@@ -566,9 +569,31 @@ def build_segments(spark: SparkSession, out: IndexPaths,
 
 # ------------------------------------------------------------- stage 2
 
-def _merge_group_block(pdf: pd.DataFrame,
-                       pack_fn=pack_postings_batch) -> pd.DataFrame:
-    """Merge MANY (term, bucket) groups in one vectorized pass.
+_NO_DELETES = np.empty(0, np.int64)
+
+
+def _holds_deleted(lo: np.ndarray, hi: np.ndarray,
+                   deleted: np.ndarray) -> np.ndarray:
+    """Per span [lo, hi]: whether the sorted docid array `deleted` holds
+    a docid inside it (lo == hi tests membership)."""
+    return (np.searchsorted(deleted, lo)
+            < np.searchsorted(deleted, hi, side="right"))
+
+
+def _position_gather(tf: np.ndarray, sel: np.ndarray) -> np.ndarray:
+    """Flat-position indices of postings `sel`, in that order, given every
+    posting's tf (positions are stored posting after posting)."""
+    starts = np.concatenate(([0], np.cumsum(tf)[:-1]))[sel]
+    lens = tf[sel]
+    return (np.repeat(starts - (np.cumsum(lens) - lens), lens)
+            + np.arange(int(lens.sum())))
+
+
+def _merge_group_block(pdf: pd.DataFrame, pack_fn=pack_postings_batch,
+                       deleted: np.ndarray = _NO_DELETES) -> pd.DataFrame:
+    """Merge MANY (term, bucket) groups in one vectorized pass, dropping
+    the docids in the sorted array `deleted` (SegmentMerger applying
+    liveDocs while it copies postings).
 
     Input rows are sorted by (term, bucket, first_docid) with whole
     groups present; rows of a group carry disjoint docid ranges. Single-
@@ -588,6 +613,12 @@ def _merge_group_block(pdf: pd.DataFrame,
     that fail the disjointness probe (arbitrary merge_postings_df
     inputs) fall back to decode + batch re-pack.
 
+    Deletes: a group with a row whose [first_docid, last_docid] span
+    holds a deleted docid takes the decode + re-pack path with a keep
+    mask (positions gathered by the same mask); a group whose postings
+    are all deleted yields no row. Every other group takes the path it
+    takes without deletes, byte for byte.
+
     A multi-row group must be uniformly positional or not: a group that
     mixes null and non-null pos_blob raises ValueError, since joining
     only the non-null blobs would shift positions onto other postings."""
@@ -595,10 +626,12 @@ def _merge_group_block(pdf: pd.DataFrame,
     new = np.concatenate(([True], keys[1:] != keys[:-1]))
     gstarts = np.flatnonzero(new)
     gsizes = np.diff(np.append(gstarts, len(keys)))
+    g_hit = np.logical_or.reduceat(_holds_deleted(
+        pdf["first_docid"].to_numpy(np.int64),
+        pdf["last_docid"].to_numpy(np.int64), deleted), gstarts)
 
     out_rows = []
-    multi_d, multi_t, multi_n, multi_pb, multi_meta = [], [], [], [], []
-    multi_pos: list[bool] = []
+    repacked = []   # (term, bucket, docids, tfs, norms, pos_blob)
     blobs = pdf["blob"].to_numpy(object)
     pos_present = pdf["pos_blob"].notna().to_numpy()
     cols = {c: pdf[c].to_numpy(object) for c in
@@ -607,7 +640,7 @@ def _merge_group_block(pdf: pd.DataFrame,
              "pos_blob", "last_docid")}
     for gi, lo in enumerate(gstarts):
         sz = int(gsizes[gi])
-        if sz == 1:
+        if sz == 1 and not g_hit[gi]:
             out_rows.append((cols["term"][lo], int(cols["bucket"][lo]),
                              int(cols["first_docid"][lo]),
                              int(cols["df"][lo]), int(cols["ttf"][lo]),
@@ -632,7 +665,7 @@ def _merge_group_block(pdf: pd.DataFrame,
                               np.int64, sz)
         g_last = np.fromiter((cols["last_docid"][r] for r in rng),
                              np.int64, sz)
-        if np.all(g_first[1:] > g_last[:-1]):
+        if not g_hit[gi] and np.all(g_first[1:] > g_last[:-1]):
             # block-copy fast path: ranges disjoint + ordered
             g_blobs = [bytes(blobs[r]) for r in rng]
             base = np.concatenate(
@@ -661,66 +694,54 @@ def _merge_group_block(pdf: pd.DataFrame,
                              offs, bfd, bn, bmt, bml,
                              pos_blob, int(g_last[-1])))
             continue
-        for r in range(lo, lo + sz):
-            d, t, nb = unpack_postings(
-                np.frombuffer(blobs[r], np.uint8),
-                np.asarray(cols["block_offset"][r], np.int64),
-                np.asarray(cols["block_first_docid"][r], np.int64),
-                np.asarray(cols["block_n"][r], np.int64))
-            multi_d.append(d); multi_t.append(t); multi_n.append(nb)
-            multi_pb.append(cols["pos_blob"][r])
-        multi_meta.append((cols["term"][lo], int(cols["bucket"][lo])))
-        multi_pos.append(bool(g_pos[0]))
-    if multi_meta:
-        d = np.concatenate(multi_d); t = np.concatenate(multi_t)
-        nb = np.concatenate(multi_n)
+        # decode + re-pack: rows interleave or hold deleted docids
+        parts = [unpack_postings(np.frombuffer(blobs[r], np.uint8),
+                                 np.asarray(cols["block_offset"][r], np.int64),
+                                 np.asarray(cols["block_first_docid"][r], np.int64),
+                                 np.asarray(cols["block_n"][r], np.int64))
+                 for r in rng]
+        d, t, nb = (np.concatenate(x) for x in zip(*parts))
         # rows arrive ordered by first_docid with disjoint ranges, but an
         # in-group argsort keeps merge correct for ANY input layout
-        msz = gsizes[gsizes > 1]
-        rb = np.concatenate(([0], np.cumsum(msz)))
-        per_row = np.array([len(x) for x in multi_d], dtype=np.int64)
-        gb_pre = np.concatenate(([0], np.cumsum(np.add.reduceat(per_row, rb[:-1]))))
-        perms: dict[int, np.ndarray] = {}
-        for gi in range(len(msz)):
-            lo, hi = gb_pre[gi], gb_pre[gi + 1]
-            if not np.all(np.diff(d[lo:hi]) > 0):
-                o = np.argsort(d[lo:hi], kind="stable")
-                perms[gi] = o.copy()
-                d[lo:hi] = d[lo:hi][o]
-                nb[lo:hi] = nb[lo:hi][o]
-                t[lo:hi] = t[lo:hi][o]
-        gbounds = gb_pre
-        packed = pack_fn(gbounds, d, t, nb)
-        for i, tp in enumerate(packed):
-            lo, hi = gbounds[i], gbounds[i + 1]
-            pos_blob = None
-            if multi_pos[i]:
-                # position deltas reset at every posting, so merged blob =
-                # byte concat of row blobs — unless the group was reordered
-                row_lo, row_hi = int(rb[i]), int(rb[i + 1])
-                if i not in perms:
-                    pos_blob = b"".join(bytes(multi_pb[r])
-                                        for r in range(row_lo, row_hi))
-                else:
-                    flats = [decode_positions(bytes(multi_pb[r]), multi_t[r])[0]
-                             for r in range(row_lo, row_hi)]
-                    flat = np.concatenate(flats)
-                    pre_t = np.concatenate([multi_t[r] for r in range(row_lo, row_hi)])
-                    psb = np.concatenate(([0], np.cumsum(pre_t)))
-                    o = perms[i]
-                    gather = np.concatenate([np.arange(psb[j], psb[j + 1]) for j in o])
-                    pos_blob = pack_positions_batch(
-                        np.array([0, hi - lo]), t[lo:hi], flat[gather])[0]
-            out_rows.append((multi_meta[i][0], multi_meta[i][1], int(d[lo]), tp.n,
-                             int(t[lo:hi].sum(dtype=np.int64)), int(t[lo:hi].max()),
+        sel = (None if np.all(np.diff(d) > 0)
+               else np.argsort(d, kind="stable"))
+        if g_hit[gi]:
+            live = ~_holds_deleted(d, d, deleted)
+            sel = np.flatnonzero(live) if sel is None else sel[live[sel]]
+        pos_blob = None
+        if g_pos[0]:
+            # position deltas reset at every posting, so merged blob =
+            # byte concat of row blobs — unless postings were reordered
+            # or dropped
+            if sel is None:
+                pos_blob = b"".join(bytes(cols["pos_blob"][r]) for r in rng)
+            else:
+                flat = np.concatenate([
+                    decode_positions(bytes(cols["pos_blob"][r]), p[1])[0]
+                    for r, p in zip(rng, parts)])
+                pos_blob = pack_positions_batch(
+                    np.array([0, len(sel)]), t[sel],
+                    flat[_position_gather(t, sel)])[0]
+        if sel is not None:
+            d, t, nb = d[sel], t[sel], nb[sel]
+        if len(d):
+            repacked.append((cols["term"][lo], int(cols["bucket"][lo]),
+                             d, t, nb, pos_blob))
+    if repacked:
+        bounds = np.concatenate(([0], np.cumsum([len(g[2]) for g in repacked])))
+        packed = pack_fn(bounds, *(np.concatenate([g[k] for g in repacked])
+                                   for k in (2, 3, 4)))
+        for (term, bucket, d, t, _, pos_blob), tp in zip(repacked, packed):
+            out_rows.append((term, bucket, int(d[0]), tp.n,
+                             int(t.sum(dtype=np.int64)), int(t.max()),
                              tp.blob, tp.block_offset.tolist(),
                              tp.block_first_docid.tolist(), tp.block_n.tolist(),
                              tp.block_max_tf.tolist(), tp.block_min_len.tolist(),
-                             pos_blob, int(d[hi - 1])))
+                             pos_blob, int(d[-1])))
     return pd.DataFrame(out_rows, columns=[f.name for f in MERGED_SCHEMA.fields])
 
 
-def _merge_stream(batches, pack_fn=pack_postings_batch):
+def _merge_stream(batches, pack_fn=pack_postings_batch, deleted=_NO_DELETES):
     """Streaming group merge over sorted Arrow batches: a (term, bucket)
     group may span batch boundaries; carry the trailing group forward."""
     buf: pd.DataFrame | None = None
@@ -734,31 +755,48 @@ def _merge_stream(batches, pack_fn=pack_postings_batch):
         suffix_start = int(np.flatnonzero(not_last).max()) + 1 if not_last.any() else 0
         buf = pdf.iloc[suffix_start:]
         if suffix_start:
-            yield _merge_group_block(pdf.iloc[:suffix_start], pack_fn)
+            yield _merge_group_block(pdf.iloc[:suffix_start], pack_fn, deleted)
     if buf is not None and len(buf):
-        yield _merge_group_block(buf, pack_fn)
+        yield _merge_group_block(buf, pack_fn, deleted)
 
 
 def merge_postings_df(rows: DataFrame, num_segments: int,
                       out_partitions: int = 32,
-                      postings_format: str = "lucene41") -> DataFrame:
-    """The salted (term, bucket) merge over an arbitrary DataFrame of
-    segment-shaped postings rows (same kernel merge_segments drives from
-    the segments table) — used by tiered compaction, which merges only
-    the touched term-buckets' rows plus the folded NRT rows instead of
-    the whole index (ref: index/TieredMergePolicy.java:75-86).
+                      postings_format: str = "lucene41", *,
+                      deleted: np.ndarray | None = None) -> DataFrame:
+    """The salted (term, bucket) merge over a DataFrame of segment-shaped
+    postings rows — the one merge every writer runs: the base build
+    (merge_segments), the tiered fold and expungeDeletes (the segments
+    rows plus the folded NRT rows) and the gen-to-gen consolidation.
 
-    Input columns: POSTINGS row columns minus `seg` (term, first_docid,
-    df, ttf, max_tf, blob, block_*, pos_blob, last_docid). Per-term rows
-    must carry disjoint docid ranges. Output: MERGED_SCHEMA."""
+    Input columns: POSTINGS row columns (`seg` is ignored): term,
+    first_docid, df, ttf, max_tf, blob, block_*, pos_blob, last_docid.
+    Per-term rows must carry disjoint docid ranges. `deleted` is a
+    sorted int64 docid array (a searcher's deleted-docs snapshot); those
+    postings are dropped inside the merge kernel. Output: MERGED_SCHEMA.
+
+    Head-term fan-out: nsalts = ceil(df_total / TARGET). Only Zipf-HEAD
+    terms (df_total > TARGET) need a salt count — a set that stays tiny
+    and broadcastable at ANY corpus scale, so the packed-blob table never
+    sort-merge-joins against the full vocabulary; tail terms default to
+    nsalts=1 via the left join's null. The heads pre-pass aggregates
+    ONLY (term, df), so parquet column pruning keeps the blobs unread."""
     totals = (rows.groupBy("term").agg(F.sum("df").alias("df_total"))
               .filter(F.col("df_total") > TARGET_ROW_POSTINGS))
     nsalts = F.greatest(F.lit(1), F.ceil(
         F.coalesce(F.col("df_total"), F.lit(1)) / F.lit(TARGET_ROW_POSTINGS)))
     with_tot = rows.join(F.broadcast(totals), "term", "left")
-    # same route-bucket salt rule as merge_segments: monotone in the
-    # route bucket, so recomputed buckets keep a term's disjoint-ordered
-    # rows disjoint and ordered (gen buckets >= 2^18 land far above base)
+    # salt bucket from the docid ROUTE bucket (docid >> BUCKET_SHIFT),
+    # NOT the file/segment index: files are hash-partitioned by route
+    # bucket, so seg order is unrelated to docid order — seg-run buckets
+    # would interleave a salted head term's docid ranges (found by
+    # CheckIndex on a 4M-doc corpus, the first corpus with df > TARGET).
+    # Route-bucket runs are docid-contiguous and the rule is monotone in
+    # the route bucket (gen buckets >= 2^18 land far above base), so
+    # per-term salt buckets carry disjoint ordered ranges: the invariant
+    # WAND's grid alignment, explain()'s row pick and the single-term
+    # no-shuffle path rely on. Stage 1 flushes mini-segments at route-
+    # bucket boundaries, so every segments row lies within one route bucket.
     bucketed = with_tot.withColumn(
         "bucket",
         ((F.shiftrightunsigned(F.col("first_docid"), BUCKET_SHIFT)
@@ -768,8 +806,17 @@ def merge_postings_df(rows: DataFrame, num_segments: int,
             .repartition(out_partitions, "term", "bucket")
             .sortWithinPartitions("term", "bucket", "first_docid")
             .mapInPandas(partial(_merge_stream,
-                                 pack_fn=POSTINGS_FORMATS[postings_format]),
+                                 pack_fn=POSTINGS_FORMATS[postings_format],
+                                 deleted=(_NO_DELETES if deleted is None else
+                                          np.asarray(deleted, np.int64))),
                          schema=MERGED_SCHEMA))
+
+
+def term_totals(postings: DataFrame) -> DataFrame:
+    """Per-term stats (df, ttf, max_tf) summed over merged postings rows."""
+    return postings.groupBy("term").agg(
+        F.sum("df").alias("df"), F.sum("ttf").alias("ttf"),
+        F.max("max_tf").alias("max_tf"))
 
 
 def merge_segments(spark: SparkSession, out: IndexPaths,
@@ -779,46 +826,12 @@ def merge_segments(spark: SparkSession, out: IndexPaths,
     if _success(out.postings) and _success(out.termstats):
         return
     num_segments = num_segments or len(list_doc_files(out))
-    segs = (spark.read.parquet(out.segments)
-            .filter(~F.col("term").startswith("\x00")))  # drop metric sentinels
-
-    # head-term fan-out: nsalts = ceil(df_total / TARGET); contiguous seg
-    # runs. Only Zipf-HEAD terms (df_total > TARGET) need a salt count —
-    # a set that stays tiny and broadcastable at ANY corpus scale, so the
-    # packed-blob table never sort-merge-joins against the full vocabulary
-    # (which at 10^12 docs would exceed every broadcast threshold and add
-    # a second full-data shuffle). Tail terms default to nsalts=1 via the
-    # left join's null. The heads pre-pass aggregates ONLY (term, df) —
-    # parquet column pruning keeps the blob column unread (r6: the full
-    # termstats aggregation moved AFTER the merge, see below).
-    heads = (segs.groupBy("term").agg(F.sum("df").alias("df_total"))
-             .filter(F.col("df_total") > TARGET_ROW_POSTINGS))
-    nsalts = F.ceil(F.coalesce(F.col("df_total"),
-                               F.lit(1)) / F.lit(TARGET_ROW_POSTINGS))
-    nsalts = F.greatest(F.lit(1), nsalts)
-    with_tot = segs.join(F.broadcast(heads), "term", "left")
-    # salt bucket from the docid ROUTE bucket (docid >> BUCKET_SHIFT),
-    # NOT the file/segment index: files are hash-partitioned by route
-    # bucket, so seg order is unrelated to docid order — seg-run buckets
-    # would interleave a salted head term's docid ranges (found by
-    # CheckIndex on a 4M-doc corpus, the first corpus with df > TARGET).
-    # Route-bucket runs are docid-contiguous, so per-term salt buckets
-    # carry disjoint ordered ranges: the invariant WAND's grid alignment,
-    # explain()'s row pick and the single-term no-shuffle path rely on.
-    # Stage 1 flushes mini-segments at route-bucket boundaries, so every
-    # segments row lies within one route bucket.
-    bucketed = with_tot.withColumn(
-        "bucket",
-        ((F.shiftrightunsigned(F.col("first_docid"), BUCKET_SHIFT)
-          * nsalts) / F.lit(num_segments)).cast("int"))
     if not _success(out.postings):
-        merged = (bucketed.drop("df_total")
-                  .repartition(out_partitions or 32, "term", "bucket")
-                  .sortWithinPartitions("term", "bucket", "first_docid")
-                  .mapInPandas(partial(_merge_stream,
-                                       pack_fn=POSTINGS_FORMATS[postings_format]),
-                               schema=MERGED_SCHEMA))
-        merged.write.mode("overwrite").parquet(out.postings)
+        segs = (spark.read.parquet(out.segments)
+                .filter(~F.col("term").startswith("\x00")))  # drop metric sentinels
+        merge_postings_df(segs, num_segments, out_partitions or 32,
+                          postings_format) \
+            .write.mode("overwrite").parquet(out.postings)
     # termstats AFTER the merge (r6): aggregating the merged table —
     # one row per (term, salt-bucket) instead of one per (term, mini-
     # segment) — reads ~miniseg/bucket-factor fewer rows and no blobs;
@@ -826,12 +839,10 @@ def merge_segments(spark: SparkSession, out: IndexPaths,
     # hash repartition + within-file sort: no range-sampler pass (which
     # would re-execute the upstream), per-file term order preserved so
     # parquet row-group min/max stats still prune term lookups
-    totals = (spark.read.parquet(out.postings).groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("ttf").alias("ttf"),
-        F.max("max_tf").alias("max_tf")))
-    totals.repartition(max(4, (out_partitions or 32) // 4), "term") \
-          .sortWithinPartitions("term") \
-          .write.mode("overwrite").parquet(out.termstats)
+    term_totals(spark.read.parquet(out.postings)) \
+        .repartition(max(4, (out_partitions or 32) // 4), "term") \
+        .sortWithinPartitions("term") \
+        .write.mode("overwrite").parquet(out.termstats)
 
 
 def write_commit_point(out: IndexPaths, stats: dict) -> str:

@@ -118,26 +118,37 @@ def combine_topk(docid, clause, score, nclauses: int, k: int,
     similarity); docids in ``exclude`` and hits at or before the
     searchAfter cursor ``after=(score, docid)`` drop out. Returns the k
     best as columns docid, score, rank in (score desc, docid asc)
-    order."""
+    order. Memory follows the hit rows, not docs x clauses: the hits are
+    grouped by clause and added into one per-doc total, clause by
+    clause."""
     docid = np.asarray(docid, np.int64)
     docs, row = np.unique(docid, return_inverse=True)
-    mat = np.zeros((len(docs), nclauses), dtype)
-    hit = np.zeros((len(docs), nclauses), bool)
     clause = np.asarray(clause, np.int64)
-    mat[row, clause] = np.asarray(score, dtype)
-    hit[row, clause] = True
-    total = mat[:, 0].copy() if nclauses else np.zeros(len(docs), dtype)
-    for i in range(1, nclauses):
-        total = total + mat[:, i]
+    # the smallest unsigned type: numpy's stable sort is a radix sort up
+    # to 16 bits
+    order = np.argsort(clause.astype(np.min_scalar_type(max(nclauses - 1, 0))),
+                       kind="stable")
+    row, clause = row[order], clause[order]
+    score = np.asarray(score, dtype)[order]
+    cuts = np.searchsorted(clause, np.arange(nclauses + 1))
+    # 0 + s0 + s1 + ... in clause order: the same float adds as the
+    # pivot's coalesce chain (a missed clause adds nothing, not +0)
+    total = np.zeros(len(docs), dtype)
+    for i in range(nclauses):
+        sl = slice(cuts[i], cuts[i + 1])
+        total[row[sl]] += score[sl]
     keep = np.ones(len(docs), bool)
     for i in must:
-        keep &= hit[:, i]
+        hit = np.zeros(len(docs), bool)
+        hit[row[cuts[i]:cuts[i + 1]]] = True
+        keep &= hit
     if coord:
         # Spark computes coord in double and casts it to the score type
-        c = hit.sum(axis=1) / np.float64(dtype(nclauses))
+        c = np.bincount(row, minlength=len(docs)) / np.float64(dtype(nclauses))
         total = (total * c.astype(dtype)).astype(dtype)
     if len(should) and msm:
-        keep &= hit[:, list(should)].sum(axis=1) >= msm
+        in_should = np.isin(clause, list(should))
+        keep &= np.bincount(row[in_should], minlength=len(docs)) >= msm
     if exclude is not None:
         keep &= ~np.isin(docs, exclude)
     if after is not None:

@@ -23,6 +23,11 @@ NRT reopen + Solr's update log (SURVEY.md §2.H):
   * updateDocument = delete-by-term + add (ref: index/IndexWriter.java:
     1187-1188): urls re-ingested are tombstoned; searchers anti-join the
     tombstone table (the .del bitset analog)
+  * one fold body (_fold) behind compact (expungeDeletes),
+    tiered_compact (the TieredMergePolicy promotion) and
+    consolidate_generations (gen-to-gen): each merges its rows through
+    index.build.merge_postings_df, the merge the base build runs, whose
+    kernel drops deleted docids as SegmentMerger applies liveDocs
   * the streaming checkpointLocation plays the tlog role
     (solr/.../update/UpdateLog.java:72-135); Iceberg-style atomicity
     comes from parquet job commits per micro-batch
@@ -34,14 +39,13 @@ multi-segment reader view) and re-derives global stats.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import fsio
-from ..index.build import (BUCKET_SHIFT, RUN_SHIFT, IndexPaths, docid_expr,
-                           invert_docs, url_hash60_expr)
+from ..index.build import (BUCKET_SHIFT, POSTINGS_SCHEMA, RUN_SHIFT, IndexPaths,
+                           docid_expr, invert_docs, url_hash60_expr)
 
 
 # NRT generation buckets start here — above any realistic base bucket
@@ -124,197 +128,6 @@ class StreamingIndexWriter:
                 .trigger(**trigger))
 
 
-def _attach_deletions(rows: DataFrame, excl: DataFrame) -> DataFrame:
-    """Attach each postings row's deleted docids as a `_dels` array column
-    via a DISTRIBUTED range join on route bucket — the .del bitset is
-    never collected to the driver (VERDICT-r4 'wrong' #2: a 10^8-doc
-    GDPR purge must not OOM the driver). Each row's exact docid span is
-    [first_docid, last_docid]; the row explodes to the route buckets it
-    spans (<= num_segments + 1, tiny), equi-joins the tombstoned docids
-    on route bucket, range-filters, and the per-row delete lists flow
-    back as a normal shuffle join keyed by the row's unique
-    (term, seg, first_docid)."""
-    dels = excl.select(
-        F.col("docid").alias("_del"),
-        F.shiftrightunsigned("docid", BUCKET_SHIFT).alias("_rb"))
-    spans = rows.select(
-        "term", "seg", "first_docid", "last_docid",
-        F.explode(F.sequence(
-            F.shiftrightunsigned("first_docid", BUCKET_SHIFT),
-            F.shiftrightunsigned("last_docid", BUCKET_SHIFT))).alias("_rb"))
-    hits = (spans.join(dels, "_rb")
-            .filter(F.col("_del").between(F.col("first_docid"),
-                                          F.col("last_docid")))
-            .groupBy("term", "seg", "first_docid")
-            .agg(F.sort_array(F.collect_set("_del")).alias("_dels")))
-    return rows.join(hits, ["term", "seg", "first_docid"], "left")
-
-
-def _purge_stream(batches):
-    """Row-level delete application over rows carrying a `_dels` column
-    (from _attach_deletions): rows with no attached deletes pass through
-    without decode; hit rows are decoded, filtered and re-packed."""
-    from ..index.codec import (decode_positions, pack_positions_batch,
-                               pack_postings_batch, unpack_postings)
-
-    for pdf in batches:
-        dels_col = pdf["_dels"]
-        pdf = pdf.drop(columns=["_dels"])
-        keep_rows = []
-        for i, r in enumerate(pdf.itertuples(index=False)):
-            dl = dels_col.iloc[i]
-            if dl is None or (hasattr(dl, "__len__") and len(dl) == 0):
-                keep_rows.append(r._asdict())
-                continue
-            deleted_sorted = np.asarray(dl, dtype=np.int64)
-            d, tf, nb = unpack_postings(
-                np.frombuffer(r.blob, np.uint8),
-                np.asarray(r.block_offset, np.int64),
-                np.asarray(r.block_first_docid, np.int64),
-                np.asarray(r.block_n, np.int64))
-            mask = ~np.isin(d, deleted_sorted)
-            if mask.all():
-                keep_rows.append(r._asdict())
-                continue
-            if not mask.any():
-                continue
-            pos_blob = None
-            if r.pos_blob is not None:
-                flat, bounds = decode_positions(bytes(r.pos_blob), tf)
-                gather = np.concatenate(
-                    [np.arange(bounds[j], bounds[j + 1])
-                     for j in np.flatnonzero(mask)])
-                pos_blob = pack_positions_batch(
-                    np.array([0, int(mask.sum())]), tf[mask], flat[gather])[0]
-            tp = pack_postings_batch(np.array([0, int(mask.sum())]),
-                                     d[mask], tf[mask], nb[mask])[0]
-            row = r._asdict()
-            row.update(first_docid=int(d[mask][0]), df=tp.n,
-                       ttf=int(tf[mask].sum()), max_tf=int(tf[mask].max()),
-                       blob=tp.blob,
-                       block_offset=tp.block_offset.tolist(),
-                       block_first_docid=tp.block_first_docid.tolist(),
-                       block_n=tp.block_n.tolist(),
-                       block_max_tf=tp.block_max_tf.tolist(),
-                       block_min_len=tp.block_min_len.tolist(),
-                       pos_blob=pos_blob,
-                       last_docid=int(d[mask][-1]))
-            keep_rows.append(row)
-        if keep_rows:
-            yield pd.DataFrame(keep_rows)
-
-
-def _carried_stats(stats: dict) -> dict:
-    """stats.json keys a compaction keeps: the segment count and whether
-    the index stores positions (new NRT generations follow both)."""
-    return {k: stats[k] for k in ("num_segments", "positions") if k in stats}
-
-
-def compact(spark: SparkSession, root: str, out_partitions: int = 32) -> None:
-    """forceMerge / expungeDeletes analog (ref: index/IndexWriter.java
-    forceMerge + forceMergeDeletes): fold all NRT generations into the
-    base postings/docs/termstats tables, PHYSICALLY drop tombstoned docs
-    from every posting row, refresh stats, publish a new commit point.
-    After compaction the nrt/ and tombstones/ dirs are removed.
-
-    This is the full-rewrite pass; the incremental background-merge that
-    rewrites only touched term-bucket files is tiered_compact()
-    (TieredMergePolicy, index/TieredMergePolicy.java:75-86)."""
-    from ..index.build import (IndexPaths, merge_segments,
-                               write_commit_point, write_stats)
-    from ..search.engine import IndexSearcher
-
-    paths = IndexPaths(root)
-    stats_prev = fsio.read_json(paths.stats)
-    nrt_post = os.path.join(root, "nrt", "postings")
-    have_nrt = fsio.exists(nrt_post)
-    have_tombs = fsio.exists(os.path.join(root, "tombstones"))
-    if not have_nrt and not have_tombs:
-        return
-    searcher = IndexSearcher(spark, root, include_nrt=True)
-    excl = searcher._excluded_frame()
-
-    # docs: base + nrt, minus tombstoned
-    docs = spark.read.parquet(paths.docs)
-    nrt_docs = os.path.join(root, "nrt", "docs")
-    if fsio.exists(nrt_docs):
-        docs = docs.unionByName(spark.read.parquet(nrt_docs),
-                                allowMissingColumns=True)
-    if excl is not None:
-        docs = docs.join(excl, "docid", "left_anti")
-    tmp_docs = paths.docs + ".compact"
-    docs.write.mode("overwrite").parquet(tmp_docs)
-
-    # postings: treat base rows + nrt rows as segment rows, re-merge.
-    # Docids never change, so no re-inversion is needed: re-run the merge
-    # with the union as input.
-    base = spark.read.parquet(paths.postings)
-    seg_like = base.withColumn("seg", F.lit(0)).select(
-        "term", "seg", "first_docid", "df", "ttf", "max_tf", "blob",
-        "block_offset", "block_first_docid", "block_n", "block_max_tf",
-        "block_min_len", "pos_blob", "last_docid")
-    union = seg_like
-    if have_nrt:
-        nrt = (spark.read.parquet(nrt_post)
-               .filter(~F.col("term").startswith("\x00")))
-        nrt_like = nrt.select(
-            "term", F.lit(1).cast("int").alias("seg"), "first_docid", "df",
-            "ttf", "max_tf", "blob", "block_offset", "block_first_docid",
-            "block_n", "block_max_tf", "block_min_len", "pos_blob",
-            "last_docid")
-        union = seg_like.unionByName(nrt_like)
-    # purge deleted docids from the posting rows (the merge that applies
-    # the .del bitset, SegmentMerger's liveDocs handling) — per-row delete
-    # lists attached by a distributed range join, never a driver collect
-    if excl is not None:
-        union = (_attach_deletions(union, excl)
-                 .mapInPandas(_purge_stream, schema=union.schema))
-    tmp = IndexPaths(root + ".compact")
-    fsio.makedirs(tmp.root)
-    union.write.mode("overwrite").parquet(tmp.segments)
-    fsio.makedirs(tmp.docs)
-    merge_segments(spark, tmp, num_segments=2, out_partitions=out_partitions)
-
-    # publish: swap tables, refresh stats, new commit point
-    fsio.rmtree(paths.postings)
-    fsio.rename(tmp.postings, paths.postings)
-    fsio.rmtree(paths.termstats)
-    fsio.rename(tmp.termstats, paths.termstats)
-    fsio.rmtree(paths.docs)
-    fsio.rename(tmp_docs, paths.docs)
-    if fsio.exists(os.path.join(root, "nrt")):
-        fsio.rmtree(os.path.join(root, "nrt"))
-    tomb = os.path.join(root, "tombstones")
-    if fsio.exists(tomb):
-        fsio.rmtree(tomb)
-    fsio.rmtree(tmp.root, ignore_errors=True)
-    # the swapped dirs keep their paths: invalidate Spark's cached file
-    # listings so readers see the new generation (REFRESH TABLE analog)
-    for p in (paths.postings, paths.termstats, paths.docs):
-        spark.catalog.refreshByPath(p)
-    stats = write_stats(spark, paths, extra=_carried_stats(stats_prev))
-    # lineage: compaction is a new checkpoint era — record the net doc/len
-    # delta of the folded NRT generations (+ purged tombstones) so the
-    # manifests keep summing to the live corpus (CheckIndex invariant)
-    man_files = [f for f in fsio.listdir(paths.checkpoints) if f.endswith(".json")]
-    prev_docs = prev_len = 0
-    for fn in man_files:
-        m = fsio.read_json(os.path.join(paths.checkpoints, fn))
-        prev_docs += m["n_docs"]
-        prev_len += m["sum_len"]
-    delta = {
-        "n_docs": stats["max_doc"] - prev_docs,
-        "n_terms": 0, "n_postings": 0,
-        "sum_len": stats["sum_total_term_freq"] - prev_len,
-        "min_docid": -1, "max_docid": -1, "duration_sec": 0.0,
-        "docs_per_sec": None, "bytes": 0,
-        "lineage": {"input": "nrt compaction", "folded_generations": True},
-    }
-    gen_name = f"seg_compact_{len(man_files)}.json"
-    fsio.write_json_atomic(os.path.join(paths.checkpoints, gen_name), delta)
-    write_commit_point(paths, stats)
-
-
 def list_nrt_generations(root: str) -> list[dict]:
     """NRT generation manifests (gen_N.json), oldest first."""
     nrt = os.path.join(root, "nrt")
@@ -346,79 +159,284 @@ def _gen_members(man: dict) -> list[int]:
     return list(man.get("members", [man["generation"]]))
 
 
-def consolidate_generations(spark: SparkSession, root: str,
-                            gens: list[int],
-                            out_partitions: int | None = None) -> dict:
-    """Gen-to-gen fold (r6; VERDICT-r5 'wrong' #1 — the TieredMergePolicy
-    move the base-fold path was missing, ref: index/TieredMergePolicy.
-    java:75-86 merges similar-SIZE segments with EACH OTHER): merge the
-    given NRT generations' postings rows per term into ONE consolidated
-    NRT generation, touching ZERO base files. Docids are never changed —
-    a consolidated row spans its members' generation buckets, so
-    tombstone gen-derivation and realtime_get stay docid-driven; the
-    consolidated manifest records the member generations so a later
-    PROMOTION (tiered_compact) folds the right docs rows into base.
+def _carried_stats(stats: dict) -> dict:
+    """stats.json keys a compaction keeps: the segment count and whether
+    the index stores positions (new NRT generations follow both)."""
+    return {k: stats[k] for k in ("num_segments", "positions") if k in stats}
 
-    Cost: O(folded tier bytes) — the per-term merge is the block-copy
-    merge (rows of different generations carry disjoint ordered docid
-    ranges), and the nrt dir rewrite is bounded by the live NRT tier,
-    never the base index. Returns {"consolidated": gens, "into": id}."""
-    from functools import partial
 
-    from ..index.build import MERGED_SCHEMA, _merge_stream
-    from ..index.codec import POSTINGS_FORMATS
+def _parquet_files(d: str) -> list[str]:
+    return sorted(f for f in fsio.listdir(d) if f.endswith(".parquet"))
+
+
+def _files_holding(spark: SparkSession, table: str, terms: DataFrame) -> list[str]:
+    """Parquet files of `table` holding a row of any term in `terms` (one
+    broadcast semi-join; the driver sees file names only)."""
+    rows = (spark.read.parquet(table).withColumn("_file", F.input_file_name())
+            .join(F.broadcast(terms), "term", "semi")
+            .select("_file").distinct().collect())
+    return sorted(os.path.basename(r["_file"]) for r in rows)
+
+
+def _swap_in(spark: SparkSession, table: str, tmp: str,
+             drop: list[str]) -> list[str]:
+    """Move tmp's parquet files into table (part names carry fresh job
+    UUIDs: no collision), then delete table's `drop` files."""
+    new = _parquet_files(tmp)
+    for f in new:
+        fsio.rename(os.path.join(tmp, f), os.path.join(table, f))
+    for f in drop:
+        fsio.remove(os.path.join(table, f))
+    fsio.rmtree(tmp, ignore_errors=True)
+    spark.catalog.refreshByPath(table)
+    return new
+
+
+def _rewrite(spark: SparkSession, path: str, df: DataFrame) -> None:
+    """Replace the table at `path` by df, which may read it: df is
+    written beside the table first."""
+    df.write.mode("overwrite").parquet(path + ".fold")
+    fsio.rmtree(path)
+    fsio.rename(path + ".fold", path)
+    spark.catalog.refreshByPath(path)
+
+
+def _fold(spark: SparkSession, root: str, fold: list[int], mode: str,
+          out_partitions: int | None = None,
+          promote_ratio: float | None = None) -> dict:
+    """The one compaction body behind compact, tiered_compact and
+    consolidate_generations: merge the `fold` generations' postings rows
+    with the base rows they touch through merge_postings_df, write the
+    result, update termstats, docs, stats, lineage and the commit point,
+    and shrink nrt/. The modes differ only in these choices:
+
+      * "consolidate": the merged rows go back into nrt/postings as one
+        generation (stamped with the newest folded bucket); no base file
+        is touched, no docs move;
+      * "tiered": the base files holding a folded term are touched, the
+        folded docs are appended, nothing is purged — unless
+        `promote_ratio` finds the tier too small for those files, which
+        turns the fold into "consolidate";
+      * "expunge": every base file is touched, the searcher's deleted
+        docids are dropped inside the merge and anti-joined from docs,
+        and tombstones/ is removed."""
+    from ..index.build import (list_doc_files, merge_postings_df, term_totals,
+                               write_commit_point, write_stats)
 
     paths = IndexPaths(root)
     all_gens = list_nrt_generations(root)
-    have = {m["generation"] for m in all_gens}
+    man_by_gen = {m["generation"]: m for m in all_gens}
+    stats_prev = fsio.read_json(paths.stats)
+    pf = stats_prev.get("postings_format", "lucene41")
+    nseg = stats_prev.get("num_segments") or len(list_doc_files(paths))
+    nrt_post = os.path.join(root, "nrt", "postings")
+    nrt_docs = os.path.join(root, "nrt", "docs")
+    nrt_rows = (spark.read.parquet(nrt_post)
+                .filter(~F.col("term").startswith("\x00"))
+                if all_gens and fsio.exists(nrt_post) else None)
+    fold_rows = (nrt_rows.filter(F.col("seg").isin(
+        [NRT_BASE_BUCKETS + g for g in fold])) if fold else None)
+    fold_terms = fold_rows.select("term").distinct() if fold else None
+
+    all_files = _parquet_files(paths.postings)
+    touched: list[str] = []
+    if mode == "expunge":
+        touched = all_files
+    elif mode == "tiered":
+        # rows of a term only live in files holding the term, so this is
+        # exactly the set of files whose (term, bucket) groups change
+        touched = _files_holding(spark, paths.postings, fold_terms)
+        if promote_ratio is not None and len(fold) >= 2 and touched:
+            # size-similarity gate (TieredMergePolicy.java:75-86): a tier
+            # far smaller than the base bytes it would rewrite is folded
+            # into itself instead — zero base writes, O(tier) work
+            tier_bytes = (fold_rows.agg(F.sum(F.octet_length("blob")))
+                          .collect()[0][0] or 0)
+            touched_bytes = sum(fsio.getsize(os.path.join(paths.postings, f))
+                                for f in touched)
+            if tier_bytes < promote_ratio * touched_bytes:
+                mode, touched = "consolidate", []
+
+    deleted = excl = None
+    if mode == "expunge":
+        from ..search.engine import IndexSearcher
+        searcher = IndexSearcher(spark, root, include_nrt=True)
+        deleted, excl = searcher._excluded_docids(), searcher._excluded_frame()
+
+    # the one merge: folded NRT rows + touched base rows, deletes dropped
+    # in the kernel; docids never change, so no re-inversion is needed
+    cols = [f.name for f in POSTINGS_SCHEMA.fields if f.name != "seg"]
+    parts = ([fold_rows.select(*cols)] if fold else []) + (
+        [spark.read.parquet(*[os.path.join(paths.postings, f)
+                              for f in touched]).select(*cols)]
+        if touched else [])
+    rows = reduce(DataFrame.unionByName, parts)
+    if out_partitions is None:
+        out_partitions = (max(2, min(32, len(fold))) if mode == "consolidate"
+                          else max(4, min(32, len(touched) + 1)))
+    merged = merge_postings_df(rows, nseg, out_partitions, pf, deleted=deleted)
+
+    remaining = [m for m in all_gens if m["generation"] not in set(fold)]
+    kept_rows = (nrt_rows.filter(F.col("seg").isin(
+        [NRT_BASE_BUCKETS + m["generation"] for m in remaining]))
+        if remaining else None)
+    if mode == "consolidate":
+        # one generation in nrt/: the newest folded id, listing every
+        # member so a later promotion moves the right docs rows; docs and
+        # tombstones stay as they are (docids and generations unchanged)
+        cid = max(fold)
+        members = sorted({g2 for g in fold for g2 in _gen_members(man_by_gen[g])})
+        out = merged.select("term", F.lit(NRT_BASE_BUCKETS + cid).cast("int")
+                            .alias("seg"), *cols[1:])
+        _rewrite(spark, nrt_post,
+                 out if kept_rows is None else kept_rows.unionByName(out))
+        for g in fold:
+            fsio.remove(os.path.join(root, "nrt", f"gen_{g}.json"))
+        fsio.write_json_atomic(
+            os.path.join(root, "nrt", f"gen_{cid}.json"),
+            {"generation": cid, "bucket": NRT_BASE_BUCKETS + cid,
+             "consolidated": True, "members": members})
+        return {"consolidated": fold, "into": cid,
+                "rewritten_files": [], "members": members}
+
+    merged.write.mode("overwrite").parquet(paths.postings + ".fold")
+    new_files = _swap_in(spark, paths.postings, paths.postings + ".fold",
+                         touched)
+
+    # termstats re-aggregated from the merged rows for the terms whose
+    # postings were all rewritten: every term when every base file was
+    # touched (deletes may change any term, or drop it), else the folded
+    # terms, whose rows all live in touched files
+    totals = term_totals(spark.read.parquet(
+        *[os.path.join(paths.postings, f) for f in new_files]))
+    if touched == all_files:
+        ts_touched = _parquet_files(paths.termstats)
+        new_ts = totals
+    else:
+        ts_touched = _files_holding(spark, paths.termstats, fold_terms)
+        new_ts = totals.join(fold_terms, "term", "semi")
+        if ts_touched:
+            new_ts = (spark.read.parquet(*[os.path.join(paths.termstats, f)
+                                           for f in ts_touched])
+                      .join(fold_terms, "term", "left_anti")
+                      .unionByName(new_ts))
+    # partition count proportional to touched volume, so the rewritten
+    # dictionary never goes through one task; hash-by-term + within-file
+    # sort keeps the term-pruning file property of the base build
+    (new_ts.repartition(max(1, len(ts_touched)), "term")
+     .sortWithinPartitions("term")
+     .write.mode("overwrite").parquet(paths.termstats + ".fold"))
+    _swap_in(spark, paths.termstats, paths.termstats + ".fold", ts_touched)
+
+    # docs: the folded generations' rows join the base (docids unchanged —
+    # a folded doc keeps its generation-bucket docid, so tombstone masking
+    # stays gen-derivable); expunge rewrites the table without deleted docs
+    base_docs = spark.read.parquet(paths.docs)
+    docs = None
+    if fold and fsio.exists(nrt_docs):
+        fold_doc_buckets = sorted({NRT_BASE_BUCKETS + g2 for g in fold
+                                   for g2 in _gen_members(man_by_gen[g])})
+        docs = (spark.read.parquet(nrt_docs)
+                .filter(F.shiftrightunsigned("docid", BUCKET_SHIFT)
+                        .isin(fold_doc_buckets)))
+        docs = docs.select(*[
+            F.col(f.name) if f.name in docs.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in base_docs.schema.fields])
+    if mode == "expunge":
+        docs = base_docs if docs is None else base_docs.unionByName(docs)
+        if excl is not None:
+            docs = docs.join(excl, "docid", "left_anti")
+        _rewrite(spark, paths.docs, docs)
+        fsio.rmtree(os.path.join(root, "tombstones"), ignore_errors=True)
+    elif docs is not None:
+        docs.write.mode("append").parquet(paths.docs)
+        spark.catalog.refreshByPath(paths.docs)
+
+    # shrink nrt/ to the generations left unfolded
+    if not remaining:
+        fsio.rmtree(os.path.join(root, "nrt"), ignore_errors=True)
+    elif fold:
+        _rewrite(spark, nrt_post, kept_rows)
+        if fsio.exists(nrt_docs):
+            keep_doc_buckets = sorted({NRT_BASE_BUCKETS + g2 for m in remaining
+                                       for g2 in _gen_members(m)})
+            _rewrite(spark, nrt_docs, spark.read.parquet(nrt_docs).filter(
+                F.shiftrightunsigned("docid", BUCKET_SHIFT)
+                .isin(keep_doc_buckets)))
+        for g in fold:
+            fsio.remove(os.path.join(root, "nrt", f"gen_{g}.json"))
+
+    # stats + lineage + commit point. A sorted index loses the label for
+    # folded (unsorted) generations. The fold's manifest records what the
+    # earlier manifests miss, so they keep summing to the live corpus
+    # with or without purges (CheckIndex invariant).
+    stats = write_stats(
+        spark, paths,
+        fields=sorted(stats_prev["fields"]) if "fields" in stats_prev else None,
+        postings_format=pf, extra=_carried_stats(stats_prev))
+    mans = [fsio.read_json(os.path.join(paths.checkpoints, f))
+            for f in fsio.listdir(paths.checkpoints) if f.endswith(".json")]
+    kept_files = sorted(set(all_files) - set(touched))
+    delta = {
+        "n_docs": stats["max_doc"] - sum(m["n_docs"] for m in mans),
+        "n_terms": 0, "n_postings": 0,
+        "sum_len": stats["sum_total_term_freq"] - sum(m["sum_len"] for m in mans),
+        "min_docid": -1, "max_docid": -1, "duration_sec": 0.0,
+        "docs_per_sec": None, "bytes": 0,
+        "lineage": {"input": f"{mode} compaction", "folded_generations": fold,
+                    "rewritten_files": touched, "kept_files": kept_files},
+    }
+    fsio.write_json_atomic(
+        os.path.join(paths.checkpoints, f"seg_{mode}_{len(mans)}.json"), delta)
+    write_commit_point(paths, stats)
+    return {"folded": fold, "rewritten_files": touched,
+            "kept_files": kept_files, "new_files": new_files,
+            "folded_docs": stats["max_doc"] - stats_prev["max_doc"]}
+
+
+def compact(spark: SparkSession, root: str, out_partitions: int = 32) -> None:
+    """forceMerge / expungeDeletes analog (ref: index/IndexWriter.java
+    forceMerge + forceMergeDeletes): fold every NRT generation into the
+    base, rewriting every base postings file through merge_postings_df,
+    which drops the deleted docids while it merges (SegmentMerger
+    applying liveDocs); docs lose the same docids, termstats are
+    re-aggregated from the merged rows, and nrt/ and tombstones/ are
+    removed. The deleted set is held in the driver at 8 bytes per docid,
+    exactly as every NRT searcher already holds it.
+
+    tiered_compact() is the incremental fold that rewrites only the
+    touched files and purges nothing (TieredMergePolicy,
+    index/TieredMergePolicy.java:75-86)."""
+    if not (fsio.exists(os.path.join(root, "nrt", "postings"))
+            or fsio.exists(os.path.join(root, "tombstones"))):
+        return
+    _fold(spark, root, [m["generation"] for m in list_nrt_generations(root)],
+          "expunge", out_partitions)
+
+
+def consolidate_generations(spark: SparkSession, root: str,
+                            gens: list[int],
+                            out_partitions: int | None = None) -> dict:
+    """Gen-to-gen fold (TieredMergePolicy merges similar-SIZE segments
+    with EACH OTHER, ref: index/TieredMergePolicy.java:75-86): merge the
+    given NRT generations' postings rows through merge_postings_df into
+    ONE consolidated NRT generation, touching ZERO base files. Docids are
+    never changed — a consolidated row spans its members' generation
+    buckets, so tombstone gen-derivation and realtime_get stay
+    docid-driven; the consolidated manifest records the member
+    generations so a later promotion (tiered_compact) folds the right
+    docs rows into base.
+
+    Cost: O(folded tier bytes) — rows of different generations carry
+    disjoint ordered docid ranges, so the merge takes the block-copy
+    path, and the nrt dir rewrite is bounded by the live NRT tier,
+    never the base index. Returns {"consolidated": gens, "into": id}."""
+    have = {m["generation"] for m in list_nrt_generations(root)}
     fold = sorted(g for g in gens if g in have)
     if len(fold) < 2:
         return {"consolidated": [], "into": None}
-    man_by_gen = {m["generation"]: m for m in all_gens}
-    row_buckets = [NRT_BASE_BUCKETS + g for g in fold]
-    members = sorted({g2 for g in fold for g2 in _gen_members(man_by_gen[g])})
-    cid = max(fold)
-    cid_bucket = NRT_BASE_BUCKETS + cid
-    pf = fsio.read_json(paths.stats).get("postings_format", "lucene41")
-
-    nrt_post = os.path.join(root, "nrt", "postings")
-    nrt_all = spark.read.parquet(nrt_post)
-    clean = nrt_all.filter(~F.col("term").startswith("\x00"))
-    fold_rows = clean.filter(F.col("seg").isin(row_buckets))
-    keep_rows = clean.filter(~F.col("seg").isin(row_buckets))
-
-    # per-term merge of the folded generations only: generations have
-    # disjoint ordered docid ranges (bucket = gen), so every group takes
-    # the block-copy path of _merge_group_block — no decode, no re-pack
-    cols = [f.name for f in MERGED_SCHEMA.fields if f.name != "bucket"]
-    nparts = out_partitions or max(2, min(32, len(fold)))
-    merged = (fold_rows.select(*cols)
-              .withColumn("bucket", F.lit(0).cast("int"))
-              .repartition(nparts, "term")
-              .sortWithinPartitions("term", "bucket", "first_docid")
-              .mapInPandas(partial(_merge_stream,
-                                   pack_fn=POSTINGS_FORMATS[pf]),
-                           schema=MERGED_SCHEMA))
-    consolidated = merged.select(
-        "term", F.lit(cid_bucket).cast("int").alias("seg"),
-        *[c for c in cols if c != "term"])
-    tmp = nrt_post + ".consolidate"
-    keep_rows.unionByName(consolidated) \
-             .write.mode("overwrite").parquet(tmp)
-    fsio.rmtree(nrt_post)
-    fsio.rename(tmp, nrt_post)
-    spark.catalog.refreshByPath(nrt_post)
-
-    # manifests: members replaced by one consolidated entry; nrt/docs and
-    # tombstones are untouched (docids and generations are unchanged)
-    for g in fold:
-        fsio.remove(os.path.join(root, "nrt", f"gen_{g}.json"))
-    fsio.write_json_atomic(
-        os.path.join(root, "nrt", f"gen_{cid}.json"),
-        {"generation": cid, "bucket": cid_bucket, "consolidated": True,
-         "members": members})
-    return {"consolidated": fold, "into": cid,
-            "rewritten_files": [], "members": members}
+    return _fold(spark, root, fold, "consolidate", out_partitions)
 
 
 def tiered_maintenance(spark: SparkSession, root: str,
@@ -455,205 +473,30 @@ def tiered_compact(spark: SparkSession, root: str,
     files that contain the folded terms — every other base file is left
     untouched on disk. Tombstones are NOT purged here (Lucene keeps the
     .del bitset live until a real merge touches the segment; searchers
-    always apply it) — compact() is the expungeDeletes full pass.
+    always apply it) — compact() is the expungeDeletes pass. Both run
+    the same fold body and the same merge_postings_df.
 
     gens=None folds every NRT generation. Returns a summary dict with
     the folded generations and the exact base files rewritten vs kept —
     the evidence a merge pass is O(touched), not O(index).
 
-    promote_ratio (r6): when set, the promotion only proceeds if the
-    folded tier's postings bytes are >= promote_ratio x the bytes of the
-    base files it would rewrite (the TieredMergePolicy size-similarity
-    rule); a too-small tier is folded gen-to-gen instead
-    (consolidate_generations) and NO base file is touched. None keeps
+    promote_ratio: when set, the promotion only proceeds if the folded
+    tier's postings bytes are >= promote_ratio x the bytes of the base
+    files it would rewrite (the TieredMergePolicy size-similarity rule);
+    a too-small tier is folded gen-to-gen instead (as
+    consolidate_generations) and NO base file is touched. None keeps
     the unconditional-promotion semantics (forceMerge-style callers).
 
     100-TB shape: one broadcast semi-join marks touched files (the
     folded-term set is bounded by the folded generations' vocabularies),
     the merge shuffle moves only touched-file rows + NRT rows, and the
     driver handles file names only — never postings data."""
-    from ..index.build import (MERGED_SCHEMA, IndexPaths, list_doc_files,
-                               merge_postings_df, write_commit_point,
-                               write_stats)
-
-    paths = IndexPaths(root)
-    all_gens = list_nrt_generations(root)
-    if not all_gens:
-        return {"folded": []}
-    fold = sorted(gens) if gens is not None else [m["generation"] for m in all_gens]
-    fold = [g for g in fold if g in {m["generation"] for m in all_gens}]
+    have = {m["generation"] for m in list_nrt_generations(root)}
+    fold = [g for g in (sorted(gens) if gens is not None else sorted(have))
+            if g in have]
     if not fold:
         return {"folded": []}
-    man_by_gen = {m["generation"]: m for m in all_gens}
-    # postings rows carry the generation's OWN bucket as `seg`; docs of a
-    # CONSOLIDATED generation keep their original member buckets in the
-    # docid, so docs-side filters use the expanded member set
-    fold_buckets = [NRT_BASE_BUCKETS + g for g in fold]
-    fold_doc_buckets = sorted({NRT_BASE_BUCKETS + g2 for g in fold
-                               for g2 in _gen_members(man_by_gen[g])})
-    stats_prev = fsio.read_json(paths.stats)
-    pf = stats_prev.get("postings_format", "lucene41")
-    nseg = stats_prev.get("num_segments") or len(list_doc_files(paths))
-
-    nrt_post = os.path.join(root, "nrt", "postings")
-    nrt_all = spark.read.parquet(nrt_post)
-    nrt_rows = (nrt_all.filter(~F.col("term").startswith("\x00"))
-                .filter(F.col("seg").isin(fold_buckets)))
-    nrt_terms = nrt_rows.select("term").distinct()
-
-    # touched base files: any file holding >=1 row of a folded term.
-    # Rows of a term can only live in files that contain the term, so
-    # this set is exactly the files whose (term, bucket) groups change.
-    base = (spark.read.parquet(paths.postings)
-            .withColumn("_file", F.input_file_name()))
-    touched_uris = [r["_file"] for r in
-                    base.join(F.broadcast(nrt_terms), "term", "semi")
-                        .select("_file").distinct().collect()]
-    touched = sorted(os.path.basename(u) for u in touched_uris)
-    all_files = [f for f in fsio.listdir(paths.postings)
-                 if f.endswith(".parquet")]
-
-    if promote_ratio is not None and len(fold) >= 2 and touched:
-        # size-similarity gate (TieredMergePolicy.java:75-86): a tier far
-        # smaller than the base bytes it would rewrite is folded into
-        # itself instead — zero base writes, O(tier) work
-        tier_bytes = (nrt_rows.agg(F.sum(F.octet_length("blob")))
-                      .collect()[0][0] or 0)
-        touched_bytes = sum(fsio.getsize(os.path.join(paths.postings, f))
-                            for f in touched)
-        if tier_bytes < promote_ratio * touched_bytes:
-            return consolidate_generations(spark, root, fold,
-                                           out_partitions=out_partitions)
-
-    cols = [f.name for f in MERGED_SCHEMA.fields if f.name != "bucket"]
-    union = nrt_rows.select(*cols)
-    if touched:
-        union = (spark.read.parquet(
-                     *[os.path.join(paths.postings, f) for f in touched])
-                 .select(*cols).unionByName(union))
-    merged = merge_postings_df(union, num_segments=nseg,
-                               out_partitions=out_partitions or
-                               max(4, min(32, len(touched) + 1)),
-                               postings_format=pf)
-    tmp_post = paths.postings + ".tier"
-    merged.write.mode("overwrite").parquet(tmp_post)
-    new_files = [f for f in fsio.listdir(tmp_post) if f.endswith(".parquet")]
-    for f in new_files:   # part names carry fresh job UUIDs: no collision
-        fsio.rename(os.path.join(tmp_post, f), os.path.join(paths.postings, f))
-    for f in touched:
-        fsio.remove(os.path.join(paths.postings, f))
-    fsio.rmtree(tmp_post, ignore_errors=True)
-    spark.catalog.refreshByPath(paths.postings)
-
-    # termstats: same touched-file surgery (term -> df/ttf/max_tf deltas)
-    ts = (spark.read.parquet(paths.termstats)
-          .withColumn("_file", F.input_file_name()))
-    ts_touched_uris = [r["_file"] for r in
-                       ts.join(F.broadcast(nrt_terms), "term", "semi")
-                         .select("_file").distinct().collect()]
-    ts_touched = sorted(os.path.basename(u) for u in ts_touched_uris)
-    nrt_agg = (nrt_rows.groupBy("term")
-               .agg(F.sum("df").alias("df_nrt"), F.sum("ttf").alias("ttf_nrt"),
-                    F.max("max_tf").alias("maxtf_nrt")))
-    if ts_touched:
-        old_rows = spark.read.parquet(
-            *[os.path.join(paths.termstats, f) for f in ts_touched])
-    else:
-        old_rows = spark.createDataFrame(
-            [], "term string, df long, ttf long, max_tf int")
-    updated = (old_rows.join(nrt_agg, "term", "left").select(
-        "term",
-        (F.col("df") + F.coalesce("df_nrt", F.lit(0))).cast("long").alias("df"),
-        (F.col("ttf") + F.coalesce("ttf_nrt", F.lit(0))).cast("long").alias("ttf"),
-        F.greatest("max_tf", F.coalesce("maxtf_nrt", F.lit(0)))
-         .cast("int").alias("max_tf")))
-    fresh_terms = (nrt_agg.join(old_rows.select("term"), "term", "left_anti")
-                   .select("term", F.col("df_nrt").cast("long").alias("df"),
-                           F.col("ttf_nrt").cast("long").alias("ttf"),
-                           F.col("maxtf_nrt").cast("int").alias("max_tf")))
-    tmp_ts = paths.termstats + ".tier"
-    # partition count proportional to touched volume, so the updated
-    # dictionary never goes through one task when touched ≈ all files;
-    # hash-by-term + within-file sort keeps the term-pruning file
-    # property of the base build
-    ts_parts = max(1, len(ts_touched))
-    (updated.unionByName(fresh_terms).repartition(ts_parts, "term")
-     .sortWithinPartitions("term").write.mode("overwrite").parquet(tmp_ts))
-    for f in [f for f in fsio.listdir(tmp_ts) if f.endswith(".parquet")]:
-        fsio.rename(os.path.join(tmp_ts, f), os.path.join(paths.termstats, f))
-    for f in ts_touched:
-        fsio.remove(os.path.join(paths.termstats, f))
-    fsio.rmtree(tmp_ts, ignore_errors=True)
-    spark.catalog.refreshByPath(paths.termstats)
-
-    # docs: append the folded generations' rows (docids unchanged — a
-    # folded doc keeps its generation-bucket docid, so tombstone masking
-    # stays gen-derivable after the fold)
-    nrt_docs_path = os.path.join(root, "nrt", "docs")
-    n_folded_docs = 0
-    if fsio.exists(nrt_docs_path):
-        base_schema = spark.read.parquet(paths.docs).schema
-        fold_docs = (spark.read.parquet(nrt_docs_path)
-                     .filter(F.shiftrightunsigned("docid", BUCKET_SHIFT)
-                             .isin(fold_doc_buckets)))
-        sel = [F.col(f.name) if f.name in fold_docs.columns
-               else F.lit(None).cast(f.dataType).alias(f.name)
-               for f in base_schema.fields]
-        fold_docs = fold_docs.select(*sel)
-        n_folded_docs = fold_docs.count()
-        fold_docs.write.mode("append").parquet(paths.docs)
-        spark.catalog.refreshByPath(paths.docs)
-
-    # shrink / drop the NRT dirs
-    remaining = [m for m in all_gens if m["generation"] not in set(fold)]
-    if not remaining:
-        fsio.rmtree(os.path.join(root, "nrt"))
-    else:
-        keep_buckets = [NRT_BASE_BUCKETS + m["generation"] for m in remaining]
-        keep_doc_buckets = sorted({NRT_BASE_BUCKETS + g2 for m in remaining
-                                   for g2 in _gen_members(m)})
-        tmp = nrt_post + ".keep"
-        nrt_all.filter(F.col("seg").isin(keep_buckets)) \
-               .write.mode("overwrite").parquet(tmp)
-        fsio.rmtree(nrt_post)
-        fsio.rename(tmp, nrt_post)
-        if fsio.exists(nrt_docs_path):
-            tmp_d = nrt_docs_path + ".keep"
-            (spark.read.parquet(nrt_docs_path)
-             .filter(F.shiftrightunsigned("docid", BUCKET_SHIFT)
-                     .isin(keep_doc_buckets))
-             .write.mode("overwrite").parquet(tmp_d))
-            fsio.rmtree(nrt_docs_path)
-            fsio.rename(tmp_d, nrt_docs_path)
-        for g in fold:
-            fsio.remove(os.path.join(root, "nrt", f"gen_{g}.json"))
-        spark.catalog.refreshByPath(nrt_post)
-        spark.catalog.refreshByPath(nrt_docs_path)
-
-    # stats + lineage + commit point. A sorted index loses the label for
-    # folded (unsorted) generations.
-    stats = write_stats(
-        spark, paths,
-        fields=sorted(stats_prev["fields"]) if "fields" in stats_prev else None,
-        postings_format=pf, extra=_carried_stats(stats_prev))
-    delta = {
-        "n_docs": n_folded_docs, "n_terms": 0, "n_postings": 0,
-        "sum_len": int(stats["sum_total_term_freq"]
-                       - stats_prev["sum_total_term_freq"]),
-        "min_docid": -1, "max_docid": -1, "duration_sec": 0.0,
-        "docs_per_sec": None, "bytes": 0,
-        "lineage": {"input": "tiered compaction", "folded_generations": fold,
-                    "rewritten_files": touched,
-                    "kept_files": sorted(set(all_files) - set(touched))},
-    }
-    n_prev = len([f for f in fsio.listdir(paths.checkpoints)
-                  if f.endswith(".json")])
-    fsio.write_json_atomic(
-        os.path.join(paths.checkpoints, f"seg_tier_{n_prev}.json"), delta)
-    write_commit_point(paths, stats)
-    return {"folded": fold, "rewritten_files": touched,
-            "kept_files": sorted(set(all_files) - set(touched)),
-            "new_files": sorted(new_files), "folded_docs": n_folded_docs}
+    return _fold(spark, root, fold, "tiered", out_partitions, promote_ratio)
 
 
 def nrt_postings(spark: SparkSession, root: str) -> DataFrame:

@@ -213,18 +213,22 @@ def test_merge_rejects_mixed_positions(spark, second):
 
 def test_merge_keeps_uniform_positions(spark):
     """Control: an interleaved group whose rows all carry positions
-    merges, and each posting keeps its own positions."""
+    merges, and each posting keeps its own positions, also when deleted
+    docids drop out of the reordered group."""
     rows = [_row("t", [1, 3, 5], positional=True),
             _row("t", [2, 4], positional=True)]
     df = spark.createDataFrame(rows, POSTINGS_SCHEMA).drop("seg")
-    (r,) = merge_postings_df(df, num_segments=1, out_partitions=1).collect()
-    d, tf, _ = unpack_postings(np.frombuffer(r["blob"], np.uint8),
-                               np.asarray(r["block_offset"], np.int64),
-                               np.asarray(r["block_first_docid"], np.int64),
-                               np.asarray(r["block_n"], np.int64))
-    assert d.tolist() == [1, 2, 3, 4, 5]
-    flat, _ = decode_positions(bytes(r["pos_blob"]), tf)
-    assert flat.tolist() == [0, 0, 1, 1, 2]
+    for deleted, want_d, want_pos in ((None, [1, 2, 3, 4, 5], [0, 0, 1, 1, 2]),
+                                      ([3, 4], [1, 2, 5], [0, 0, 2])):
+        (r,) = merge_postings_df(df, num_segments=1, out_partitions=1,
+                                 deleted=deleted).collect()
+        d, tf, _ = unpack_postings(np.frombuffer(r["blob"], np.uint8),
+                                   np.asarray(r["block_offset"], np.int64),
+                                   np.asarray(r["block_first_docid"], np.int64),
+                                   np.asarray(r["block_n"], np.int64))
+        assert d.tolist() == want_d
+        flat, _ = decode_positions(bytes(r["pos_blob"]), tf)
+        assert flat.tolist() == want_pos
 
 
 def test_finished_build_drops_segments_table(spark, tmp_root):
