@@ -200,13 +200,13 @@ def payload_near_topk(searcher, payload_path: str, terms: list[str],
     import pandas as pd
 
     from ..search.bm25 import idf as bm25_idf
+    from ..search.engine import local_frame, result_schema
     from ..search.phrase import _positional_piv
     spark = searcher.spark
     dtype = np.float32
     st = searcher.term_stats(terms)
     if len(st) < len(set(terms)):
-        return spark.createDataFrame(
-            [], "docid long, score float, rank int")
+        return local_frame(spark, result_schema())
     sum_idf = dtype(0.0)
     for t in terms:
         df_t = int(st.set_index("term").loc[t, "df"])

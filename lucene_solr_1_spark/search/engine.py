@@ -18,11 +18,15 @@ The Spark re-expression of Lucene's read path (SURVEY.md §3.1):
                            docs applied in the scan itself, as acceptDocs
                            are in TermsEnum.docs (ref: search/TermScorer.java:69-71,
                            search/Weight.java scorer(..., acceptDocs))
-  Boolean combination   -> per-doc combine via pivot on term index +
-                           left-to-right float32 adds — the same
-                           association order as the oracle's scatter-add
+  Boolean combination   -> ONE per-doc combine, combine_topk: clause
+                           scores added left to right in float32 (the
+                           oracle's scatter-add order), MUST /
+                           min-should-match / coord / MUST_NOT /
+                           searchAfter, DisMax groups (mx + tie·(Σ − mx))
+                           for dismax and edismax, then the doc's top k
                            (ref: search/BooleanScorer.java:30-61;
-                            DisjunctionSumScorer/ConjunctionScorer)
+                            DisjunctionSumScorer/ConjunctionScorer,
+                            DisjunctionMaxScorer)
   TopScoreDocCollector  -> orderBy(score desc, docid asc).limit(k) =
                            per-partition top-k + driver merge
                            (TakeOrderedAndProject; tie-break matches
@@ -39,17 +43,22 @@ broadcast join from its input size:
     phrases, from the cached term stats), its files are local and it has
     no DataFrame/SQL input (doc_filter, docid_filter), the driver reads
     the term-filtered rows with pyarrow.dataset, runs the kernel, drops
-    the searcher's deleted docs, and finishes with combine_topk — one
-    NumPy per-doc combine + top-k shared by search, search_wand and
-    phrase clauses. The result is a LocalTableScan DataFrame of <= k
-    rows: the query has already run when search() returns, and
-    collecting it runs no Spark job (so collect_time_limited bounds only
-    the Spark executor);
-  * Spark (_scored_candidates under mapInArrow, Catalyst pivot,
-    topk_with_rank): every other query, lazily, as before. It is the
-    executor for postings that do not fit the driver.
-Both return the same bits: tests/test_two_executors.py runs every query
-kind at budget 0 and unbounded and compares (docid, float32 score, rank).
+    the searcher's deleted docs, and finishes with combine_topk once.
+    The result is a LocalTableScan DataFrame of <= k rows: the query has
+    already run when search() returns, and collecting it runs no Spark
+    job (so collect_time_limited bounds only the Spark executor);
+  * Spark (_scored_candidates under mapInArrow, combine_frame,
+    topk_with_rank): every other query, lazily. The clause rows are hash
+    partitioned on docid and combine_topk runs on each partition, so
+    each emits at most k exact rows before topk_with_rank's single
+    partition. It is the executor for postings that do not fit the
+    driver.
+search, search_dismax and search_edismax build their clause rows once
+(_clause_rows) and share one finish (_combine); search_wand's last step
+calls the same pair. combine_topk is the per-doc combine on both
+executors. Both return the same bits: tests/test_two_executors.py runs
+every query kind at budget 0 and unbounded and compares (docid, float32
+score, rank) with each other and with a Catalyst pivot reference.
 """
 
 from __future__ import annotations
@@ -106,18 +115,24 @@ def local_frame(spark: SparkSession, schema, data=None) -> DataFrame:
 def combine_topk(docid, clause, score, nclauses: int, k: int,
                  dtype=np.float32, must=(), should=(), msm: int = 0,
                  coord: bool = False, exclude=None,
-                 after: tuple | None = None) -> dict:
-    """Per-doc combine and top-k in the driver process: the in-process
-    twin of the Catalyst pivot + topk_with_rank, bit for bit.
+                 after: tuple | None = None, *, groups: list | None = None,
+                 tie: float = 0.0) -> dict:
+    """The per-doc combine and top-k of every scored query (BooleanScorer
+    / DisjunctionMaxScorer): search, search_wand, search_dismax and
+    search_edismax call it in the driver, and combine_frame runs it on
+    each docid-hash partition of the Spark executor.
 
     (docid, clause, score) are the clause hits, one row per (doc,
     clause). A doc's score adds its clause scores left to right in
-    ``dtype`` (0 for a clause it misses), as the pivot's coalesce chain
-    does. It must hit every clause in ``must`` and at least ``msm`` of
-    ``should``; ``coord`` multiplies by matched/nclauses (classic
-    similarity); docids in ``exclude`` and hits at or before the
-    searchAfter cursor ``after=(score, docid)`` drop out. Returns the k
-    best as columns docid, score, rank in (score desc, docid asc)
+    ``dtype`` (0 for a clause it misses). ``groups`` (clause-index
+    lists in member order) makes each group one DisjunctionMaxQuery:
+    its value is mx + tie * (Σ members - mx) in ``dtype``, a missed
+    member counting 0, and the doc's score adds the group values in
+    order. A doc must hit every clause (group) in ``must`` and at least
+    ``msm`` of ``should``; ``coord`` multiplies by matched/nclauses
+    (classic similarity); docids in ``exclude`` and hits at or before
+    the searchAfter cursor ``after=(score, docid)`` drop out. Returns
+    the k best as columns docid, score, rank in (score desc, docid asc)
     order. Memory follows the hit rows, not docs x clauses: the hits are
     grouped by clause and added into one per-doc total, clause by
     clause."""
@@ -131,24 +146,46 @@ def combine_topk(docid, clause, score, nclauses: int, k: int,
     row, clause = row[order], clause[order]
     score = np.asarray(score, dtype)[order]
     cuts = np.searchsorted(clause, np.arange(nclauses + 1))
-    # 0 + s0 + s1 + ... in clause order: the same float adds as the
-    # pivot's coalesce chain (a missed clause adds nothing, not +0)
+    members = [[i] for i in range(nclauses)] if groups is None else groups
     total = np.zeros(len(docs), dtype)
-    for i in range(nclauses):
-        sl = slice(cuts[i], cuts[i + 1])
-        total[row[sl]] += score[sl]
+    if groups is None:
+        # 0 + s0 + s1 + ... in clause order (a missed clause adds
+        # nothing, not +0)
+        for i in range(nclauses):
+            total[row[cuts[i]:cuts[i + 1]]] += score[cuts[i]:cuts[i + 1]]
+        prow, pgrp = row, clause
+    else:
+        tie = dtype(tie)
+        gid = np.empty(nclauses, np.int64)
+        for g, m in enumerate(groups):
+            cols = np.zeros((len(m), len(docs)), dtype)
+            for j, i in enumerate(m):
+                cols[j, row[cuts[i]:cuts[i + 1]]] = score[cuts[i]:cuts[i + 1]]
+            summed = cols[0]
+            for col in cols[1:]:
+                summed = summed + col
+            mx = cols.max(axis=0)
+            total += mx + tie * (summed - mx)
+            gid[m] = g
+        # one (doc, group) pair per group a doc hits
+        pair = np.unique(row * len(groups) + gid[clause])
+        prow, pgrp = pair // len(groups), pair % len(groups)
+
+    def matched(idx):
+        """Per doc, how many of the groups ``idx`` it hits."""
+        sel = np.zeros(len(members), bool)
+        sel[list(idx)] = True
+        return np.bincount(prow[sel[pgrp]], minlength=len(docs))
+
     keep = np.ones(len(docs), bool)
-    for i in must:
-        hit = np.zeros(len(docs), bool)
-        hit[row[cuts[i]:cuts[i + 1]]] = True
-        keep &= hit
+    if len(must):
+        keep &= matched(set(must)) == len(set(must))
     if coord:
         # Spark computes coord in double and casts it to the score type
-        c = np.bincount(row, minlength=len(docs)) / np.float64(dtype(nclauses))
+        c = matched(range(len(members))) / np.float64(dtype(len(members)))
         total = (total * c.astype(dtype)).astype(dtype)
     if len(should) and msm:
-        in_should = np.isin(clause, list(should))
-        keep &= np.bincount(row[in_should], minlength=len(docs)) >= msm
+        keep &= matched(should) >= msm
     if exclude is not None:
         keep &= ~np.isin(docs, exclude)
     if after is not None:
@@ -187,6 +224,45 @@ def topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
 
     return topk.coalesce(1).mapInPandas(
         add_rank, schema=f"docid long, score {score_t}, rank long")
+
+
+def _combine_rows(docid, tidx, score, nclauses: int, k: int, dtype,
+                  **roles) -> dict:
+    """combine_topk over clause rows whose tidx -1 rows name excluded
+    docids (MUST_NOT terms and phrases)."""
+    hit = tidx >= 0
+    return combine_topk(docid[hit], tidx[hit], score[hit], nclauses, k,
+                        dtype, exclude=docid[~hit], **roles)
+
+
+def combine_frame(rows: DataFrame, nclauses: int, k: int, dtype=np.float32,
+                  **roles) -> DataFrame:
+    """combine_topk on the Spark executor. ``rows`` (docid, tidx, score)
+    are the clause hits; a row with tidx < 0 names a docid that must not
+    match (MUST_NOT terms and phrases, in the same stream). Hash
+    partitioning on docid puts every row of a doc in one partition, so
+    each partition's combine_topk(..., **roles) is exact there and emits
+    at most k rows; topk_with_rank merges them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    schema = T.StructType(result_schema(dtype).fields[:2])
+    out_schema = to_arrow_schema(schema)
+
+    def combine(batches):
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        docid, tidx, score = (
+            np.concatenate([b.column(c).to_numpy() for b in batches])
+            for c in ("docid", "tidx", "score"))
+        top = _combine_rows(docid, tidx, score, nclauses, k, dtype, **roles)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(top["docid"]), pa.array(top["score"])],
+            schema=out_schema)
+
+    return topk_with_rank(rows.select("docid", "tidx", "score")
+                          .repartition("docid").mapInArrow(combine, schema),
+                          k)
 
 
 def multi_collect(matches: DataFrame,
@@ -731,38 +807,60 @@ class IndexSearcher:
             cands = cands.join(F.broadcast(excl), "docid", "left_anti")
         return cands
 
-    def _search_local(self, q: BooleanQuery, dtype, similarity,
-                      after: tuple | None) -> dict:
-        """search() in the driver process: the in-process scan per clause
-        kind, then combine_topk."""
-        from .phrase import phrase_table
-        pos_terms = q.must + q.should
-        nterms = len(pos_terms)
-        pos_phr = [p for p in q.phrases if p.occur != "MUST_NOT"]
-        neg_phr = [p for p in q.phrases if p.occur == "MUST_NOT"]
-        cands = self._scan_local(
-            self._term_weights(pos_terms, dtype, similarity, q.boosts), dtype)
-        docid = [cands.column("docid").to_numpy()]
-        clause = [cands.column("tidx").to_numpy()]
-        score = [cands.column("score").to_numpy()]
-        for j, p in enumerate(pos_phr):
-            ph = phrase_table(self, list(p.terms), slop=p.slop, dtype=dtype,
-                              boost=p.boost)
-            docid.append(ph["docid"].to_numpy())
-            clause.append(np.full(len(ph), nterms + j))
-            score.append(ph["score"].to_numpy())
-        exclude = [self._scan_local(self._weights(q.must_not, dtype=dtype),
-                                    dtype).column("docid").to_numpy()]
-        exclude += [phrase_table(self, list(p.terms), slop=p.slop,
-                                 dtype=dtype)["docid"].to_numpy()
-                    for p in neg_phr]
-        must, should, msm = self._clause_roles(q, pos_phr)
-        return combine_topk(
-            np.concatenate(docid), np.concatenate(clause),
-            np.concatenate(score), nterms + len(pos_phr), q.k, dtype,
-            must=must, should=should, msm=msm,
-            coord=get_similarity(similarity).uses_coord(),
-            exclude=np.concatenate(exclude), after=after)
+    def _clause_rows(self, terms: list[str], dtype=np.float32,
+                     similarity=None, boosts: dict | None = None,
+                     phrases=(), neg_terms=(), spark: bool = False):
+        """A query's clause rows (docid, tidx, score): one per (doc,
+        clause) for ``terms`` (clause index = position in ``terms``) and
+        for each (clause index, terms, slop, boost) of ``phrases``; a
+        phrase of clause index -1 and every term of ``neg_terms`` give
+        rows of tidx -1, docids that must not match. Under the size rule
+        (and unless ``spark``) the in-process scans give NumPy columns;
+        otherwise the Spark scans give one DataFrame. Either is
+        _combine's input."""
+        from .phrase import phrase_scores, phrase_table
+        if not spark and self._runs_local(
+                self._postings_count(list(terms) + list(neg_terms))
+                + sum(self._postings_count(p[1], positions=True)
+                      for p in phrases)):
+            def cols(tbl, ti=None):
+                return (np.asarray(tbl["docid"]), np.full(len(tbl), ti)
+                        if ti is not None else np.asarray(tbl["tidx"]),
+                        np.asarray(tbl["score"]))
+            parts = [cols(self._scan_local(self._term_weights(
+                         terms, dtype, similarity, boosts), dtype)),
+                     cols(self._scan_local(self._weights(list(neg_terms),
+                                                         dtype), dtype), -1)]
+            parts += [cols(phrase_table(self, list(pterms), slop=slop,
+                                        dtype=dtype, boost=boost), ti)
+                      for ti, pterms, slop, boost in phrases]
+            return dict(zip(("docid", "tidx", "score"),
+                            map(np.concatenate, zip(*parts))))
+
+        def tagged(df, ti):
+            return df.select("docid", F.lit(ti).cast("int").alias("tidx"),
+                             "score")
+        rows = self._scored_candidates(terms, dtype=dtype, similarity=similarity,
+                                       boosts=boosts).select(
+                                           "docid", "tidx", "score")
+        if neg_terms:
+            rows = rows.unionByName(tagged(self._scored_candidates(
+                list(neg_terms), dtype=dtype), -1))
+        for ti, pterms, slop, boost in phrases:
+            rows = rows.unionByName(tagged(phrase_scores(
+                self, list(pterms), slop=slop, dtype=dtype, boost=boost), ti))
+        return rows
+
+    def _combine(self, rows, nclauses: int, k: int, dtype=np.float32,
+                 **roles) -> DataFrame:
+        """The finish of every scored query: combine_topk over clause
+        rows (a DataFrame, or columns docid/tidx/score held here), under
+        combine_frame or here (a <= k-row LocalTableScan)."""
+        if isinstance(rows, DataFrame):
+            return combine_frame(rows, nclauses, k, dtype, **roles)
+        return local_frame(self.spark, result_schema(dtype), _combine_rows(
+            *(np.asarray(rows[c]) for c in ("docid", "tidx", "score")),
+            nclauses, k, dtype, **roles))
 
     @staticmethod
     def _clause_roles(q: BooleanQuery, pos_phr: list):
@@ -808,114 +906,52 @@ class IndexSearcher:
         postings) the query runs here, in the driver, and the result's
         rows are already computed; otherwise it runs when collected."""
         q = self._coerce(query, op, k)
-        if doc_filter is None and docid_filter is None and self._runs_local(
-                self._postings_count(q.must + q.should + q.must_not)
-                + sum(self._postings_count(p.terms, positions=True)
-                      for p in q.phrases)):
-            return local_frame(self.spark, result_schema(dtype),
-                               self._search_local(q, dtype, similarity, after))
-
-        def apply_filter(df: DataFrame) -> DataFrame:
-            if doc_filter is not None:
-                flt = (self.spark.read.parquet(self.paths.docs)
-                       .filter(doc_filter).select("docid"))
-                df = df.join(flt, "docid", "left_semi")
-            if docid_filter is not None:
-                df = df.join(docid_filter.select("docid"),
-                             "docid", "left_semi")
-            return df
-        sim = get_similarity(similarity)
         pos_terms = q.must + q.should
-        cands = self._scored_candidates(pos_terms, dtype=dtype,
-                                        similarity=similarity, boosts=q.boosts)
-        nterms = len(pos_terms)
         pos_phr = [p for p in q.phrases if p.occur != "MUST_NOT"]
-        neg_phr = [p for p in q.phrases if p.occur == "MUST_NOT"]
-        nclauses = nterms + len(pos_phr)
+        nclauses = len(pos_terms) + len(pos_phr)
         if nclauses == 0:
-            return cands.select(
-                "docid", "score", F.lit(1).cast("long").alias("rank")).limit(0)
+            return local_frame(self.spark, result_schema(dtype))
+        # each positional phrase is one clause after the terms (PhraseWeight
+        # inside BooleanWeight)
+        rows = self._clause_rows(
+            pos_terms, dtype, similarity, q.boosts,
+            phrases=[(len(pos_terms) + j, p.terms, p.slop, p.boost)
+                     for j, p in enumerate(pos_phr)]
+            + [(-1, p.terms, p.slop, 1.0) for p in q.phrases
+               if p.occur == "MUST_NOT"],
+            neg_terms=q.must_not,
+            spark=doc_filter is not None or docid_filter is not None)
+        if isinstance(rows, DataFrame):
+            rows = self._doc_filtered(rows, doc_filter, docid_filter)
+            if (len(pos_terms) == 1 and not q.phrases and not q.must_not
+                    and after is None and q.min_should_match <= 1):
+                # (msm > 1 with one should-term matches nothing; the
+                # combine handles that — don't take the fast path)
+                # single-term fast path: a term's postings rows hold
+                # disjoint docid ranges (base buckets and NRT generations
+                # alike) and the scan already dropped deleted docs, so
+                # docids are unique — no combine shuffle at all; the plan
+                # is scan → score → TakeOrderedAndProject (TermScorer
+                # straight into TopScoreDocCollector, TermQuery.java:40)
+                return topk_with_rank(rows, q.k)
+        must, should, msm = self._clause_roles(q, pos_phr)
+        return self._combine(
+            rows, nclauses, q.k, dtype, must=must, should=should, msm=msm,
+            coord=get_similarity(similarity).uses_coord(), after=after)
 
-        if (nclauses == 1 and nterms == 1 and not q.must_not and not neg_phr
-                and after is None and q.min_should_match <= 1):
-            # (msm > 1 with one should-term matches nothing; the general
-            # path below handles that — don't take the fast path)
-            # single-term fast path: a term's postings rows hold disjoint
-            # docid ranges (base buckets and NRT generations alike) and
-            # the scan already dropped deleted docs, so docids are unique
-            # — no combine shuffle at all; the plan is
-            # scan → score → TakeOrderedAndProject (TermScorer straight
-            # into TopScoreDocCollector, TermQuery.java:40)
-            return topk_with_rank(apply_filter(cands), q.k)
-
-        if pos_phr:
-            # each positional phrase is one clause: its per-doc scores
-            # (PhraseWeight inside BooleanWeight) union into the candidate
-            # stream under its own clause index
-            from .phrase import phrase_scores
-            for j, p in enumerate(pos_phr):
-                ph = phrase_scores(self, list(p.terms), slop=p.slop,
-                                   dtype=dtype, boost=p.boost)
-                cands = cands.unionByName(
-                    ph.select("docid",
-                              F.lit(nterms + j).cast("int").alias("tidx"),
-                              "score"))
-
-        # combine per doc: pivot on clause index, add left-to-right (float32
-        # association order == oracle scatter-add; adding 0.0f is exact)
-        pivoted = (cands.groupBy("docid")
-                   .pivot("tidx", list(range(nclauses)))
-                   .agg(F.first("score")))
-        zero = F.lit(0.0).cast("float" if dtype == np.float32 else "double")
-        total = F.coalesce(F.col("0"), zero)
-        nmatch = F.col("0").isNotNull().cast("int")
-        for i in range(1, nclauses):
-            total = total + F.coalesce(F.col(str(i)), zero)
-            nmatch = nmatch + F.col(str(i)).isNotNull().cast("int")
-        must_idx, should_idx, msm = self._clause_roles(q, pos_phr)
-        must_ok = F.lit(True)
-        for i in must_idx:
-            must_ok = must_ok & F.col(str(i)).isNotNull()
-        scored = (pivoted
-                  .withColumn("score", total)
-                  .withColumn("nmatch", nmatch)
-                  .filter(must_ok))
-        if sim.uses_coord():
-            # coord(overlap, maxOverlap) multiplies the clause-score sum
-            # (DefaultSimilarity.java:61-63 via BooleanScorer2 coordFactors).
-            # Spark promotes float arithmetic to double; for small int
-            # ratios and a float×float product, double-then-cast-to-float
-            # equals Java's direct float ops (2k+2 <= 53 double-rounding
-            # bound), so this stays bit-identical to the NumPy oracle.
-            ftype = "float" if dtype == np.float32 else "double"
-            coord = (F.col("nmatch").cast("double")
-                     / F.lit(float(dtype(nclauses)))).cast(ftype)
-            scored = scored.withColumn(
-                "score", (F.col("score") * coord).cast(ftype))
-        if should_idx and msm:
-            smatch = None
-            for i in should_idx:
-                c = F.col(str(i)).isNotNull().cast("int")
-                smatch = c if smatch is None else smatch + c
-            scored = scored.filter(smatch >= msm)
-        if q.must_not:
-            neg = self._scored_candidates(q.must_not, dtype=dtype) \
-                      .select("docid").distinct()
-            scored = scored.join(neg, "docid", "left_anti")  # ReqExclScorer
-        for p in neg_phr:
-            from .phrase import phrase_scores
-            negp = phrase_scores(self, list(p.terms), slop=p.slop,
-                                 dtype=dtype).select("docid")
-            scored = scored.join(negp, "docid", "left_anti")
-        if after is not None:
-            # searchAfter paging (TopScoreDocCollector.java:139-151): only
-            # hits strictly after the (score desc, docid asc) cursor
-            a_score, a_docid = after
-            scored = scored.filter(
-                (F.col("score") < F.lit(float(a_score))) |
-                ((F.col("score") == F.lit(float(a_score))) &
-                 (F.col("docid") > F.lit(int(a_docid)))))
-        return topk_with_rank(apply_filter(scored), q.k)
+    def _doc_filtered(self, rows: DataFrame, doc_filter=None,
+                      docid_filter: DataFrame | None = None) -> DataFrame:
+        """``rows`` semi-joined to search()'s doc_filter (a predicate over
+        the docs table) and docid_filter (a DataFrame of docids). A
+        filter keeps or drops all of a doc's rows, so filtering before
+        the per-doc combine equals filtering after it."""
+        if doc_filter is not None:
+            rows = rows.join(self.spark.read.parquet(self.paths.docs)
+                             .filter(doc_filter).select("docid"),
+                             "docid", "left_semi")
+        if docid_filter is not None:
+            rows = rows.join(docid_filter.select("docid"), "docid", "left_semi")
+        return rows
 
     # search_wand runs block-max WAND only where it is the cheaper plan:
     # on the Spark executor, from this many candidate postings on. Below
@@ -1132,88 +1168,40 @@ class IndexSearcher:
         if not self.fields:
             raise ValueError("search_edismax requires a multi-field index")
         clauses = list(must) + list(should)
-        n_must = len(must)
-        nf = len(fields)
-        ftype = "float" if dtype == np.float32 else "double"
-        spark = self.spark
         if not clauses:
-            return local_frame(spark, result_schema(dtype))
-        term_keys, term_boosts = [], {}
-        phrase_specs = []      # (clause_idx, field_idx, terms, slop)
-        key_of = {}            # (clause_idx, field_idx) -> tidx
+            return local_frame(self.spark, result_schema(dtype))
+        boost = {f_: (field_boosts or {}).get(f_, 1.0) for f_ in fields}
+
+        def is_phrase(cl):
+            return isinstance(cl, tuple) and cl[0] == "PHRASE"
+
+        # group = clause, members = its fields; clause index of a
+        # (clause, field): the term clauses first, then the phrase clauses
+        groups = [[] for _ in clauses]
+        term_keys, term_boosts, phrases = [], {}, []
         for ci, cl in enumerate(clauses):
-            for fi, f_ in enumerate(fields):
-                if isinstance(cl, tuple) and cl[0] == "PHRASE":
-                    phrase_specs.append((ci, fi, cl[1], cl[2]))
-                    key_of[(ci, fi)] = None   # assigned after terms
-                else:
-                    key = self.term_key(f_, cl)
-                    key_of[(ci, fi)] = len(term_keys)
-                    term_keys.append(key)
-                    b = (field_boosts or {}).get(f_, 1.0)
-                    if b != 1.0:
-                        term_boosts[key] = b
-        cands = self._scored_candidates(term_keys, dtype=dtype,
-                                        boosts=term_boosts)
-        next_idx = len(term_keys)
-        from .phrase import phrase_scores
-        for (ci, fi, terms, slop) in phrase_specs:
-            key_of[(ci, fi)] = next_idx
-            fld = fields[fi]
-            qterms = [self.term_key(fld, t) for t in terms]
-            b = (field_boosts or {}).get(fld, 1.0)
-            ph = phrase_scores(self, qterms, slop=slop, dtype=dtype, boost=b)
-            cands = cands.unionByName(
-                ph.select("docid", F.lit(next_idx).cast("int").alias("tidx"),
-                          "score"))
-            next_idx += 1
-        piv = (cands.groupBy("docid")
-               .pivot("tidx", list(range(next_idx)))
-               .agg(F.first("score")))
-        zero = F.lit(0.0).cast(ftype)
-        total = None
-        matched_cols = []
-        for ci in range(len(clauses)):
-            cols = [F.coalesce(F.col(str(key_of[(ci, fi)])), zero)
-                    for fi in range(nf)]
-            mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
-            summed = cols[0]
-            for c in cols[1:]:
-                summed = summed + c
-            val = (mx + (F.lit(float(tiebreak)).cast(ftype)
-                         * (summed - mx))).cast(ftype)
-            total = val if total is None else (total + val).cast(ftype)
-            matched = None
-            for fi in range(nf):
-                c = F.col(str(key_of[(ci, fi)])).isNotNull()
-                matched = c if matched is None else (matched | c)
-            matched_cols.append(matched)
-        scored = piv.withColumn("score", total)
-        for ci in range(n_must):           # required clauses
-            scored = scored.filter(matched_cols[ci])
-        if mm and len(clauses) > n_must:
-            nmatch = None
-            for ci in range(n_must, len(clauses)):
-                c = matched_cols[ci].cast("int")
-                nmatch = c if nmatch is None else nmatch + c
-            scored = scored.filter(nmatch >= mm)
-        elif n_must == 0:
-            # pure-optional query: at least one clause must match (the
-            # pivot already guarantees this — every row matched something)
-            pass
-        for cl in must_not:
-            if isinstance(cl, tuple) and cl[0] == "PHRASE":
-                for f_ in fields:
-                    qterms = [self.term_key(f_, t) for t in cl[1]]
-                    neg = phrase_scores(self, qterms, slop=cl[2],
-                                        dtype=dtype).select("docid")
-                    scored = scored.join(neg, "docid", "left_anti")
-            else:
-                keys = [self.term_key(f_, cl) for f_ in fields]
-                neg = self._scored_candidates(keys, dtype=dtype) \
-                          .select("docid").distinct()
-                scored = scored.join(neg, "docid", "left_anti")
-        return topk_with_rank(scored, k)
+            for f_ in fields if not is_phrase(cl) else ():
+                groups[ci].append(len(term_keys))
+                term_keys.append(self.term_key(f_, cl))
+                if boost[f_] != 1.0:
+                    term_boosts[term_keys[-1]] = boost[f_]
+        for ci, cl in enumerate(clauses):
+            for f_ in fields if is_phrase(cl) else ():
+                groups[ci].append(len(term_keys) + len(phrases))
+                phrases.append((groups[ci][-1],
+                                [self.term_key(f_, t) for t in cl[1]],
+                                cl[2], boost[f_]))
+        nclauses = len(term_keys) + len(phrases)
+        phrases += [(-1, [self.term_key(f_, t) for t in cl[1]], cl[2], 1.0)
+                    for cl in must_not if is_phrase(cl) for f_ in fields]
+        rows = self._clause_rows(
+            term_keys, dtype, boosts=term_boosts, phrases=phrases,
+            neg_terms=[self.term_key(f_, cl) for cl in must_not
+                       if not is_phrase(cl) for f_ in fields])
+        return self._combine(
+            rows, nclauses, k, dtype, groups=groups,
+            tie=tiebreak, must=range(len(must)),
+            should=range(len(must), len(clauses)), msm=mm)
 
     def _coerce(self, query, op: str, k: int | None) -> BooleanQuery:
         if isinstance(query, BooleanQuery):
@@ -1252,31 +1240,15 @@ class IndexSearcher:
         terms = analyze_text(query) if isinstance(query, str) else list(query)
         if not self.fields:
             raise ValueError("search_dismax requires a multi-field index")
-        keys, tboosts = [], {}
-        for t in terms:
-            for f_ in fields:
-                key = self.term_key(f_, t)
-                keys.append(key)
-                b = (boosts or {}).get(f_, 1.0)
-                if b != 1.0:
-                    tboosts[key] = b
-        cands = self._scored_candidates(keys, dtype=dtype, boosts=tboosts)
+        # group = query term, members = its fields
+        keys = [self.term_key(f_, t) for t in terms for f_ in fields]
+        if not keys:
+            return local_frame(self.spark, result_schema(dtype))
+        tboosts = {self.term_key(f_, t): b for t in terms
+                   for f_, b in (boosts or {}).items()
+                   if f_ in fields and b != 1.0}
         nf = len(fields)
-        piv = (cands.groupBy("docid")
-               .pivot("tidx", list(range(len(keys))))
-               .agg(F.first("score")))
-        ftype = "float" if dtype == np.float32 else "double"
-        zero = F.lit(0.0).cast(ftype)
-        total = None
-        for ti in range(len(terms)):
-            cols = [F.coalesce(F.col(str(ti * nf + fi)), zero)
-                    for fi in range(nf)]
-            mx = F.greatest(*cols) if len(cols) > 1 else cols[0]
-            summed = cols[0]
-            for c in cols[1:]:
-                summed = summed + c
-            per_term = (mx + (F.lit(float(tiebreak)).cast(ftype)
-                              * (summed - mx))).cast(ftype)
-            total = per_term if total is None else (total + per_term).cast(ftype)
-        # only docs matching at least one (term, field) survive the pivot
-        return topk_with_rank(piv.withColumn("score", total), k)
+        rows = self._clause_rows(keys, dtype, boosts=tboosts)
+        return self._combine(
+            rows, len(keys), k, dtype, tie=tiebreak,
+            groups=[list(range(i, i + nf)) for i in range(0, len(keys), nf)])

@@ -46,7 +46,10 @@ passes the dropped blocks. The scan reads the searcher's view and drops
 deleted docs, as every other query does. Block counts (``stats``) are
 exact and computed on the driver from the summary and the dropped table,
 which the plan collects anyway: no accumulator, so no double counting
-across jobs or retries.
+across jobs or retries. The kept postings finish as every scored query
+does: combine_topk adds each doc's term scores and keeps the top k, in
+the driver or on each docid-hash partition under combine_frame
+(IndexSearcher._combine).
 
 Under the searcher's size rule (IndexSearcher.LOCAL_POSTINGS) the same
 steps run in the driver process on pandas/Arrow: the grid from
@@ -83,7 +86,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .bm25 import B as B_PARAM
 from .bm25 import K1
-from .engine import combine_topk, local_frame, result_schema, topk_with_rank
+from .engine import local_frame, result_schema
 
 # docid chunk for grid partitioning = the doc-bucket of the routing
 # scheme (index/build.py BUCKET_SHIFT): chunks are uniformly doc-dense,
@@ -455,17 +458,7 @@ def search_wand(searcher, terms: list[str], k: int = 10, dtype=np.float32,
 
     if local:
         cands = searcher._scan_local(weights, dtype, skip=dropped)
-        return local_frame(spark, result_schema(dtype), combine_topk(
-            cands.column("docid").to_numpy(), cands.column("tidx").to_numpy(),
-            cands.column("score").to_numpy(), len(terms), k, dtype))
-    grid.unpersist()
-    cands = searcher._scored_candidates(terms, dtype=dtype, skip=dropped)
-    pivoted = (cands.groupBy("docid")
-               .pivot("tidx", list(range(len(terms))))
-               .agg(F.first("score")))
-    zero = F.lit(0.0).cast("float" if dtype == np.float32 else "double")
-    total = None
-    for i in range(len(terms)):
-        c = F.coalesce(F.col(str(i)), zero)
-        total = c if total is None else total + c
-    return topk_with_rank(pivoted.withColumn("score", total), k)
+    else:
+        grid.unpersist()
+        cands = searcher._scored_candidates(terms, dtype=dtype, skip=dropped)
+    return searcher._combine(cands, len(terms), k, dtype)

@@ -29,10 +29,10 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 
-from .analysis.standard import analyze_series
-from .index.build import BUCKET_SHIFT
-from .index.smallfloat import encode_norm
-from .search.bm25 import avg_field_length
+from lucene_solr_1_spark.analysis.standard import analyze_series
+from lucene_solr_1_spark.index.build import BUCKET_SHIFT
+from lucene_solr_1_spark.index.smallfloat import encode_norm
+from lucene_solr_1_spark.search.bm25 import avg_field_length
 
 DEFAULT_SEGMENTS = 16
 
@@ -125,7 +125,7 @@ def oracle_search(idx: OracleIndex, terms: list[str], op: str = "OR",
     (same registry as the engine — search/similarities.py).
     Returns DataFrame(docid, url, score, rank).
     """
-    from .search.similarities import get_similarity
+    from lucene_solr_1_spark.search.similarities import get_similarity
     sim = get_similarity(similarity)
     msm = 1
     if op == "AND":

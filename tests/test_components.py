@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from lucene_solr_1_spark.fixtures.webtext import gen_docs
 from lucene_solr_1_spark.index.build import build_index
-from lucene_solr_1_spark.oracle import build_oracle_index
+from oracle import build_oracle_index
 from lucene_solr_1_spark.search.engine import IndexSearcher
 from lucene_solr_1_spark.search.queryparser import parse_clauses, parse_query
 from lucene_solr_1_spark.solr.facets import (drill_sideways, facet_field,
@@ -259,7 +259,7 @@ def test_head_term_fanout_buckets(spark, tmp_root):
     # and the split index still answers queries identically to the oracle
     oracle = build_oracle_index(docs_pdf["url"].to_numpy(),
                                 docs_pdf["text"].to_numpy(), num_segments=4)
-    from lucene_solr_1_spark.oracle import oracle_search
+    from oracle import oracle_search
     searcher = IndexSearcher(spark, paths.root)
     head = oracle.term_stats.nlargest(1, "df")["term"].iloc[0]
     exp = oracle_search(oracle, [head], "OR", 10)
@@ -305,7 +305,7 @@ def test_explain(spark, built):
     ex = searcher.explain(head, docid)
     assert ex["match"] and ex["details"]["freq"] >= 1
     # explanation score equals the search-path score contribution
-    from lucene_solr_1_spark.oracle import oracle_search
+    from oracle import oracle_search
     got = oracle_search(oracle, [head], "OR", k=10**6)
     row = got[got["docid"] == docid]
     assert np.float32(ex["score"]) == row["score"].iloc[0]
@@ -317,8 +317,9 @@ def test_explain(spark, built):
 
 def test_extra_analysis_stages(spark):
     from lucene_solr_1_spark.analysis.extra import (
-        ascii_fold_expr, ascii_fold_py, edge_ngrams_expr, edge_ngrams_py,
-        ngrams_py, shingles_expr, shingles_py)
+        ascii_fold_expr, edge_ngrams_expr, shingles_expr)
+    from analysis_twins import (
+        ascii_fold_py, edge_ngrams_py, ngrams_py, shingles_py)
     assert ascii_fold_py("café naïve") == "cafe naive"
     assert shingles_py(["a", "b", "c"], 2) == ["a b", "b c"]
     assert ngrams_py("spark", 3) == ["spa", "par", "ark"]
@@ -346,8 +347,8 @@ def test_wildcard_query_rewrite(spark, built):
 def test_word_delimiter_parity(spark):
     import pandas as pd
     from pyspark.sql import functions as F
-    from lucene_solr_1_spark.analysis.extra import (word_delimiter_expr,
-                                                    word_delimiter_py)
+    from lucene_solr_1_spark.analysis.extra import word_delimiter_expr
+    from analysis_twins import word_delimiter_py
     toks = ["PowerShot", "wi-fi", "x86_64", "SD500", "foo", "O.K",
             "camelCaseWord", "3dsMax9"]
     assert word_delimiter_py("PowerShot") == ["Power", "Shot"]
@@ -368,8 +369,8 @@ def test_word_delimiter_parity(spark):
 def test_cjk_bigrams_parity(spark):
     import pandas as pd
     from pyspark.sql import functions as F
-    from lucene_solr_1_spark.analysis.extra import (cjk_bigrams_expr,
-                                                    cjk_bigrams_py)
+    from lucene_solr_1_spark.analysis.extra import cjk_bigrams_expr
+    from analysis_twins import cjk_bigrams_py
     rows = [["hello", "日本語", "中"], [], ["中文搜索", "x86"]]
     assert cjk_bigrams_py(["日本語"]) == ["日本", "本語"]
     assert cjk_bigrams_py(["中"]) == ["中"]
@@ -457,10 +458,11 @@ def test_pattern_and_mapping_factories(spark):
     Trim / Keyword factory analogs: Python form = reference semantics
     (longest-match, non-rescanning), JVM expr form parity-checked."""
     from lucene_solr_1_spark.analysis.extra import (
-        keyword_tokenize_expr, keyword_tokenize_py, length_filter_expr,
-        length_filter_py, mapping_charfilter_expr, mapping_charfilter_py,
-        pattern_replace_expr, pattern_replace_py, pattern_tokenize_expr,
-        pattern_tokenize_py, trim_filter_expr, trim_filter_py)
+        keyword_tokenize_expr, length_filter_expr, mapping_charfilter_expr,
+        pattern_replace_expr, pattern_tokenize_expr, trim_filter_expr)
+    from analysis_twins import (
+        keyword_tokenize_py, length_filter_py, mapping_charfilter_py,
+        pattern_replace_py, pattern_tokenize_py, trim_filter_py)
     # longest match wins at each position (NormalizeCharMap FST semantics)
     assert mapping_charfilter_py("aaa", {"a": "b", "aa": "c"}) == "cb"
     # replacement output is not rescanned
@@ -718,7 +720,8 @@ def test_elision_filter(spark):
     apostrophe stripped; Python == JVM expr."""
     from pyspark.sql import functions as SF
 
-    from lucene_solr_1_spark.analysis.extra import elision_expr, elision_py
+    from lucene_solr_1_spark.analysis.extra import elision_expr
+    from analysis_twins import elision_py
     toks = ["l'avion", "qu'il", "plane", "aujourd'hui", "d'art",
             "L'Homme", "j’aime"]
     exp = ["avion", "il", "plane", "aujourd'hui", "art", "Homme", "aime"]
@@ -819,7 +822,7 @@ def test_misc_token_filters_r4():
     """r4 factory batch: ReverseString, Capitalization,
     RemoveDuplicates, Apostrophe, HyphenatedWords, LimitTokenCount —
     javadoc-example semantics."""
-    from lucene_solr_1_spark.analysis.extra import (
+    from analysis_twins import (
         apostrophe_py, capitalization_py, hyphenated_words_py,
         limit_token_count_py, remove_duplicates_py, reverse_string_py)
     assert reverse_string_py(["Do", "have", "a", "nice", "day"]) == \
@@ -911,8 +914,8 @@ def test_value_source_registry_breadth_r4(spark):
 def test_english_possessive_and_norwegian_minimal_r4(spark):
     from pyspark.sql import functions as SF
 
-    from lucene_solr_1_spark.analysis.extra import (english_possessive_expr,
-                                                    english_possessive_py)
+    from lucene_solr_1_spark.analysis.extra import english_possessive_expr
+    from analysis_twins import english_possessive_py
     from lucene_solr_1_spark.analysis.stemmer import stem_vocab
     toks = ["O'Reilly's", "dog’s", "cats", "parens'S"]
     exp = ["O'Reilly", "dog", "cats", "parens"]

@@ -23,7 +23,7 @@ from lucene_solr_1_spark.index.codec import (
 from lucene_solr_1_spark.index.smallfloat import (
     byte315_to_float, decode_norm_len, encode_norm, float_to_byte315,
 )
-from lucene_solr_1_spark.oracle import build_oracle_index, oracle_search
+from oracle import build_oracle_index, oracle_search
 from lucene_solr_1_spark.search.bm25 import idf, make_weight, score_postings
 
 

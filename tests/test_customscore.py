@@ -10,7 +10,7 @@ import pytest
 
 from lucene_solr_1_spark.fixtures.webtext import gen_docs
 from lucene_solr_1_spark.index.build import build_index
-from lucene_solr_1_spark.oracle import build_oracle_index, oracle_search
+from oracle import build_oracle_index, oracle_search
 from lucene_solr_1_spark.search.customscore import (boosting_search,
                                                     custom_score_search)
 from lucene_solr_1_spark.search.engine import IndexSearcher

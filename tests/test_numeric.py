@@ -17,7 +17,7 @@ from lucene_solr_1_spark.index.numeric import (build_numeric_index,
                                                numeric_range_docids,
                                                range_term_bounds, split_range,
                                                trie_terms_expr, trie_terms_py)
-from lucene_solr_1_spark.oracle import build_oracle_index
+from oracle import build_oracle_index
 from lucene_solr_1_spark.search.engine import IndexSearcher
 
 

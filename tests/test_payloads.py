@@ -215,3 +215,12 @@ def test_payload_near_empty_and_missing_term(spark, built):
     _, searcher, ppath = built
     assert payload_near_topk(searcher, ppath,
                              ["rain", "nosuchterm"], k=5).count() == 0
+
+
+def test_payload_near_absent_term_schema_is_the_search_schema(spark, built):
+    from lucene_solr_1_spark.index.payloads import payload_near_topk
+    _, searcher, ppath = built
+    got = payload_near_topk(searcher, ppath, ["rain", "nosuchterm"], k=5)
+    assert got.schema == searcher.search(["nosuchterm"], k=5).schema
+    assert "LocalTableScan" in (
+        got._jdf.queryExecution().executedPlan().toString())

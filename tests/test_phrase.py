@@ -10,7 +10,7 @@ from lucene_solr_1_spark.analysis.standard import analyze_with_positions
 from lucene_solr_1_spark.fixtures.webtext import gen_docs
 from lucene_solr_1_spark.index.build import build_index
 from lucene_solr_1_spark.index.codec import decode_positions, unpack_postings
-from lucene_solr_1_spark.oracle import build_oracle_index
+from oracle import build_oracle_index
 from lucene_solr_1_spark.search.bm25 import (B, K1, avg_field_length,
                                              idf as bm25_idf)
 from lucene_solr_1_spark.search.engine import IndexSearcher

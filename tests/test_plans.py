@@ -83,7 +83,8 @@ def test_analyzer_expr_stays_jvm_side(spark, built):
 
 def test_single_term_search_has_no_shuffle(spark, built, spark_executor):
     """Single-term top-k = scan -> score -> TakeOrderedAndProject; the
-    combine shuffle (groupBy pivot) must be absent."""
+    combine shuffle (the docid hash exchange under combine_frame) must be
+    absent."""
     topk = built.search(["alpha"], "OR", k=10)
     plan = topk._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -91,6 +92,102 @@ def test_single_term_search_has_no_shuffle(spark, built, spark_executor):
     body = plan.split("===== Subqueries")[0]
     assert "TakeOrderedAndProject" in body
     assert "Exchange" not in body, body[:1500]
+
+
+@pytest.fixture(scope="module")
+def fielded(spark, tmp_root):
+    """A positional two-field index: phrase, dismax and edismax plans."""
+    import numpy as np
+    import pandas as pd
+    rng = np.random.default_rng(5)
+    vocab = [f"v{i}" for i in range(25)]
+    docs = pd.DataFrame(
+        [(f"f{i:05d}", " ".join(rng.choice(vocab, 4)),
+          " ".join(rng.choice(vocab, 30))) for i in range(300)],
+        columns=["url", "title", "body"])
+    paths = build_index(spark, spark.createDataFrame(docs),
+                        os.path.join(tmp_root, "idx_plans_fielded"),
+                        num_segments=2, fields=["title", "body"],
+                        positions=True)
+    return IndexSearcher(spark, paths.root)
+
+
+def _children(node) -> list:
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _walk(node, parent=None):
+    """(node, parent) over the physical plan, broadcast sides skipped."""
+    if node.nodeName() == "BroadcastExchange":
+        return
+    yield node, parent
+    for kid in _children(node):
+        yield from _walk(kid, node)
+
+
+def _funnels(plan) -> list[str]:
+    """Nodes that gather many partitions into one."""
+    return [n.nodeName() for n, _ in _walk(plan)
+            if n.outputPartitioning().numPartitions() == 1
+            and any(k.outputPartitioning().numPartitions() != 1
+                    for k in _children(n))]
+
+
+def _combine_shape(df):
+    """The walk's verdict on a top-k plan: its funnels, and per Python
+    map-in-Arrow node fed by a docid hash exchange, (node, its parent)."""
+    plan = df._jdf.queryExecution().executedPlan().initialPlan()
+    top = [plan.nodeName()]
+    while len(_children(plan)) == 1 and len(top) < 3:
+        plan = _children(plan)[0]
+        top.append(plan.nodeName())
+    fed = [(n.simpleString(5).split("(")[0], p.nodeName())
+           for n, p in _walk(plan) if n.nodeName() == "MapInArrow"
+           and any(k.nodeName() == "Exchange" and k.outputPartitioning()
+                   .toString().startswith("hashpartitioning(docid")
+                   for k in _children(n))]
+    return top, _funnels(plan), fed
+
+
+ONE_COMBINE = (["MapInPandas", "Coalesce", "TakeOrderedAndProject"],
+               ["TakeOrderedAndProject"],
+               [("MapInArrow combine", "TakeOrderedAndProject")])
+
+
+def test_one_docid_exchange_feeds_the_combine(spark, fielded,
+                                              spark_executor, monkeypatch):
+    """Every combining query is scans -> one docid hash exchange -> the
+    combine_topk kernel -> topk_with_rank; the only single-partition step
+    is topk_with_rank's TakeOrderedAndProject (plans built, not run)."""
+    from lucene_solr_1_spark.search.engine import BooleanQuery, PhraseClause
+    s = fielded
+    v = [s.term_key("body", f"v{i}") for i in range(8)]
+    plans = {
+        "or": s.search(v[:3], "OR", k=10),
+        "and": s.search(v[:2], "AND", k=10),
+        "msm2": s.search(v[:4], "MSM2", k=10),
+        "must_not": s.search(BooleanQuery(should=v[:2], must_not=[v[2]],
+                                          k=10)),
+        "phrase": s.search(BooleanQuery(
+            should=[v[0]], phrases=[PhraseClause((v[3], v[4]))], k=10)),
+        "wand": s.search_wand(v[:3], k=10, force=True),
+        "dismax": s.search_dismax(["v1", "v2"], ["title", "body"], 0.1,
+                                  k=10),
+        "edismax": s.search_edismax(
+            ["v4", ("PHRASE", ("v5", "v6"), 0)], ["v1"], ["v7"],
+            ["title", "body"], mm=1, k=10),
+    }
+    for name, df in plans.items():
+        assert _combine_shape(df) == ONE_COMBINE, name
+    # the walk flags a funnel injected before the combine
+    scan = IndexSearcher._scored_candidates
+    monkeypatch.setattr(IndexSearcher, "_scored_candidates",
+                        lambda self, *a, **kw: scan(self, *a, **kw)
+                        .repartition(1))
+    top, funnels, fed = _combine_shape(s.search(BooleanQuery(
+        should=v[:2], must_not=[v[2]], k=10)))
+    assert funnels.count("Exchange") == 2 and fed == ONE_COMBINE[2], funnels
 
 
 def test_join_query_broadcasts_small_from_side(spark):

@@ -16,7 +16,7 @@ import pytest
 from lucene_solr_1_spark.fixtures.webtext import gen_docs, gen_queries
 from lucene_solr_1_spark.index.build import IndexPaths, build_index
 from lucene_solr_1_spark.index.codec import unpack_postings
-from lucene_solr_1_spark.oracle import build_oracle_index, oracle_search
+from oracle import build_oracle_index, oracle_search
 from lucene_solr_1_spark.search.engine import BooleanQuery, IndexSearcher
 
 N_DOCS = 2000

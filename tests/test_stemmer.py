@@ -462,7 +462,7 @@ def test_scandinavian_full_snowball_vocabularies(lang, algo):
 def test_turkish_lowercase_filter_vectors():
     """The reference's TestTurkishLowerCaseFilter vectors (composed,
     decomposed, extra combining marks, bare I+dot, empty)."""
-    from lucene_solr_1_spark.analysis.extra import turkish_lowercase_py
+    from analysis_twins import turkish_lowercase_py
     cases = [
         ("İSTANBUL", "istanbul"), ("İZMİR", "izmir"),
         ("ISPARTA", "ısparta"),
@@ -482,8 +482,8 @@ def test_turkish_lowercase_expr_parity(spark):
     """JVM expression twin matches the Python filter char-for-char."""
     from pyspark.sql import functions as SF
 
-    from lucene_solr_1_spark.analysis.extra import (turkish_lowercase_expr,
-                                                    turkish_lowercase_py)
+    from lucene_solr_1_spark.analysis.extra import turkish_lowercase_expr
+    from analysis_twins import turkish_lowercase_py
     toks = ["İSTANBUL", "ISPARTA", "İZMİR",
             "İ̖STANBUL", "I̖SPARTA", "İ",
             "TÜRKİYE'NİN", "DOĞU", "Iıİ",

@@ -15,7 +15,7 @@ from lucene_solr_1_spark.index.termvectors import (build_term_vectors,
                                                    fast_vector_highlight,
                                                    get_term_vector,
                                                    mlt_terms_from_vector)
-from lucene_solr_1_spark.oracle import build_oracle_index
+from oracle import build_oracle_index
 from lucene_solr_1_spark.search.engine import IndexSearcher
 
 N_DOCS = 500

@@ -9,6 +9,7 @@ that adds documents and updates base documents, seen on the NRT view;
 and the same after tiered_compact folded that generation and a second
 micro-batch arrived (one folded and one unfolded generation)."""
 
+import contextlib
 import os
 import uuid
 
@@ -19,11 +20,12 @@ from pyspark.sql import functions as F
 
 from lucene_solr_1_spark.index.build import build_index
 from lucene_solr_1_spark.search.engine import (BooleanQuery, IndexSearcher,
-                                               PhraseClause)
-from lucene_solr_1_spark.search.phrase import phrase_search
+                                               PhraseClause, topk_with_rank)
+from lucene_solr_1_spark.search.phrase import phrase_scores, phrase_search
 from lucene_solr_1_spark.streaming.ingest import (StreamingIndexWriter,
                                                   nrt_postings,
                                                   tiered_compact)
+from pivot_reference import pivot_dismax, pivot_edismax, pivot_search
 
 UNBOUNDED = 1 << 62
 
@@ -73,22 +75,44 @@ def _rows(df):
             for r in df.collect()]
 
 
+class _Engine:
+    search = staticmethod(IndexSearcher.search)
+    phrase = staticmethod(phrase_search)
+    dismax = staticmethod(IndexSearcher.search_dismax)
+    edismax = staticmethod(IndexSearcher.search_edismax)
+
+
+class _Pivot:
+    """The same calls through the Catalyst pivot reference."""
+    search = staticmethod(pivot_search)
+    dismax = staticmethod(pivot_dismax)
+    edismax = staticmethod(pivot_edismax)
+
+    @staticmethod
+    def phrase(s, terms, slop=0, k=10):
+        return topk_with_rank(phrase_scores(s, terms, slop=slop), k)
+
+
 CASES = {
-    "term": lambda s: s.search(["alpha"], "OR", k=10),
-    "or": lambda s: s.search(["alpha", "beta", "w12"], "OR", k=10),
-    "and": lambda s: s.search(["alpha", "beta"], "AND", k=10),
-    "msm2": lambda s: s.search(["alpha", "beta", "w20", "w21"], "MSM2", k=10),
-    "must_not": lambda s: s.search(BooleanQuery(
+    "term": lambda s, e=_Engine: e.search(s, ["alpha"], "OR", k=10),
+    "or": lambda s, e=_Engine: e.search(s, ["alpha", "beta", "w12"], "OR",
+                                        k=10),
+    "and": lambda s, e=_Engine: e.search(s, ["alpha", "beta"], "AND", k=10),
+    "msm2": lambda s, e=_Engine: e.search(s, ["alpha", "beta", "w20", "w21"],
+                                          "MSM2", k=10),
+    "must_not": lambda s, e=_Engine: e.search(s, BooleanQuery(
         should=["alpha", "w30"], must_not=["beta"], k=10)),
-    "boosts": lambda s: s.search(BooleanQuery(
+    "boosts": lambda s, e=_Engine: e.search(s, BooleanQuery(
         should=["alpha", "beta", "w40"], boosts={"beta": 2.5}, k=10)),
-    "classic_coord": lambda s: s.search(["alpha", "beta", "w50"], "OR", k=10,
-                                        similarity="classic"),
-    "after": lambda s: s.search(["alpha", "beta"], "OR", k=5,
-                                after=_cursor(s, ["alpha", "beta"], 3)),
-    "phrase": lambda s: phrase_search(s, ["w10", "w11"], k=10),
-    "sloppy_phrase": lambda s: phrase_search(s, ["w10", "w12"], slop=2, k=10),
-    "bool_phrase": lambda s: s.search(BooleanQuery(
+    "classic_coord": lambda s, e=_Engine: e.search(
+        s, ["alpha", "beta", "w50"], "OR", k=10, similarity="classic"),
+    "after": lambda s, e=_Engine: e.search(
+        s, ["alpha", "beta"], "OR", k=5,
+        after=_cursor(s, ["alpha", "beta"], 3)),
+    "phrase": lambda s, e=_Engine: e.phrase(s, ["w10", "w11"], k=10),
+    "sloppy_phrase": lambda s, e=_Engine: e.phrase(s, ["w10", "w12"], slop=2,
+                                                   k=10),
+    "bool_phrase": lambda s, e=_Engine: e.search(s, BooleanQuery(
         should=["alpha"], must=["w61"],
         phrases=[PhraseClause(("w60", "w61"), slop=0, occur="SHOULD")],
         k=10)),
@@ -143,6 +167,107 @@ def test_count_executors_equal(spark, view, monkeypatch):
         assert counts[0] == counts[UNBOUNDED] > 0
 
 
+@contextlib.contextmanager
+def _partitions(spark, n):
+    """n shuffle partitions, none coalesced away by AQE."""
+    conf = {"spark.sql.shuffle.partitions": str(n),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {key: spark.conf.get(key) for key in conf}
+    for key, value in conf.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+
+
+PARTITIONS = (1, 7)
+
+
+@pytest.mark.parametrize("case", list(CASES))
+def test_spark_executor_equals_pivot_reference(spark, view, monkeypatch,
+                                               case):
+    """Each docid-hash partition's combine is exact: over 1 and 7
+    partitions the Spark executor returns the pivot arithmetic's bits."""
+    s = _searcher(spark, view, 0, monkeypatch)
+    want = _rows(CASES[case](s, _Pivot))
+    assert want
+    for n in PARTITIONS:
+        with _partitions(spark, n):
+            assert _rows(CASES[case](s)) == want, n
+
+
+def test_wand_and_filters_equal_pivot_reference(spark, view, monkeypatch):
+    s = _searcher(spark, view, 0, monkeypatch)
+    terms = ["alpha", "beta", "w12"]
+    ids = (spark.read.parquet(s.paths.docs)
+           .filter(F.col("url") >= "u000450").select("docid"))
+    flt = "url < 'u000600'"
+    calls = {
+        "wand": (lambda: s.search_wand(terms, k=10, force=True),
+                 lambda: pivot_search(s, terms, k=10)),
+        "doc_filter": (lambda: s.search(terms, k=10, doc_filter=flt),
+                       lambda: pivot_search(s, terms, k=10, doc_filter=flt)),
+        "docid_filter": (
+            lambda: s.search(terms, "AND", k=10, docid_filter=ids),
+            lambda: pivot_search(s, terms, "AND", k=10, docid_filter=ids)),
+        "filtered_term": (
+            lambda: s.search(["beta"], k=10, doc_filter=flt,
+                             docid_filter=ids),
+            lambda: pivot_search(s, ["beta"], k=10, doc_filter=flt,
+                                 docid_filter=ids)),
+    }
+    for name, (call, reference) in calls.items():
+        want = _rows(reference())
+        assert want, name
+        for n in PARTITIONS:
+            with _partitions(spark, n):
+                assert _rows(call()) == want, (name, n)
+
+
+@pytest.fixture(scope="module")
+def fielded(spark, tmp_root):
+    """A positional two-field index for dismax and edismax."""
+    rng = np.random.default_rng(5)
+    vocab = [f"v{i}" for i in range(25)]
+    docs = pd.DataFrame(
+        [(f"f{i:05d}", " ".join(rng.choice(vocab, 4)),
+          " ".join(rng.choice(vocab, 30))) for i in range(400)],
+        columns=["url", "title", "body"])
+    root = os.path.join(tmp_root, "two_exec_fielded")
+    build_index(spark, spark.createDataFrame(docs), root, num_segments=2,
+                fields=["title", "body"], positions=True)
+    return root
+
+
+FIELDS = ["title", "body"]
+FIELDED = {
+    "dismax": lambda s, e=_Engine: e.dismax(s, ["v1", "v2", "v3"], FIELDS,
+                                            0.0, 10),
+    "dismax_tie": lambda s, e=_Engine: e.dismax(
+        s, ["v1", "v2", "v3"], FIELDS, 0.3, 10, {"title": 2.0}),
+    "edismax": lambda s, e=_Engine: e.edismax(
+        s, ["v4", "v5", ("PHRASE", ("v8", "v9"), 1)], ["v1"],
+        ["v7", ("PHRASE", ("v2", "v3"), 0)], FIELDS, {"title": 2.0},
+        0.2, 2, 10),
+}
+
+
+@pytest.mark.parametrize("case", list(FIELDED))
+def test_dismax_executors_equal_pivot_reference(spark, fielded, monkeypatch,
+                                                case):
+    want = _rows(FIELDED[case](_searcher(spark, fielded, 0, monkeypatch),
+                               _Pivot))
+    assert want
+    s = _searcher(spark, fielded, UNBOUNDED, monkeypatch)
+    assert _rows(FIELDED[case](s)) == want
+    s = _searcher(spark, fielded, 0, monkeypatch)
+    for n in PARTITIONS:
+        with _partitions(spark, n):
+            assert _rows(FIELDED[case](s)) == want, n
+
+
 def _jobs(spark, fn):
     """(fn's result, number of Spark jobs it ran)."""
     sc = spark.sparkContext
@@ -167,6 +292,16 @@ def test_small_queries_run_no_spark_job(spark, view, monkeypatch):
         rows, n = _jobs(spark, lambda: call(s).collect())
         assert rows and n == 0, (name, n)
         s = _searcher(spark, view, 0, monkeypatch)
+        rows, n = _jobs(spark, lambda: call(s).collect())
+        assert rows and n > 0, name
+
+
+def test_small_dismax_queries_run_no_spark_job(spark, fielded, monkeypatch):
+    for name, call in FIELDED.items():
+        s = _searcher(spark, fielded, UNBOUNDED, monkeypatch)
+        rows, n = _jobs(spark, lambda: call(s).collect())
+        assert rows and n == 0, (name, n)
+        s = _searcher(spark, fielded, 0, monkeypatch)
         rows, n = _jobs(spark, lambda: call(s).collect())
         assert rows and n > 0, name
 

@@ -9,7 +9,7 @@ import pytest
 
 from lucene_solr_1_spark.fixtures.webtext import gen_docs, gen_queries
 from lucene_solr_1_spark.index.build import build_index
-from lucene_solr_1_spark.oracle import build_oracle_index, oracle_search
+from oracle import build_oracle_index, oracle_search
 from lucene_solr_1_spark.search.engine import IndexSearcher
 
 N_DOCS = 2500

@@ -9,7 +9,7 @@ import pytest
 
 from lucene_solr_1_spark.fixtures.webtext import gen_docs
 from lucene_solr_1_spark.index.build import build_index
-from lucene_solr_1_spark.oracle import build_oracle_index
+from oracle import build_oracle_index
 from lucene_solr_1_spark.search.engine import IndexSearcher
 from lucene_solr_1_spark.search.xmlparser import parse_xml_query, xml_search
 
