@@ -1348,16 +1348,19 @@ _VIEWS_CURRENT: dict[str, str] = {}
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register the testdata temp views, memoized per (session, sf_dir)
     (r6): ten parquet schema reads + view registrations cost ~0.85 s per
-    call even warm, and every SQL contract query paid it. The memo holds
-    only the LAST registered sf_dir per Spark application — switching
+    call even warm, and every SQL contract query paid it. Temp views
+    belong to one SparkSession, so the memo is keyed on the session
+    (its JVM session id): a session from spark.newSession() shares the
+    application but starts with no views, and registers its own. The
+    memo holds only the LAST registered sf_dir per session — switching
     sf_dir re-registers, so alternating scale factors in one session
     stays correct; no data is cached, views are pointers to parquet."""
-    app = spark.sparkContext.applicationId
-    if _VIEWS_CURRENT.get(app) == sf_dir:
+    session = spark._jsparkSession.sessionUUID()
+    if _VIEWS_CURRENT.get(session) == sf_dir:
         return
     for t in TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
-    _VIEWS_CURRENT[app] = sf_dir
+    _VIEWS_CURRENT[session] = sf_dir
 
 
 # CJK segmentation contract fixtures: sentences + token sequences pinned

@@ -51,8 +51,13 @@ DUP_NGRAM_THRESHOLDS = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12,
 _BULLETS = ("•", "‣", "■", "▪", "-", "*")
 
 
+def _text(text_col: str) -> Column:
+    """The text column with null read as the empty document."""
+    return F.coalesce(F.col(text_col), F.lit(""))
+
+
 def _words(text_col: str) -> Column:
-    return F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    return F.filter(F.split(_text(text_col), r"\s+"), lambda w: w != "")
 
 
 def _sum_len(arr: Column) -> Column:
@@ -83,18 +88,19 @@ def gopher_quality(df: DataFrame, text_col: str = "text",
     '...'), bullet-start and ellipsis-end line fractions, alphabetic
     word fraction, stop-word hits, duplicate line/paragraph (element
     and character) fractions; `gopher_quality_ok` applies the published
-    thresholds. All narrow per-row expressions."""
+    thresholds. All narrow per-row expressions. A null text is the
+    empty document, as in gopher_signals_df."""
     w = _words(text_col)
     out = df.withColumn("_w", w)
     nw = F.size("_w")
-    lines = F.filter(F.split(F.col(text_col), r"\n"),
+    lines = F.filter(F.split(_text(text_col), r"\n"),
                      lambda l: F.trim(l) != "")
-    paras = F.filter(F.split(F.col(text_col), r"\n\s*\n"),
+    paras = F.filter(F.split(_text(text_col), r"\n\s*\n"),
                      lambda p: F.trim(p) != "")
     nl = F.size(lines)
-    hash_count = (F.length(text_col)
-                  - F.length(F.regexp_replace(F.col(text_col), r"#", "")))
-    ell_count = F.size(F.split(F.col(text_col), r"\.\.\.|…")) - 1
+    hash_count = (F.length(_text(text_col))
+                  - F.length(F.regexp_replace(_text(text_col), r"#", "")))
+    ell_count = F.size(F.split(_text(text_col), r"\.\.\.|…")) - 1
     bullet_lines = F.size(F.filter(
         lines, lambda l: F.trim(l).substr(1, 1).isin(*_BULLETS)))
     ellipsis_lines = F.size(F.filter(
@@ -223,7 +229,9 @@ def gopher_signals_df(df: DataFrame, text_col: str = "text",
     tests/test_gopher.py::test_kernel_matches_expr_pipeline), including
     Java-regex whitespace: ``\\s`` is [ \\t\\n\\x0B\\f\\r] (NO Unicode
     spaces — Python's ``\\s`` would match U+00A0), and trim strips
-    ASCII spaces only, as Spark's ``trim`` does.
+    ASCII spaces only, as Spark's ``trim`` does. A null text is the empty
+    document in both pipelines: n_words 0, every fraction 0.0, and
+    gopher_quality_ok 0.
 
     Scale shape: one narrow mapInPandas, zero shuffles — identical to
     the JVM-expression path; the Arrow boundary carries (key, text) in

@@ -24,8 +24,12 @@ postings scan.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..search.phrase import DOC_SHIFT, Near, Occurrences, Spec
 
 
 def strip_payload_text(text_col, delimiter: str = "|"):
@@ -131,54 +135,62 @@ def payload_term_topk(searcher, payload_path: str, term: str,
     return topk_with_rank(scored, k)
 
 
-def _near_witnesses(pos_lists, slop: int, ordered: bool = True):
-    """Occurrence-index tuples, one per span match (the payload hooks of
-    NearSpansOrdered/Unordered.getPayload): for each anchor occurrence
-    of the first term, the greedy smallest-next witness (ordered,
-    NearSpansOrdered.java:49 — positions strictly increasing, slop
-    consumed = p_n - p_0 - (n-1)) or the nearest-in-window picks
-    (unordered), mirroring phrase._phrase_freq's counting so
-    len(witnesses) == the span kernel's freq."""
-    n = len(pos_lists)
-    out = []
-    if any(len(p) == 0 for p in pos_lists):
-        return out
-    if ordered:
-        for ai, anchor in enumerate(pos_lists[0]):
-            prev, idxs, ok = int(anchor), [ai], True
-            for p in pos_lists[1:]:
-                j = int(np.searchsorted(p, prev + 1))
-                if j >= len(p):
-                    ok = False
-                    break
-                prev = int(p[j])
-                idxs.append(j)
-            if ok and prev - int(anchor) - (n - 1) <= slop:
-                out.append(tuple(idxs))
-        return out
-    for ai, anchor in enumerate(pos_lists[0]):
-        anchor = int(anchor)
-        idxs, ok, lo, hi = [ai], True, anchor, anchor
-        for q in pos_lists[1:]:
-            j = int(np.searchsorted(q, anchor))
-            best = bj = None
-            for cand in (j - 1, j):
-                if 0 <= cand < len(q) \
-                        and abs(int(q[cand]) - anchor) <= slop:
-                    v = int(q[cand])
-                    if best is None or abs(v - anchor) < abs(best - anchor):
-                        best, bj = v, cand
-            if best is None:
-                ok = False
-                break
-            lo, hi = min(lo, best), max(hi, best)
-            if hi - lo > slop:
-                ok = False
-                break
-            idxs.append(bj)
-        if ok:
-            out.append(tuple(idxs))
-    return out
+@dataclass(frozen=True)
+class PayloadNear(Spec):
+    """The positions kernel's spec of PayloadNearQuery: ``near``'s freq,
+    and per doc ``fn`` (min / max / avg) over the payloads at every
+    match's witnesses — near_matches' picks, so freq is exactly the
+    number of witnesses and the span score and the payload set can never
+    disagree about what matched. The payload rows (docid, tidx,
+    payloads; null positions) come in the kernel's rows: the k-th entry
+    of a doc's payload array belongs to its k-th occurrence of the term
+    (both sides are built from the same analysis chain). An occurrence
+    without one contributes the identity payload 1.0 (the build's
+    undelimited-token default)."""
+    near: Near
+    fn: str = "avg"
+
+    def evaluate(self, occ: Occurrences, rows):
+        import pyarrow.compute as pc
+        keys, anchors, picks = self.near.matches(occ)
+        doc = keys[0][anchors] >> DOC_SHIFT
+        freq = np.bincount(doc, minlength=len(occ.docs))
+        # per (term, doc row): the doc's payloads as a slice of ``vals``
+        pay = rows.filter(pc.is_null(rows.column("positions")))
+        arr = pay.column("payloads").combine_chunks()
+        vals = arr.values.to_numpy(zero_copy_only=False).astype(np.float64)
+        pdoc = pay.column("docid").to_numpy()
+        prow = np.minimum(np.searchsorted(occ.docs, pdoc),
+                          max(len(occ.docs) - 1, 0))
+        found = (occ.docs[prow] == pdoc) if len(occ.docs) else pdoc < 0
+        nterms = max(max(s) for s in self.near.slots) + 1
+        start = np.zeros((nterms, len(occ.docs)), np.int64)
+        size = np.zeros((nterms, len(occ.docs)), np.int64)
+        ptix, poff = pay.column("tidx").to_numpy(), arr.offsets.to_numpy()
+        start[ptix[found], prow[found]] = poff[:-1][found]
+        size[ptix[found], prow[found]] = np.diff(poff)[found]
+        # one payload per (match, slot), match-major: a doc's values in
+        # witness order
+        cols = []
+        for (t,), k, pick in zip(self.near.slots, keys, [anchors] + picks):
+            j = pick - occ.doc_start(k, doc)
+            have = j < size[t, doc]
+            at = np.where(have, start[t, doc] + j, 0)
+            cols.append(np.where(have, vals[at], 1.0) if len(vals)
+                        else np.ones(len(doc)))
+        v = np.stack(cols, axis=1).ravel()
+        d = np.repeat(doc, len(cols))
+        if self.fn in ("min", "max"):
+            ufunc = np.minimum if self.fn == "min" else np.maximum
+            factor = np.ones(len(occ.docs))
+            if len(v):
+                first = np.flatnonzero(np.diff(d, prepend=-1))
+                factor[d[first]] = ufunc.reduceat(v, first)
+        else:
+            # bincount adds in input order: the witness-order sum
+            factor = np.bincount(d, weights=v, minlength=len(occ.docs))
+            factor /= np.maximum(np.bincount(d, minlength=len(occ.docs)), 1)
+        return freq, factor
 
 
 def payload_near_topk(searcher, payload_path: str, terms: list[str],
@@ -188,82 +200,17 @@ def payload_near_topk(searcher, payload_path: str, terms: list[str],
     java:58,264-267: score = spanScore * payloadFunction.docScore over
     the payloads collected at every span match's sub-positions).
 
-    One Arrow-batched pass over the positional pivot joined with the
-    per-term payload arrays: witnesses, span freq, and the payload
-    aggregate come out of the same kernel — freq is exactly
-    len(witnesses), so the span score and the payload set can never
-    disagree about what matched. Occurrence order aligns the k-th
-    position of a term in a doc with the k-th entry of its payload
-    array (both sides are built from the same analysis chain). A doc
-    missing its payload row contributes the identity payload 1.0 (the
-    build's undelimited-token default)."""
-    import pandas as pd
-
-    from ..search.bm25 import idf as bm25_idf
-    from ..search.engine import local_frame, result_schema
-    from ..search.phrase import _positional_piv
-    spark = searcher.spark
-    dtype = np.float32
+    The span is the strict ordered span-near (NearSpansOrdered) or the
+    unordered window; the positions kernel computes its freq, witnesses
+    and payload aggregate in one pass (PayloadNear), over the scan rows
+    and the side table's rows of the terms, on either executor."""
+    from ..search.phrase import _plan, _topk
     st = searcher.term_stats(terms)
     if len(st) < len(set(terms)):
-        return local_frame(spark, result_schema())
-    sum_idf = dtype(0.0)
-    for t in terms:
-        df_t = int(st.set_index("term").loc[t, "df"])
-        sum_idf = dtype(sum_idf
-                        + bm25_idf(df_t, searcher.max_doc, dtype=dtype))
-    from ..search.phrase import _bm25_phrase_scorer
-    weight_value, cache = _bm25_phrase_scorer(searcher, sum_idf, dtype)
-    tidx = {t: i for i, t in enumerate(dict.fromkeys(terms))}
-    piv = _positional_piv(searcher, tidx, required_idx=list(range(len(tidx))))
-    paypiv = (spark.read.parquet(payload_path)
-              .filter(F.col("term").isin(list(tidx)))
-              .groupBy("docid")
-              .agg(*[F.first(F.when(F.col("term") == t, F.col("payloads")),
-                             ignorenulls=True).alias(f"pay{i}")
-                     for t, i in tidx.items()]))
-    joined = piv.join(paypiv, "docid", "left")
-    order_idx = [tidx[t] for t in terms]
-    mode = payload_fn
-
-    def score_rows(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            rows = []
-            for i in range(len(pdf)):
-                pls = [np.asarray(pdf[f"p{j}"].iloc[i], dtype=np.int64)
-                       for j in order_idx]
-                wits = _near_witnesses(pls, slop, ordered)
-                if not wits:
-                    continue
-                pays = [pdf[f"pay{j}"].iloc[i] for j in order_idx]
-                vals = []
-                for wit in wits:
-                    for t_i, occ in enumerate(wit):
-                        arr = pays[t_i]
-                        vals.append(float(arr[occ])
-                                    if arr is not None and occ < len(arr)
-                                    else 1.0)
-                if mode == "min":
-                    ps = min(vals)
-                elif mode == "max":
-                    ps = max(vals)
-                else:
-                    ps = sum(vals) / len(vals)
-                rows.append((int(pdf["docid"].iloc[i]),
-                             int(pdf["norm"].iloc[i]), len(wits), ps))
-            if not rows:
-                continue
-            out = pd.DataFrame(rows,
-                               columns=["docid", "norm", "freq", "ps"])
-            tf = out["freq"].to_numpy(dtype)
-            c = cache[out["norm"].to_numpy(np.int64) & 0xFF]
-            span = ((weight_value * tf) / (tf + c)).astype(dtype)
-            yield pd.DataFrame({
-                "docid": out["docid"],
-                "score": (span * out["ps"].to_numpy(dtype)).astype(dtype)})
-
-    scored = joined.mapInPandas(score_rows, schema="docid long, score float")
-    from ..search.engine import topk_with_rank
-    return topk_with_rank(scored, k)
+        return _topk(searcher, None, k)
+    scan = list(dict.fromkeys(terms))
+    tidx = {t: i for i, t in enumerate(scan)}
+    spec = PayloadNear(Near(tuple((tidx[t],) for t in terms), slop, ordered,
+                            strict=True), payload_fn)
+    return _topk(searcher, _plan(searcher, scan, spec, terms, st), k,
+                 side=(payload_path, tidx))

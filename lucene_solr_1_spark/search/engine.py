@@ -206,24 +206,28 @@ def topk_with_rank(scored: DataFrame, k: int) -> DataFrame:
     on the ≤k surviving rows inside one small partition instead of an
     unpartitioned row_number window over the whole plan (which warns and
     moves data to a single partition BEFORE the limit)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     topk = (scored.select("docid", "score")
             .orderBy(F.desc("score"), F.asc("docid")).limit(k))
-    score_t = dict(topk.dtypes)["score"]
+    schema = T.StructType(topk.schema.fields
+                          + [T.StructField("rank", T.LongType())])
+    out_schema = to_arrow_schema(schema)
 
     def add_rank(batches):
-        buf = [pdf for pdf in batches if len(pdf)]
-        pdf = (pd.concat(buf, ignore_index=True) if buf
-               else pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype=score_t.replace(
-                                      "float", "float32") if score_t == "float"
-                                      else "float64")}))
-        pdf = pdf.sort_values(["score", "docid"], ascending=[False, True],
-                              kind="mergesort").reset_index(drop=True)
-        pdf["rank"] = np.arange(1, len(pdf) + 1, dtype=np.int64)
-        yield pdf
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        tbl = pa.Table.from_batches(batches)
+        order = np.lexsort((tbl.column("docid").to_numpy(),
+                            -tbl.column("score").to_numpy()))
+        yield pa.RecordBatch.from_arrays(
+            [tbl.column("docid").take(order).combine_chunks(),
+             tbl.column("score").take(order).combine_chunks(),
+             pa.array(np.arange(1, len(order) + 1, dtype=np.int64))],
+            schema=out_schema)
 
-    return topk.coalesce(1).mapInPandas(
-        add_rank, schema=f"docid long, score {score_t}, rank long")
+    return topk.coalesce(1).mapInArrow(add_rank, schema)
 
 
 def _combine_rows(docid, tidx, score, nclauses: int, k: int, dtype,
@@ -516,6 +520,9 @@ class IndexSearcher:
         self._ts_cache: pd.DataFrame | None = None
         self._excluded: np.ndarray | None = None
         self._excluded_df: DataFrame | None = None
+        # postings view path -> its pyarrow dataset, opened by the first
+        # in-process scan (file listing and footers read once)
+        self._datasets: dict = {}
         # per-term (df, ttf, max_tf) of the unfolded NRT generations, read
         # once: this view's stats stay as fixed as its max_doc/sum_ttf
         self._nrt_stats: pd.DataFrame | None = None
@@ -676,11 +683,13 @@ class IndexSearcher:
         return self._excluded_df
 
     def _weights(self, terms: list[str], dtype=np.float32,
-                 boosts: dict | None = None):
+                 boosts: dict | None = None, stats: pd.DataFrame | None = None):
         """Per-term TermWeights. ``boosts[t]`` multiplies the term's
         weight value (Query.setBoost: weight = boost * idf, so
-        weightValue = boost * idf * (k1+1) — BM25Similarity.java:222)."""
-        st = self.term_stats(terms).set_index("term")
+        weightValue = boost * idf * (k1+1) — BM25Similarity.java:222).
+        ``stats``: the terms' term_stats rows, when the caller has them."""
+        st = (self.term_stats(terms) if stats is None else stats
+              ).set_index("term")
         out = {}
         for i, t in enumerate(terms):
             if t in st.index:
@@ -740,8 +749,10 @@ class IndexSearcher:
         excl = self._excluded_docids()
         out = []
         for path in self._postings_views():
-            for b in ds.dataset(path, format="parquet").to_batches(
-                    columns=cols, filter=flt):
+            if path not in self._datasets:
+                self._datasets[path] = ds.dataset(path, format="parquet")
+            for b in self._datasets[path].to_batches(columns=cols,
+                                                     filter=flt):
                 if not b.num_rows:
                     continue
                 if skip is not None:
@@ -765,24 +776,30 @@ class IndexSearcher:
         docs dropped. ``tidx`` is the term's index in ``terms``.
 
         Under the size rule (_runs_local) the scan runs in the driver
-        (_scan_local) and the DataFrame is its LocalTableScan. Otherwise
-        the term filter (ANDed with the Column ``where``, if given) is
-        pushed into the parquet scan of the term-sorted postings table
-        (min/max row-group pruning = the .tip term index). ``extra``
-        names the per-posting columns to add. ``skip`` gives each
-        postings row the block indices not to decode: an array<int>
-        Column over the row, or a DataFrame(term, first_docid, skip)
-        joined to it (rows it lacks decode whole). Tombstoned
-        docs are anti-joined here, so no query can see them (Lucene's
-        acceptDocs, handed to every postings enum)."""
+        (_scan_local) and the DataFrame is its LocalTableScan; otherwise
+        it is _scan_frame's Spark plan."""
         weights = self._term_weights(terms, dtype, similarity, boosts)
+        if where is None and skip is None and self._runs_local(
+                self._postings_count(weights, "positions" in extra)):
+            return local_frame(self.spark, _scan_schema(dtype, extra),
+                               self._scan_local(weights, dtype, extra))
+        return self._scan_frame(weights, dtype, extra, where, skip)
+
+    def _scan_frame(self, weights: dict, dtype=np.float32, extra: tuple = (),
+                    where=None, skip=None) -> DataFrame:
+        """The postings scan on the Spark executor. The term filter
+        (ANDed with the Column ``where``, if given) is pushed into the
+        parquet scan of the term-sorted postings table (min/max
+        row-group pruning = the .tip term index). ``extra`` names the
+        per-posting columns to add. ``skip`` gives each postings row the
+        block indices not to decode: an array<int> Column over the row,
+        or a DataFrame(term, first_docid, skip) joined to it (rows it
+        lacks decode whole). Tombstoned docs are anti-joined here, so no
+        query can see them (Lucene's acceptDocs, handed to every
+        postings enum)."""
         schema = _scan_schema(dtype, extra)
         if not weights:
             return local_frame(self.spark, schema)
-        if where is None and skip is None and self._runs_local(
-                self._postings_count(weights, "positions" in extra)):
-            return local_frame(self.spark, schema,
-                               self._scan_local(weights, dtype, extra))
         cond = F.col("term").isin(list(weights))
         rows = self._read_postings().filter(
             cond if where is None else cond & where)
@@ -814,26 +831,29 @@ class IndexSearcher:
         clause) for ``terms`` (clause index = position in ``terms``) and
         for each (clause index, terms, slop, boost) of ``phrases``; a
         phrase of clause index -1 and every term of ``neg_terms`` give
-        rows of tidx -1, docids that must not match. Under the size rule
-        (and unless ``spark``) the in-process scans give NumPy columns;
-        otherwise the Spark scans give one DataFrame. Either is
-        _combine's input."""
-        from .phrase import phrase_scores, phrase_table
+        rows of tidx -1, docids that must not match. Each phrase is
+        planned once (its term stats serve the size rule and the
+        kernel). Under the size rule (and unless ``spark``) the
+        in-process scans give NumPy columns; otherwise the Spark scans
+        give one DataFrame. Either is _combine's input."""
+        from .phrase import _phrase_plan, _scores, _table
+        plans = [(ti, _phrase_plan(self, list(pterms), slop=slop,
+                                   dtype=dtype, boost=boost))
+                 for ti, pterms, slop, boost in phrases]
+        plans = [(ti, p) for ti, p in plans if p is not None]
         if not spark and self._runs_local(
                 self._postings_count(list(terms) + list(neg_terms))
-                + sum(self._postings_count(p[1], positions=True)
-                      for p in phrases)):
+                + sum(p.postings for _, p in plans)):
             def cols(tbl, ti=None):
-                return (np.asarray(tbl["docid"]), np.full(len(tbl), ti)
-                        if ti is not None else np.asarray(tbl["tidx"]),
+                docid = np.asarray(tbl["docid"])
+                return (docid, np.asarray(tbl["tidx"]) if ti is None
+                        else np.full(len(docid), ti),
                         np.asarray(tbl["score"]))
             parts = [cols(self._scan_local(self._term_weights(
                          terms, dtype, similarity, boosts), dtype)),
                      cols(self._scan_local(self._weights(list(neg_terms),
                                                          dtype), dtype), -1)]
-            parts += [cols(phrase_table(self, list(pterms), slop=slop,
-                                        dtype=dtype, boost=boost), ti)
-                      for ti, pterms, slop, boost in phrases]
+            parts += [cols(_table(p), ti) for ti, p in plans]
             return dict(zip(("docid", "tidx", "score"),
                             map(np.concatenate, zip(*parts))))
 
@@ -846,9 +866,8 @@ class IndexSearcher:
         if neg_terms:
             rows = rows.unionByName(tagged(self._scored_candidates(
                 list(neg_terms), dtype=dtype), -1))
-        for ti, pterms, slop, boost in phrases:
-            rows = rows.unionByName(tagged(phrase_scores(
-                self, list(pterms), slop=slop, dtype=dtype, boost=boost), ti))
+        for ti, p in plans:
+            rows = rows.unionByName(tagged(_scores(self, p, dtype), ti))
         return rows
 
     def _combine(self, rows, nclauses: int, k: int, dtype=np.float32,

@@ -91,7 +91,7 @@ class _Info:
 def _windowed_freq(plists: list, slop: int) -> int:
     """Sloppy (windowed) phrase freq with DISTINCT token positions.
 
-    The engine's offset-window kernel (search/phrase.py::_phrase_freq)
+    The engine's offset-window kernel (search/phrase.py::near_matches)
     may satisfy two slots of a repeated term with the SAME occurrence;
     Lucene's SloppyPhraseScorer repeat groups forbid that.  For the
     short one-doc position lists here, a small backtracking search

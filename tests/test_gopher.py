@@ -178,10 +178,11 @@ ADVERSARIAL_DOCS = [
 def test_kernel_matches_expr_pipeline(spark):
     """r6: the Arrow-batched gopher_signals_df kernel must equal the JVM
     expression pipeline (gopher_quality ⋈ gopher_ngram_stats) BITWISE on
-    every column, including the Java-whitespace adversarial docs."""
+    every column, including the Java-whitespace adversarial docs and a
+    null text, which both read as the empty document."""
     from lucene_solr_1_spark.datapipe.gopher import gopher_signals_df
 
-    df = spark.createDataFrame(DOCS + ADVERSARIAL_DOCS,
+    df = spark.createDataFrame(DOCS + ADVERSARIAL_DOCS + [(300, None)],
                                "doc_id long, text string")
     expr = {r["doc_id"]: r.asDict()
             for r in gopher_quality(df).join(
@@ -195,3 +196,4 @@ def test_kernel_matches_expr_pipeline(spark):
         for c in cols:
             assert kern[did][c] == expr[did][c], (did, c, kern[did][c],
                                                   expr[did][c])
+    assert kern[300]["n_words"] == 0 and kern[300]["gopher_quality_ok"] == 0

@@ -224,3 +224,23 @@ def test_payload_near_absent_term_schema_is_the_search_schema(spark, built):
     assert got.schema == searcher.search(["nosuchterm"], k=5).schema
     assert "LocalTableScan" in (
         got._jdf.queryExecution().executedPlan().toString())
+
+
+@pytest.mark.parametrize("fn", ["avg", "min", "max"])
+def test_payload_near_executors_bitwise_equal(spark, built, monkeypatch, fn):
+    """The positions kernel with the side table's rows runs in the driver
+    (unbounded budget) and per docid partition on Spark (budget 0):
+    same (docid, float32 score, rank)."""
+    from lucene_solr_1_spark.index.payloads import payload_near_topk
+    _, searcher, ppath = built
+    got = {}
+    for budget in (0, 1 << 62):
+        monkeypatch.setattr(IndexSearcher, "LOCAL_POSTINGS", budget)
+        for ordered in (True, False):
+            got[budget, ordered] = [
+                (r["docid"], np.float32(r["score"]).tobytes(), r["rank"])
+                for r in payload_near_topk(
+                    searcher, ppath, ["rain", "falls"], slop=2,
+                    ordered=ordered, payload_fn=fn, k=20).collect()]
+    for ordered in (True, False):
+        assert got[0, ordered] and got[0, ordered] == got[1 << 62, ordered]

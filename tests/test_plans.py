@@ -150,7 +150,7 @@ def _combine_shape(df):
     return top, _funnels(plan), fed
 
 
-ONE_COMBINE = (["MapInPandas", "Coalesce", "TakeOrderedAndProject"],
+ONE_COMBINE = (["MapInArrow", "Coalesce", "TakeOrderedAndProject"],
                ["TakeOrderedAndProject"],
                [("MapInArrow combine", "TakeOrderedAndProject")])
 
@@ -178,8 +178,16 @@ def test_one_docid_exchange_feeds_the_combine(spark, fielded,
             ["v4", ("PHRASE", ("v5", "v6"), 0)], ["v1"], ["v7"],
             ["title", "body"], mm=1, k=10),
     }
+    # phrase clauses add one positions kernel each (one per field for
+    # edismax), fed by its own docid exchange
+    kernels = {"phrase": 1, "edismax": 2}
     for name, df in plans.items():
-        assert _combine_shape(df) == ONE_COMBINE, name
+        top, funnels, fed = _combine_shape(df)
+        positions = [f for f in fed if f[0] == "MapInArrow positions"]
+        assert (top, funnels) == ONE_COMBINE[:2], name
+        assert [f for f in fed if f not in positions] == ONE_COMBINE[2], name
+        assert positions == [("MapInArrow positions", "Project")] \
+            * kernels.get(name, 0), name
     # the walk flags a funnel injected before the combine
     scan = IndexSearcher._scored_candidates
     monkeypatch.setattr(IndexSearcher, "_scored_candidates",
@@ -188,6 +196,39 @@ def test_one_docid_exchange_feeds_the_combine(spark, fielded,
     top, funnels, fed = _combine_shape(s.search(BooleanQuery(
         should=v[:2], must_not=[v[2]], k=10)))
     assert funnels.count("Exchange") == 2 and fed == ONE_COMBINE[2], funnels
+
+
+def _docid_exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().initialPlan()
+    return sum(n.nodeName() == "Exchange" and n.outputPartitioning()
+               .toString().startswith("hashpartitioning(docid")
+               for n, _ in _walk(plan))
+
+
+def test_one_docid_exchange_feeds_the_positions_kernel(spark, fielded,
+                                                       spark_executor):
+    """Phrase scoring on the Spark executor is the postings scan -> one
+    docid hash exchange -> the positions kernel (map-in-Arrow): no
+    first() pivot aggregate, no pandas map. A boolean query with a
+    phrase clause shuffles on docid twice, once into the positions
+    kernel and once into the combine."""
+    from lucene_solr_1_spark.search.engine import BooleanQuery, PhraseClause
+    from lucene_solr_1_spark.search.phrase import phrase_search
+    s = fielded
+    v = [s.term_key("body", f"v{i}") for i in range(8)]
+    plans = {
+        "phrase_search": (phrase_search(s, [v[3], v[4]], k=10), 1,
+                          [("MapInArrow positions", "TakeOrderedAndProject")]),
+        "bool_phrase": (s.search(BooleanQuery(
+            should=[v[0]], phrases=[PhraseClause((v[3], v[4]))], k=10)), 2,
+            [("MapInArrow combine", "TakeOrderedAndProject"),
+             ("MapInArrow positions", "Project")]),
+    }
+    for name, (df, exchanges, fed) in plans.items():
+        text = _plan(df)
+        assert "first(" not in text and "MapInPandas" not in text, name
+        assert _combine_shape(df)[2] == fed, name
+        assert _docid_exchanges(df) == exchanges, name
 
 
 def test_join_query_broadcasts_small_from_side(spark):

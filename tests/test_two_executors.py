@@ -21,7 +21,10 @@ from pyspark.sql import functions as F
 from lucene_solr_1_spark.index.build import build_index
 from lucene_solr_1_spark.search.engine import (BooleanQuery, IndexSearcher,
                                                PhraseClause, topk_with_rank)
-from lucene_solr_1_spark.search.phrase import phrase_scores, phrase_search
+from lucene_solr_1_spark.search.phrase import (field_masking_span,
+                                               multi_phrase_search,
+                                               phrase_scores, phrase_search,
+                                               span_first, span_not, span_or)
 from lucene_solr_1_spark.streaming.ingest import (StreamingIndexWriter,
                                                   nrt_postings,
                                                   tiered_compact)
@@ -116,6 +119,23 @@ CASES = {
         should=["alpha"], must=["w61"],
         phrases=[PhraseClause(("w60", "w61"), slop=0, occur="SHOULD")],
         k=10)),
+    "repeated_phrase": lambda s, e=_Engine: e.phrase(s, ["alpha", "alpha"],
+                                                     k=10),
+}
+
+# the span family: one positions kernel on both executors
+SPANS = {
+    "span_first": lambda s: span_first(s, "alpha", 3, k=10),
+    "span_or": lambda s: span_or(s, [["w10", "w11"], ["w20", "w22"],
+                                     ["alpha", "zzabsent"]], slop=1, k=10),
+    "span_not": lambda s: span_not(s, "alpha", "beta", pre=0, post=1, k=10),
+    "multi_phrase": lambda s: multi_phrase_search(
+        s, [["w10", "w40"], ["w11", "w41"]], k=10),
+    "multi_phrase_strict": lambda s: multi_phrase_search(
+        s, [["w10"], ["w12", "alpha"]], slop=2, ordered=True, strict=True,
+        k=10),
+    "multi_phrase_unordered": lambda s: multi_phrase_search(
+        s, [["w12"], ["w10", "beta"]], slop=2, ordered=False, k=10),
 }
 
 
@@ -131,6 +151,26 @@ def test_executors_bitwise_equal(spark, view, monkeypatch, case):
     for budget in (0, UNBOUNDED):
         got[budget] = _rows(CASES[case](
             _searcher(spark, view, budget, monkeypatch)))
+    assert got[0] and got[0] == got[UNBOUNDED]
+
+
+@pytest.mark.parametrize("case", list(SPANS))
+def test_span_executors_bitwise_equal(spark, view, monkeypatch, case):
+    got = {}
+    for budget in (0, UNBOUNDED):
+        got[budget] = _rows(SPANS[case](
+            _searcher(spark, view, budget, monkeypatch)))
+    assert got[0] and got[0] == got[UNBOUNDED]
+
+
+def test_field_masking_span_executors_bitwise_equal(spark, fielded,
+                                                    monkeypatch):
+    got = {}
+    for budget in (0, UNBOUNDED):
+        s = _searcher(spark, fielded, budget, monkeypatch)
+        got[budget] = _rows(field_masking_span(
+            s, [("title", "v1"), ("body", "v2")], slop=3, ordered=False,
+            k=10))
     assert got[0] and got[0] == got[UNBOUNDED]
 
 
