@@ -520,9 +520,6 @@ class IndexSearcher:
         self._ts_cache: pd.DataFrame | None = None
         self._excluded: np.ndarray | None = None
         self._excluded_df: DataFrame | None = None
-        # postings view path -> its pyarrow dataset, opened by the first
-        # in-process scan (file listing and footers read once)
-        self._datasets: dict = {}
         # per-term (df, ttf, max_tf) of the unfolded NRT generations, read
         # once: this view's stats stay as fixed as its max_doc/sum_ttf
         self._nrt_stats: pd.DataFrame | None = None
@@ -749,10 +746,8 @@ class IndexSearcher:
         excl = self._excluded_docids()
         out = []
         for path in self._postings_views():
-            if path not in self._datasets:
-                self._datasets[path] = ds.dataset(path, format="parquet")
-            for b in self._datasets[path].to_batches(columns=cols,
-                                                     filter=flt):
+            for b in ds.dataset(path, format="parquet").to_batches(
+                    columns=cols, filter=flt):
                 if not b.num_rows:
                     continue
                 if skip is not None:

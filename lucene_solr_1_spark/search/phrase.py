@@ -25,11 +25,12 @@ generations too), deleted docs already dropped. positional_scores reads
 the scan's flat columns: each term's positions become one sorted int64
 key array doc_row << 32 | position, gathered straight from the
 positions list array's offsets, and the spec runs over all docs at
-once. Exact phrases are a chained sorted-key membership; sloppy, strict
-span-near, unordered, span-not and multi-phrase slot unions are
-vectorized np.searchsorted over the same keys; np.bincount gives the
-per-doc freq, scored like one term. Under the searcher's size rule (Σ ttf
-of the scan terms) the kernel runs once over _scan_local's table;
+once. Exact and sloppy phrases, strict span-near, unordered, span-not
+and multi-phrase slot unions are vectorized np.searchsorted over the
+same keys (an exact phrase is the sloppy window at slop 0); np.bincount
+gives the per-doc freq, scored like one term. Under the searcher's size
+rule (Σ ttf of the scan terms) the kernel runs once over _scan_local's
+table;
 otherwise it runs on each docid-hash partition under mapInArrow, every
 row of a doc in one partition, as combine_frame runs combine_topk.
 """
@@ -57,7 +58,6 @@ def near_matches(keys: list[np.ndarray], slop: int, ordered: bool = True,
     per slot s >= 1, the indices into keys[s] of the occurrences those
     matches use (the span's witnesses).
 
-    * exact phrase (slop 0, ordered, not strict): p_s == p_0 + s;
     * strict (with ordered) is the SpanNearQuery(ordered) contract
       (ref: lucene/core/.../search/spans/NearSpansOrdered.java:49): the
       greedy smallest-next witness p_s > p_(s-1), which minimizes the
@@ -66,7 +66,8 @@ def near_matches(keys: list[np.ndarray], slop: int, ordered: bool = True,
       which tolerates small back-steps: per slot the occurrence nearest
       to the anchor within slop (q = p_s - s when ordered, p_s raw
       when not; the earlier one on a tie), and all of the anchor's picks
-      within one window of width slop."""
+      within one window of width slop; at slop 0 (ordered) that is the
+      exact phrase, p_s == p_0 + s."""
     idx = np.arange(len(keys[0]))
     if any(len(k) == 0 for k in keys):
         return idx[:0], [idx[:0] for _ in keys[1:]]
@@ -74,17 +75,12 @@ def near_matches(keys: list[np.ndarray], slop: int, ordered: bool = True,
     doc = a >> DOC_SHIFT
     prev = lo = hi = a
     picks = []
-    exact = slop == 0 and ordered and not strict
     for s, q in enumerate(keys[1:], start=1):
         if strict and ordered:
             j = np.searchsorted(q, prev + 1)
             pick = np.minimum(j, len(q) - 1)
             ok = (j < len(q)) & (q[pick] >> DOC_SHIFT == doc)
             prev = q[pick]
-        elif exact:
-            j = np.searchsorted(q, a + s)
-            pick = np.minimum(j, len(q) - 1)
-            ok = q[pick] == a + s
         else:
             off = s if ordered else 0
             at = a + off
@@ -297,13 +293,15 @@ def _side_table(searcher, side):
     """A (term, docid, payloads) side table's rows of the terms of
     ``side`` = (path, term -> tidx), as rows (docid, tidx, payloads)."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     path, tidx = side
     tbl = searcher._read_table(path, ["term", "docid", "payloads"],
                                ("term", list(tidx)))
+    # tidx numbers the terms in insertion order
     return pa.table({
         "docid": tbl.column("docid"),
-        "tidx": pa.array([tidx[t] for t in tbl.column("term").to_pylist()],
-                         pa.int32()),
+        "tidx": pc.index_in(tbl.column("term"), value_set=pa.array(
+            list(tidx), tbl.schema.field("term").type)).cast(pa.int32()),
         "payloads": tbl.column("payloads")})
 
 
